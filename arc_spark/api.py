@@ -24,9 +24,15 @@ from pyspark.sql import SparkSession
 import threading
 
 from arc_spark.catalog import MeasurementCatalog
-from arc_spark.governance import Governor, QueryRegistry, RateLimitExceeded
+from arc_spark.governance import (
+    Governor,
+    QueryRegistry,
+    RateLimitExceeded,
+    collect_rows,
+)
 from arc_spark.plans.time_pruning import prune_sql
 from arc_spark.plans.validator import SqlValidationError, extract_tables, validate_read_only
+from arc_spark.serving import encode
 
 
 class AccessDeniedError(Exception):
@@ -234,6 +240,20 @@ def _plan_cond_timerange(cond: str):
     return _combine_time_atoms(atoms) if atoms else None
 
 
+def _spark_collect(fmt: str):
+    """The ``QueryRegistry.run`` collect for one wire format: ``rows``
+    stay ``df.collect()``; every other format encodes the result's Arrow
+    table through the same :func:`serving.encode` the native paths use."""
+    if fmt == "rows":
+        return collect_rows
+
+    def collect(df):
+        table = df.toArrow()
+        return encode(table, fmt), table.num_rows
+
+    return collect
+
+
 class QueryService:
     def __init__(
         self,
@@ -327,6 +347,7 @@ class QueryService:
         limit: int = 1000,
         token: str = "",
         _admitted: bool = False,
+        fmt: str = "rows",
     ):
         """GET /api/v1/query/:measurement shape (reference A13,
         query.go:3923-4130): a validated filter+order+limit over one
@@ -340,7 +361,9 @@ class QueryService:
 
         ``_admitted``: the server's native-scan fallback already charged
         this request's rate-limit slot inside scan_measurement_arrow —
-        one HTTP request must consume exactly one slot."""
+        one HTTP request must consume exactly one slot.
+
+        ``fmt``: the wire shape, as for :meth:`execute`."""
         from pyspark.sql import functions as F
 
         if not _admitted:
@@ -384,6 +407,7 @@ class QueryService:
             sql=val_sql + f" LIMIT {int(limit)}",
             token=token,
             timeout_s=self.governor.timeout_s(token),
+            collect=_spark_collect(fmt),
         )
 
     def scan_measurement_arrow(self, db: str, measurement: str,
@@ -560,53 +584,17 @@ class QueryService:
     def _serve_native_count(self, cols: list, fmt: str):
         """The 1-row result in each wire shape, schema-identical to the
         Spark path (names, types, nullability)."""
-        import datetime as _dt
-
         import pyarrow as pa
 
-        def _naive(v):
-            # Spark collects session-tz(UTC)-naive datetimes
-            if isinstance(v, _dt.datetime) and v.tzinfo is not None:
-                return v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-            return v
-
-        if fmt == "rows":
-            from pyspark.sql import Row
-
-            return [Row(**{name: _naive(v) for name, v, _t, _k in cols})]
-        if fmt == "arrow":
-            from arc_spark.serving import to_arrow_ipc
-
-            fields, arrays = [], []
-            for name, v, t, kind in cols:
-                if pa.types.is_timestamp(t):
-                    # Spark's toArrow carries the session tz
-                    t = pa.timestamp("us", tz="UTC")
-                fields.append(pa.field(name, t,
-                                       nullable=kind != "count"))
-                arrays.append(pa.array([v], t))
-            return to_arrow_ipc(pa.Table.from_arrays(
-                arrays, schema=pa.schema(fields)))
-        # json/msgpack serializers consume DataFrames; a 1-row local
-        # DataFrame (no scan) keeps their header/typing logic
-        # authoritative
-        from pyspark.sql.pandas.types import from_arrow_schema
-
-        schema = from_arrow_schema(pa.schema(
-            [pa.field(name, t if not pa.types.is_timestamp(t)
-                      else pa.timestamp("us"), nullable=True)
-             for name, _, t, _k in cols]))
-        df = self.spark.createDataFrame(
-            [tuple(_naive(v) for _, v, _t, _k in cols)], schema)
-        if fmt == "json":
-            from arc_spark.serving import stream_typed_json
-
-            return list(stream_typed_json(df))
-        if fmt == "msgpack":
-            from arc_spark.serving import to_columnar_msgpack
-
-            return to_columnar_msgpack(df)
-        raise ValueError(f"unknown fmt {fmt!r}")
+        fields, arrays = [], []
+        for name, v, t, kind in cols:
+            if pa.types.is_timestamp(t):
+                # Spark's toArrow carries the session tz
+                t = pa.timestamp("us", tz="UTC")
+            fields.append(pa.field(name, t, nullable=kind != "count"))
+            arrays.append(pa.array([v], t))
+        return encode(pa.Table.from_arrays(arrays, schema=pa.schema(fields)),
+                      fmt)
 
     _TR_GLOBAL_LIMIT_RE = re.compile(r"^'GlobalLimit (\d+)$")
     _TR_LOCAL_LIMIT_RE = re.compile(r"^'LocalLimit (\d+)$")
@@ -650,50 +638,17 @@ class QueryService:
         return key, tr, int(m_gl.group(1))
 
     def _serve_native_table(self, table, fmt: str):
-        """A native-scan pyarrow Table in each wire shape, matching the
-        Spark path's types (naive UTC datetimes for 'rows', session-tz
-        Arrow fields for 'arrow', typed-JSON / columnar-msgpack via the
-        Table-aware serving encoders)."""
-        import pyarrow as pa
-
-        if fmt == "arrow":
-            from arc_spark.serving import to_arrow_ipc
-
-            return to_arrow_ipc(table)
-        if fmt == "msgpack":
-            from arc_spark.serving import to_columnar_msgpack
-
-            return to_columnar_msgpack(table)
-        if fmt == "json":
-            from arc_spark.serving import stream_typed_json
-
-            # LIST, not the raw generator: every fmt="json" consumer
-            # (server.py joins chunks; _serve_native_count) works on the
-            # materialized chunk list — the generator reached json.dumps
-            # in the HTTP route and killed the handler mid-connection
-            # (caught by tests/test_serve_fuzz.py's first run)
-            return list(stream_typed_json(table))
-        if fmt == "rows":
-            from pyspark.sql import Row
-
-            from arc_spark.serving import table_columns_spark_local
-
-            # Spark's collect() returns naive PROCESS-LOCAL datetimes
-            # (fromInternal → fromtimestamp) — one shared chokepoint
-            # applies the same policy here
-            cols = table_columns_spark_local(table)
-            RowT = Row(*table.column_names)
-            return [RowT(*vals) for vals in zip(*cols)]
-        raise ValueError(f"unknown fmt {fmt!r}")
-
-
+        """A native-scan pyarrow Table in each wire shape (the route
+        marker for native scans; :func:`serving.encode` does the work)."""
+        return encode(table, fmt)
 
     def execute(self, sql: str, token: str = "", fmt: str = "rows",
                 db: str | None = None):
         """Run one query request end-to-end.
 
-        fmt: 'rows' (list of Row), 'json' (typed-JSON chunks iterator),
-        'arrow' (IPC bytes), 'msgpack' (columnar bytes).
+        fmt: 'rows' (list of Row), 'json' (list of typed-JSON chunks),
+        'arrow' (IPC bytes), 'msgpack' (columnar bytes) — every path
+        encodes through :func:`serving.encode`.
 
         ``db`` scopes the request to one database (the reference's
         ``x-arc-database`` header, query.go:1484-1495): unqualified table
@@ -754,30 +709,9 @@ class QueryService:
                 self._scope_to_db(db, sql)
             df = prune_sql(self.spark, sql, self.catalog)
         df = self.governor.cap(token, df)
-        timeout_s = self.governor.timeout_s(token)
-        if fmt == "rows":
-            return self.registry.run(df, sql=sql, token=token, timeout_s=timeout_s)
-        if fmt == "json":
-            from arc_spark.serving import stream_typed_json
-
-            return self.registry.run(
-                df, sql=sql, token=token, timeout_s=timeout_s,
-                collect=lambda d: list(stream_typed_json(d)),
-            )
-        if fmt == "arrow":
-            from arc_spark.serving import to_arrow_ipc
-
-            return self.registry.run(
-                df, sql=sql, token=token, timeout_s=timeout_s, collect=to_arrow_ipc
-            )
-        if fmt == "msgpack":
-            from arc_spark.serving import to_columnar_msgpack
-
-            return self.registry.run(
-                df, sql=sql, token=token, timeout_s=timeout_s,
-                collect=to_columnar_msgpack,
-            )
-        raise ValueError(f"unknown fmt {fmt!r}")
+        return self.registry.run(df, sql=sql, token=token,
+                                 timeout_s=self.governor.timeout_s(token),
+                                 collect=_spark_collect(fmt))
 
 
 class IngestService:

@@ -197,6 +197,12 @@ class QueryInfo:
     _cancel: threading.Event = field(default_factory=threading.Event, repr=False)
 
 
+def collect_rows(df: DataFrame) -> tuple[list, int]:
+    """The default :meth:`QueryRegistry.run` collect: Spark ``Row``s."""
+    rows = df.collect()
+    return rows, len(rows)
+
+
 class QueryRegistry:
     """Track in-flight queries; cancel via Spark job-group interruption.
 
@@ -217,6 +223,23 @@ class QueryRegistry:
         self._queries: dict[str, QueryInfo] = {}
         self._history: "deque[QueryInfo]" = deque(maxlen=history_size)
         self._lock = threading.Lock()
+        # monotonic totals over every entry that ever entered the ring
+        # (/metrics counters must not drop when the ring evicts)
+        self._status_totals: dict[str, int] = {}
+        self._seconds_total = 0.0
+
+    def _to_history(self, info: QueryInfo) -> None:
+        """Append a finished entry to the ring and count it; caller holds
+        ``_lock``."""
+        self._history.append(info)
+        self._status_totals[info.status] = (
+            self._status_totals.get(info.status, 0) + 1)
+        self._seconds_total += info.finished_at - info.started_at
+
+    def totals(self) -> tuple[dict[str, int], float]:
+        """(finished queries per status, their summed seconds) since start."""
+        with self._lock:
+            return dict(self._status_totals), self._seconds_total
 
     def list(self) -> list[QueryInfo]:
         """Active queries followed by retained history (oldest first) —
@@ -266,17 +289,21 @@ class QueryRegistry:
                          token=token, started_at=now, status="done",
                          finished_at=now, rows=rows)
         with self._lock:
-            self._history.append(info)
+            self._to_history(info)
 
     def run(
         self,
         df: DataFrame,
         sql: str = "",
         token: str = "",
-        collect=lambda d: d.collect(),
+        collect=collect_rows,
         timeout_s: float | None = None,
     ):
         """Execute under a registered, cancellable job group.
+
+        collect: ``df → (result, row count)``; it runs inside the
+        duration-cap window, so a wire encode counts against the cap, and
+        the history records the result's rows whatever its format.
 
         timeout_s: max duration (governance A37) — a watchdog timer cancels
         the job group when exceeded, interrupting all of the query's stages
@@ -308,7 +335,7 @@ class QueryRegistry:
             watchdog.daemon = True
             watchdog.start()
         try:
-            result = collect(df)
+            result, n_rows = collect(df)
             if info.status == "timeout":
                 # the cancel raced the job's completion — the result is
                 # here, but the query exceeded its duration cap, so the
@@ -319,7 +346,7 @@ class QueryRegistry:
                 )
             if info.status == "running":
                 info.status = "done"
-                info.rows = len(result) if hasattr(result, "__len__") else None
+                info.rows = n_rows
             return result
         except QueryTimeout:
             raise
@@ -340,7 +367,7 @@ class QueryRegistry:
             # finished → ring buffer; the active map holds only live work
             with self._lock:
                 self._queries.pop(qid, None)
-                self._history.append(info)
+                self._to_history(info)
 
     def prune(self, keep_s: float = 3600.0) -> None:
         """Age-prune the history ring (capacity already bounds it; this

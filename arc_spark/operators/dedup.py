@@ -590,10 +590,11 @@ def _numpy_band_buckets(mins, bands: int):
     """LSH band buckets from a signature matrix: ``buckets[bi] =``
     chained XXH64.hashLong (seed 42) over the band's ``r`` consecutive
     signature slots — the vectorized twin of :func:`_band_rows`'
-    ``xxhash64(slot, …, slot)`` Catalyst expression, shared by the
-    shingle kernel (:func:`_minhash_numpy_gen`) and the stored-signature
-    kernel (:func:`_bucket_rows_from_sigs`) so bit-identity across every
-    bucket producer is by construction, not by parallel maintenance.
+    ``xxhash64(slot, …, slot)`` Catalyst expression, called by the
+    shingle kernel (:func:`_minhash_numpy_gen`) when it emits band
+    buckets for :func:`_bucket_rows_from_shingled`; bit-identity with
+    :func:`_band_rows` is fuzz-locked in ``tests/test_properties.py``
+    (``test_kernel_buckets_equal_expr_band_rows``).
 
     ``mins``: (num_hashes, n) uint64 signature matrix (column-per-doc).
     Returns a (bands, n) uint64 bucket matrix. Caller guarantees a

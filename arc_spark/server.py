@@ -215,8 +215,6 @@ class ArcServer:
         outer = self
 
         class Handler(BaseHTTPRequestHandler):
-            daemon_threads = True
-
             def log_message(self, *a):  # quiet test runs
                 pass
 
@@ -727,13 +725,7 @@ class ArcServer:
                             "# TYPE arc_ingest_flushes_total counter",
                             f"arc_ingest_flushes_total {st['flushes']}",
                         ]
-                    infos = outer.query.registry.list()
-                    by_status: dict[str, int] = {}
-                    total_secs = 0.0
-                    for i in infos:
-                        by_status[i.status] = by_status.get(i.status, 0) + 1
-                        if i.finished_at is not None:
-                            total_secs += i.finished_at - i.started_at
+                    by_status, total_secs = outer.query.registry.totals()
                     lines.append("# TYPE arc_queries_total counter")
                     for status, n in sorted(by_status.items()):
                         lines.append(f'arc_queries_total{{status="{status}"}} {n}')
@@ -1276,45 +1268,31 @@ class ArcServer:
                         # type) already consumed the rate-limit slot —
                         # the Spark path below must not charge it again
                         fell_back = table is None
+                    # this route's JSON is {"rows": [row dicts]}, built
+                    # from the same Row shape on both paths
+                    wire = "rows" if fmt == "json" else fmt
                     if table is not None:
-                        from arc_spark.serving import (
-                            to_arrow_ipc,
-                            to_columnar_msgpack,
-                        )
+                        from arc_spark.serving import encode
 
-                        if fmt == "arrow":
-                            return self._reply(
-                                200, to_arrow_ipc(table),
-                                ctype="application/vnd.apache.arrow.stream")
-                        if fmt == "msgpack":
-                            return self._reply(
-                                200, to_columnar_msgpack(table),
-                                ctype="application/msgpack")
-                        # JSON rows: naive process-local wall time, tz
-                        # dropped — identical to the Spark path's
-                        # Row.asDict() on ANY host tz (shared chokepoint
-                        # with execute()'s native rows path)
-                        from arc_spark.serving import (
-                            table_columns_spark_local,
-                        )
-
-                        cols = table_columns_spark_local(table)
-                        names = table.column_names
+                        out = encode(table, wire)
+                    else:
+                        ok, out = self._run(
+                            lambda: outer.query.query_measurement(
+                                q.get("db", "default"),
+                                measurement,
+                                where=q.get("where"),
+                                order_by=q.get("order_by"),
+                                limit=int(q.get("limit", "1000")),
+                                token=token,
+                                _admitted=fell_back,
+                                fmt=wire,
+                            ))
+                        if not ok:
+                            return
+                    if fmt == "json":
                         return self._json(
-                            200, {"rows": [dict(zip(names, vals))
-                                           for vals in zip(*cols)]})
-                    ok, rows = self._run(lambda: outer.query.query_measurement(
-                        q.get("db", "default"),
-                        measurement,
-                        where=q.get("where"),
-                        order_by=q.get("order_by"),
-                        limit=int(q.get("limit", "1000")),
-                        token=token,
-                        _admitted=fell_back,
-                    ))
-                    if ok:
-                        self._json(200, {"rows": [r.asDict() for r in rows]})
-                    return
+                            200, {"rows": [r.asDict() for r in out]})
+                    return self._reply(200, out, _FMT_CONTENT_TYPES[fmt])
                 self._json(404, {"error": "not found"})
 
             def do_POST(self):
@@ -1845,7 +1823,6 @@ class ArcServer:
                                     min_files=int(req.get("min_files", 12)),
                                     min_age_seconds=float(
                                         req.get("min_age_seconds", 86400)),
-                                    catalog=outer.query.catalog,
                                 )}
                             else:
                                 out = {"results": compact_measurement(
@@ -1855,8 +1832,10 @@ class ArcServer:
                                         req.get("min_age_seconds", 3600)),
                                     max_files_per_batch=int(
                                         req.get("max_files_per_batch", 30)),
-                                    catalog=outer.query.catalog,
                                 )}
+                        # the one view rebuild per request, for every
+                        # operation (the compaction passes get no catalog,
+                        # or they would rebuild the views a second time)
                         outer.query.catalog.invalidate(db, meas)
                         return out
 

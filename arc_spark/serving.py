@@ -1,9 +1,11 @@
-"""Result serving: the reference's three wire formats from a DataFrame.
+"""Result serving: the reference's three wire formats from an Arrow table.
 
 Reference: Arrow IPC streaming (A31 query_arrow.go), typed JSON streaming
-(A32 query_json_writer.go), columnar MessagePack (A33). All three stream
-with bounded memory — no full `collect()` — matching the reference's
-"stream rows, 1000-row flush" behavior (SURVEY §4.3).
+(A32 query_json_writer.go), columnar MessagePack (A33). Every encoder
+takes a ``pa.Table`` — the native scans' tables and the Spark path's
+``DataFrame.toArrow()`` alike — and :func:`encode` is the one format
+dispatch every query route calls, so both paths reach the wire through
+the same code (SURVEY §4.3: "same shape over Arrow batches").
 """
 
 from __future__ import annotations
@@ -13,29 +15,39 @@ from collections.abc import Iterator
 
 import pyarrow as pa
 
-from arc_spark.sources.msgpack_codec import packb
+def encode(table: pa.Table, fmt: str):
+    """``table`` in one wire shape: ``rows`` (list of Spark ``Row``, with
+    the same naive local datetimes Spark's ``collect()`` returns),
+    ``json`` (list of typed-JSON chunks), ``arrow`` (IPC stream bytes)
+    or ``msgpack`` (columnar bytes)."""
+    if fmt == "arrow":
+        return to_arrow_ipc(table)
+    if fmt == "msgpack":
+        return to_columnar_msgpack(table)
+    if fmt == "json":
+        # a LIST, not the generator: every json consumer joins the chunks
+        return list(stream_typed_json(table))
+    if fmt == "rows":
+        # how Spark's own collect() builds rows (list-valued __fields__)
+        from pyspark.sql.types import _create_row
+
+        names = table.column_names
+        return [_create_row(names, vals)
+                for vals in zip(*table_columns_spark_local(table))]
+    raise ValueError(f"unknown fmt {fmt!r}")
 
 
-def _arrow_batches(df, max_rows_per_batch: int = 10_000) -> Iterator[pa.RecordBatch]:
-    """Arrow record batches from a DataFrame OR a pyarrow Table (the
-    native fast-scan path hands tables straight in), re-chunked to ≤N
-    rows (the reference re-chunks DuckDB output to 10k-row IPC batches)."""
-    table = df if isinstance(df, pa.Table) else df.toArrow()
-    for batch in table.to_batches(max_chunksize=max_rows_per_batch):
-        yield batch
-
-
-def to_arrow_ipc(df, max_rows_per_batch: int = 65_536) -> bytes:
+def to_arrow_ipc(table: pa.Table, max_rows_per_batch: int = 65_536) -> bytes:
     """Arrow IPC stream bytes (the throughput-leader format — 9.49M rows/s
-    in the reference's benchmark, BASELINE.md). Accepts a DataFrame or a
-    pyarrow Table (catalog.scan_arrow's native path).
+    in the reference's benchmark, BASELINE.md). An empty table still
+    yields a valid schema-only stream with the table's own schema.
 
     64 Ki rows per batch (matching the session's
     ``arrow.maxRecordsPerBatch``): re-batching a 100k-row native scan at
     10k rows cost ~2 ms of extra slice/flush overhead per request —
     measured 5.6 → 3.6 ms for the encode at 64 Ki.
 
-    Native tables take a PRESIZED single-buffer encode:
+    The encode is PRESIZED into a single buffer:
     ``BufferOutputStream`` reallocates as it grows, which measured 2.8 ms
     for a 5.4 MB / 100k-row result vs 0.5 ms into a buffer preallocated
     from ``Table.get_total_buffer_size()`` (IPC bodies are the same
@@ -43,21 +55,7 @@ def to_arrow_ipc(df, max_rows_per_batch: int = 65_536) -> bytes:
     the estimate only over-allocates). An estimate shortfall raises
     OSError("Write out of bounds") and falls back to the growing path —
     correctness never depends on the estimate."""
-    if isinstance(df, pa.Table):
-        return _table_ipc_presized(df, max_rows_per_batch)
-    sink = pa.BufferOutputStream()
-    writer = None
-    for batch in _arrow_batches(df, max_rows_per_batch):
-        if writer is None:
-            writer = pa.ipc.new_stream(sink, batch.schema)
-        writer.write_batch(batch)
-    if writer is None:  # empty result: still emit a valid schema-only stream
-        # Arrow-native schema (a pandas round-trip here loses timestamp tz)
-        schema = (df.schema if isinstance(df, pa.Table)
-                  else df.limit(0).toArrow().schema)
-        writer = pa.ipc.new_stream(sink, schema)
-    writer.close()
-    return sink.getvalue().to_pybytes()
+    return _table_ipc_presized(table, max_rows_per_batch)
 
 
 def _ipc_size_estimate(table: pa.Table, n_batches: int) -> int:
@@ -96,20 +94,6 @@ def _table_ipc_presized(table: pa.Table,
     return buf[:n].to_pybytes()
 
 
-_TYPE_MAP = {
-    "bool": "bool",
-    "timestamp": "timestamp",
-    "timestamp_ntz": "timestamp",
-    "date": "timestamp",
-    "tinyint": "int",
-    "smallint": "int",
-    "int": "int",
-    "bigint": "int",
-    "float": "float",
-    "double": "float",
-}
-
-
 def table_columns_spark_local(table: "pa.Table") -> list[list]:
     """Table → per-column Python lists with tz-aware timestamp columns
     converted to naive datetimes in the PROCESS's local timezone —
@@ -143,32 +127,24 @@ def table_columns_spark_local(table: "pa.Table") -> list[list]:
     return cols
 
 
-def column_types(df) -> list[dict]:
+def column_types(table: pa.Table) -> list[dict]:
     """{name, type} per column with the reference's 5-type mapping
     (query_json_writer.go:17-80 mapColumnType; decimals → float, everything
-    else → string). Accepts a DataFrame or a pyarrow Table (native
-    serving paths) — identical mapping either way."""
-    if isinstance(df, pa.Table):
-        out = []
-        for f in df.schema:
-            t = f.type
-            if pa.types.is_boolean(t):
-                m = "bool"
-            elif pa.types.is_timestamp(t) or pa.types.is_date(t):
-                m = "timestamp"
-            elif pa.types.is_integer(t):
-                m = "int"
-            elif pa.types.is_floating(t) or pa.types.is_decimal(t):
-                m = "float"
-            else:
-                m = "string"
-            out.append({"name": f.name, "type": m})
-        return out
+    else → string)."""
     out = []
-    for f in df.schema.fields:
-        t = f.dataType.simpleString()
-        mapped = _TYPE_MAP.get(t, "float" if t.startswith("decimal") else "string")
-        out.append({"name": f.name, "type": mapped})
+    for f in table.schema:
+        t = f.type
+        if pa.types.is_boolean(t):
+            m = "bool"
+        elif pa.types.is_timestamp(t) or pa.types.is_date(t):
+            m = "timestamp"
+        elif pa.types.is_integer(t):
+            m = "int"
+        elif pa.types.is_floating(t) or pa.types.is_decimal(t):
+            m = "float"
+        else:
+            m = "string"
+        out.append({"name": f.name, "type": m})
     return out
 
 
@@ -445,28 +421,20 @@ def _json_enc_pool():
     return _JSON_ENC_POOL
 
 
-def stream_typed_json(df, flush_rows: int = 1000) -> Iterator[str]:
+def stream_typed_json(table: pa.Table,
+                      flush_rows: int = 1000) -> Iterator[str]:
     """Typed JSON chunks: header with column metadata, then row-array chunks
-    (`data: [[...], ...]`) of ≤ ``flush_rows`` rows each.
+    (`data: [[...], ...]`) of ≤ ``flush_rows`` rows each. Memory is
+    bounded by the governed result size (the query path caps rows before
+    serving); the chunked wire shape is the reference's.
 
-    Rows come off Arrow batches, not ``toLocalIterator`` — the per-row
-    py4j round trip was ~10× slower than the whole Arrow collect. Like
-    the other two wire formats, memory is bounded by the governed result
-    size (the query path caps rows before serving); the chunked wire
-    shape is unchanged.
-
-    Both input kinds take the VECTORIZED column-wise encode
-    (:func:`_typed_json_chunks_vectorized`) — DataFrames already
-    materialized a full Arrow table here (``toArrow``), so routing that
-    table through the same encoder speeds every SQL JSON response, not
-    just the native scans: Arrow kernels for every column whose values
-    serialize identically to ``json.dumps``, per-value tokens only for
-    columns that can't (escape-needing strings, NaN, exotic types) —
-    parsed-value equivalence against the per-row ``json.dumps``
-    algorithm is property-tested."""
-    cols = column_types(df)
-    yield json.dumps({"columns": cols}) + "\n"
-    table = df if isinstance(df, pa.Table) else df.toArrow()
+    The encode is VECTORIZED column-wise
+    (:func:`_typed_json_chunks_vectorized`): Arrow kernels for every
+    column whose values serialize identically to ``json.dumps``,
+    per-value tokens only for columns that can't (escape-needing
+    strings, NaN, exotic types) — parsed-value equivalence against the
+    per-row ``json.dumps`` algorithm is property-tested."""
+    yield json.dumps({"columns": column_types(table)}) + "\n"
     n = table.num_rows
     if n < _JSON_PAR_MIN_ROWS:
         yield from _typed_json_chunks_vectorized(table, flush_rows)
@@ -496,7 +464,8 @@ def stream_typed_json(df, flush_rows: int = 1000) -> Iterator[str]:
         yield from fut.result()
 
 
-def to_columnar_msgpack(df, max_rows_per_batch: int | None = None) -> bytes:
+def to_columnar_msgpack(table: pa.Table,
+                        max_rows_per_batch: int = 65_536) -> bytes:
     """Columnar MessagePack: one list per column (one type-switch per column,
     not per row — the reference's A33 design point).
 
@@ -507,17 +476,14 @@ def to_columnar_msgpack(df, max_rows_per_batch: int | None = None) -> bytes:
     pay the per-value packer. Byte layout differs from the naive
     ``packb`` only in numeric width choices — same decoded values.
 
-    Default framing: 10k rows per frame on the DataFrame path (the
-    reference's streaming flush size), 64 Ki on native pa.Table inputs
-    (matching the IPC batch choice — fewer per-frame vectorizer calls,
+    64 Ki rows per frame, matching the IPC batch choice (fewer
+    per-frame vectorizer calls than the reference's 10k streaming flush:
     measured 16.2 → 12.7 ms on a 100k-row serve; consumers concat
     frames, so framing is not part of the value contract)."""
     from arc_spark.sources.msgpack_codec import _pack, pack_array_vectorized
 
-    if max_rows_per_batch is None:
-        max_rows_per_batch = 65_536 if isinstance(df, pa.Table) else 10_000
-    names = (df.column_names if isinstance(df, pa.Table) else df.columns)
-    batches = list(_arrow_batches(df, max_rows_per_batch))
+    names = table.column_names
+    batches = table.to_batches(max_chunksize=max_rows_per_batch)
     out = bytearray()
     out.append(0x82)  # 2-key map
     _pack("frames", out)

@@ -394,7 +394,8 @@ def main() -> None:
     #     measurement (arc's 15 ms regime is a compacted long-lived server).
     pass_lanes: list[tuple[str, object]] = (
         [(name, _q_thunk(name)) for name in BENCH_QUERIES]
-        + [(lane, (lambda e=enc: len(e(ev)))) for lane, enc in serve_lanes]
+        + [(lane, (lambda e=enc: len(e(ev.toArrow()))))
+           for lane, enc in serve_lanes]
         + [
             ("serve_arrow_fastscan",
              lambda: len(to_arrow_ipc(ev_cat.scan_arrow("bench", "events")))),

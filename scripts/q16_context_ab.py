@@ -49,8 +49,8 @@ def main() -> None:
             QUERIES[name](spark, sf_dir).count()
         # the serve lanes' driver-side collects (bench runs these in the
         # same pass loop as q16)
-        to_arrow_ipc(ev)
-        to_columnar_msgpack(ev)
+        to_arrow_ipc(ev.toArrow())
+        to_columnar_msgpack(ev.toArrow())
 
     # warm both shapes once
     run_q16()

@@ -170,7 +170,7 @@ def test_arrow_ipc_roundtrip(spark):
     import pyarrow as pa
 
     df = _result_df(spark)
-    blob = to_arrow_ipc(df)
+    blob = to_arrow_ipc(df.toArrow())
     table = pa.ipc.open_stream(blob).read_all()
     assert table.num_rows == 2
     assert table.column("name").to_pylist() == ["a", "b"]
@@ -237,7 +237,7 @@ def test_arrow_ipc_presized_overflow_falls_back(monkeypatch):
 
 def test_typed_json_stream(spark):
     df = _result_df(spark)
-    chunks = list(stream_typed_json(df, flush_rows=1))
+    chunks = list(stream_typed_json(df.toArrow(), flush_rows=1))
     header = json.loads(chunks[0])
     assert {c["name"]: c["type"] for c in header["columns"]} == {
         "id": "int", "name": "string", "v": "float", "ts": "timestamp",
@@ -248,7 +248,7 @@ def test_typed_json_stream(spark):
 
 def test_columnar_msgpack(spark):
     df = _result_df(spark)
-    obj = unpackb(to_columnar_msgpack(df))
+    obj = unpackb(to_columnar_msgpack(df.toArrow()))
     assert obj["column_order"] == ["id", "name", "v", "ts"]
     # result may stream as several frames; concatenate column-wise
     ids = [v for fr in obj["frames"] for v in fr["columns"]["id"]]
