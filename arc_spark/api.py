@@ -290,10 +290,13 @@ class QueryService:
                 if name not in allowed and ref[-1] not in allowed:
                     raise AccessDeniedError(f"token lacks access to {name}")
         # hierarchical org/team/role check (reference checkQueryRBAC):
-        # every table ref needs `permission` on its (database, measurement).
-        # Unqualified refs resolve via the catalog's view bindings, then
-        # the request-scoped db (the x-arc-database override the reference
-        # applies to close the header-bypass), then "default".
+        # every table ref needs `permission` on the (database, measurement)
+        # it reads — resolved by _resolve_ref, the resolver the native
+        # routes and the Spark route's view binding use, so the check
+        # can never name a different table than the one served. A ref
+        # it cannot resolve is checked against its qualifier, else the
+        # request-scoped db (the x-arc-database override the reference
+        # applies to close the header-bypass), else "default".
         if self.rbac is None or not self.rbac.enabled:
             return
         info = self.token_info_fn(token) if self.token_info_fn else None
@@ -305,11 +308,9 @@ class QueryService:
             return
         reqs = []
         for ref in refs:
-            if len(ref) >= 2:
-                pair = (ref[0], ref[-1])
-            else:
-                pair = (self.catalog.view_binding(ref[0])
-                        or (db or "default", ref[0]))
+            pair = self._resolve_ref(ref, db) or (
+                (ref[0], ref[-1]) if len(ref) >= 2
+                else (db or "default", ref[0]))
             reqs.append((info, pair[0], pair[1], permission))
         for req, res in zip(reqs, self.rbac.check_permissions_batch(reqs)):
             if not res["allowed"]:
@@ -320,20 +321,44 @@ class QueryService:
     def register_measurement(self, db: str, measurement: str, view: str | None = None) -> str:
         return self.catalog.register(db, measurement, view)
 
+    def _resolve_ref(self, ref, db: str | None) -> tuple[str, str] | None:
+        """The (db, measurement) a parsed table ref reads — the one
+        resolver behind RBAC, the native routes and the Spark route's
+        view binding (:meth:`_scope_to_db`).
+
+        Scoped to ``db`` (x-arc-database): a one-part name that is a
+        measurement of ``db`` resolves to it straight from storage — no
+        view needed; any other one-part name reads the catalog view of
+        that name, if any; multi-part refs resolve to None (the Spark
+        route rejects them). Unscoped: a one-part name resolves only
+        through the catalog view of that name, and ``x.y`` to
+        measurement ``y`` of database ``x`` (or to the view ``y`` when
+        it reads a measurement of ``x``)."""
+        if len(ref) == 1:
+            if db is not None and ref[0] in self.catalog.measurements(db):
+                return (db, ref[0])
+            return self.catalog.view_binding(ref[0])
+        if len(ref) == 2 and db is None:
+            if ref[1] in self.catalog.measurements(ref[0]):
+                return (ref[0], ref[1])
+            key = self.catalog.view_binding(ref[1])
+            return key if key is not None and key[0] == ref[0] else None
+        return None
+
     def _scope_to_db(self, db: str, sql: str) -> None:
         """Header-database scoping (reference x-arc-database): reject
-        multi-part table refs, and bind each unqualified ref that names a
-        measurement of ``db`` to that measurement (bare-name view).
-        Runs under ``_plan_lock`` so the view binding is not observable by
-        a concurrently-scoped request for a different database."""
-        measurements = set(self.catalog.measurements(db))
+        multi-part table refs, and bind each unqualified ref that
+        :meth:`_resolve_ref` resolves to a measurement of ``db`` to that
+        measurement (bare-name view). Runs under ``_plan_lock`` so the
+        view binding is not observable by a concurrently-scoped request
+        for a different database."""
         for ref in extract_tables(self.spark, sql):
             if len(ref) >= 2:
                 raise SqlValidationError(
                     "cross-database queries (db.table) not allowed when "
                     "the request is scoped to a database"
                 )
-            if ref[0] in measurements:
+            if self._resolve_ref(ref, db) == (db, ref[0]):
                 self.catalog.register(db, ref[0], view=ref[0])
 
     _IDENT_RE = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
@@ -485,21 +510,16 @@ class QueryService:
 
     def _resolve_relation(self, rel_text: str,
                           db: str | None) -> tuple[str, str] | None:
-        """A plan relation token list → (db, measurement), honoring view
-        bindings and request db-scoping; None when unresolvable (or
-        cross-db under a scoped request — the Spark path must surface
-        the SAME _scope_to_db error, never a native answer)."""
-        parts = [p.strip() for p in rel_text.split(",")]
-        if len(parts) == 2:
-            if db is not None:
-                return None
-            key = self.catalog.measurement_for_view(parts[1], db=parts[0])
-            if key is None and parts[1] in self.catalog.measurements(parts[0]):
-                key = (parts[0], parts[1])
-            return key
-        if len(parts) == 1:
-            return self.catalog.measurement_for_view(parts[0], db=db)
-        return None
+        """A plan relation token list → (db, measurement) through
+        :meth:`_resolve_ref`; None when unresolvable, or when a scoped
+        request's ref reads another database (a qualified ref — the
+        Spark path must surface the SAME _scope_to_db error — or a view
+        of another database, which only the Spark route serves)."""
+        key = self._resolve_ref([p.strip() for p in rel_text.split(",")],
+                                db)
+        if key is None or (db is not None and key[0] != db):
+            return None
+        return key
 
     def _plan_lines(self, sql: str) -> list[str] | None:
         """Parsed-plan treeString lines (through the process-wide parse

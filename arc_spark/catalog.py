@@ -301,6 +301,28 @@ def _hive_parts(rel_path: str) -> "list[tuple[str, object]] | None":
     return out
 
 
+#: session confs that change how Spark types a parquet footer or a hive
+#: value — part of every schema-memo key, so flipping one re-infers
+_SCHEMA_CONFS = ("spark.sql.parquet.inferTimestampNTZ.enabled",
+                 "spark.sql.legacy.parquet.nanosAsLong",
+                 "spark.sql.sources.partitionColumnTypeInference.enabled")
+
+
+def _footer_fingerprint(md) -> bytes:
+    """Digest of what Spark's parquet schema inference reads from one
+    footer: the parquet message type (names, physical and logical types,
+    repetition, field ids) and the row metadata Spark's own writers
+    leave. Equal digests → Spark infers equal schemas."""
+    import hashlib
+
+    # the first line of the text is the schema object's repr
+    text = str(md.schema).partition("\n")[2]
+    meta = (md.metadata or {}).get(
+        b"org.apache.spark.sql.parquet.row.metadata", b"")
+    return hashlib.blake2b(text.encode() + b"\0" + meta,
+                           digest_size=16).digest()
+
+
 def _read_small_files_cached(bk, root: str, files: "list[str]",
                              limit: int | None, time_range, columns):
     """Read a pruned list of SMALL local parquet files through the
@@ -526,7 +548,13 @@ class MeasurementCatalog:
         self.root = root
         self.cold_root = cold_root
         self.daily_root = daily_root
-        self._views: dict[tuple[str, str], set[str]] = {}
+        #: Spark temp-view name → (the (db, measurement) it reads, the
+        #: committed-snapshot state it was built from). One owner per
+        #: name: Spark has one temp view per name, so a second binding
+        #: replaces the first. The state lets register() skip the
+        #: rebuild when nothing changed (the serving hot path registers
+        #: per REQUEST; re-reading a 720-file listing cost ~500 ms)
+        self._views: dict[str, tuple[tuple[str, str], tuple | None]] = {}
         #: bumped whenever the view universe changes (register/invalidate);
         #: consumers keying caches on (sql, epoch) — QueryService's pruned-
         #: plan cache — drop stale plans without tracking individual views
@@ -535,13 +563,13 @@ class MeasurementCatalog:
         self._count_cache: dict[tuple[str, str], tuple[int, int]] = {}
         #: epoch-keyed footer min/max cache (native MIN/MAX path)
         self._stats_cache: dict[tuple[str, str, str], tuple] = {}
-        #: immutable per-file row counts (files never mutate in place)
-        self._file_rows: dict[str, int] = {}
-        #: committed-snapshot state each live view was registered from —
-        #: lets register() skip the footer-merge re-registration when
-        #: nothing changed (the serving hot path registers per REQUEST;
-        #: re-reading a 720-file listing cost ~500 ms per call)
-        self._view_states: dict[tuple[str, str], tuple] = {}
+        #: immutable per-file (row count, footer schema fingerprint) —
+        #: files never mutate in place
+        self._file_meta: dict[str, tuple[int, bytes]] = {}
+        #: Spark's inferred schema per footer-schema shape
+        #: (:meth:`_schema_key`), handed back to the reader so a view
+        #: rebuild skips the schema-inference job
+        self._schema_memo: dict[tuple, object] = {}
 
     # -- namespace listing (reference A12) --------------------------------
     def databases(self) -> list[str]:
@@ -598,15 +626,46 @@ class MeasurementCatalog:
                 # per-FILE counts are immutable (parquet files never
                 # mutate in place), so an epoch bump (any flush) costs
                 # O(new files) footer reads, not O(all files)
-                n = self._file_rows.get(f)
-                if n is None:
-                    n = bk.parquet_metadata(f).num_rows
-                    if len(self._file_rows) > 1_000_000:
-                        self._file_rows.clear()  # ~100MB bound
-                    self._file_rows[f] = n
-                total += n
+                total += self._footer(bk, f)[0]
         self._count_cache[key] = (self.epoch, total)
         return total
+
+    def _footer(self, bk, path: str) -> tuple[int, bytes]:
+        """(row count, schema fingerprint) of one committed file, read
+        from its footer once."""
+        hit = self._file_meta.get(path)
+        if hit is None:
+            md = bk.parquet_metadata(path)
+            hit = (md.num_rows, _footer_fingerprint(md))
+            if len(self._file_meta) > 1_000_000:
+                self._file_meta.clear()  # ~150MB bound
+            self._file_meta[path] = hit
+        return hit
+
+    def _schema_key(self, bk, root: str, files: list[str],
+                    merge_schema: bool) -> tuple | None:
+        """Schema-memo key for one tier's committed file list, or None
+        when Spark must infer: the footers differ (an added field, an
+        evolved type), or a directory between the tier root and a file
+        is not a hive ``key=<canonical int32>`` (Spark types those from
+        their values, which the key does not hold)."""
+        prefix = root.rstrip("/") + "/"
+        fps, hive = set(), set()
+        for f in files:
+            rel = f[len(prefix):]
+            parts = _hive_parts(rel) if f.startswith(prefix) else None
+            if (parts is None or len(parts) != rel.count("/")
+                    or not all(isinstance(v, int) for _, v in parts)):
+                return None
+            hive.add(tuple(k for k, _ in parts))
+            fps.add(self._footer(bk, f)[1])
+            if len(fps) > 1 or len(hive) > 1:
+                return None
+        if not fps:
+            return None
+        conf = self.spark.conf
+        return (fps.pop(), hive.pop(), merge_schema,
+                *(conf.get(k, None) for k in _SCHEMA_CONFS))
 
     def column_stats(self, db: str, measurement: str,
                      col: str) -> tuple | None:
@@ -681,16 +740,6 @@ class MeasurementCatalog:
         self._stats_cache[key] = (self.epoch, out)
         return out
 
-    def measurement_for_view(self, name: str,
-                             db: str | None = None) -> tuple[str, str] | None:
-        """Reverse view lookup: the unique (db, measurement) whose
-        registered view is ``name`` (scoped to ``db`` when given).
-        Returns None when unknown OR ambiguous — callers fall back to
-        the Spark path, never guess."""
-        matches = [key for key, views in self._views.items()
-                   if name in views and (db is None or key[0] == db)]
-        return matches[0] if len(matches) == 1 else None
-
     def table(self, db: str, measurement: str, merge_schema: bool = True) -> DataFrame:
         """DataFrame over every tier of a measurement.
 
@@ -704,6 +753,10 @@ class MeasurementCatalog:
         file list still carries ``basePath``, so hive partition columns
         and Catalyst partition pruning behave exactly as a directory scan.
         Unmanaged trees keep the glob path.
+
+        A managed tier whose files share one footer schema reuses the
+        schema Spark inferred for that shape before (:meth:`_schema_key`),
+        so only the first read of each shape runs the inference job.
         """
         from arc_spark import snapshots
 
@@ -714,6 +767,7 @@ class MeasurementCatalog:
         for p in self.paths(db, measurement):
             bk = backend_for(p)
             files = snapshots.data_files(p, bk=bk)
+            key = None
             if files is None:
                 # unmanaged: directory glob; a tier emptied by compaction/
                 # tiering (dir skeleton, no files) cannot be read — skip
@@ -724,10 +778,19 @@ class MeasurementCatalog:
                 continue  # managed but empty snapshot
             else:
                 sources = [bk.spark_url(f) for f in files]
+                key = self._schema_key(bk, p, files, merge_schema)
             reader = self.spark.read.option("basePath", bk.spark_url(p))
             if merge_schema:
                 reader = reader.option("mergeSchema", "true")
-            tiers.append(reader.parquet(*sources))
+            schema = self._schema_memo.get(key) if key is not None else None
+            if schema is not None:
+                reader = reader.schema(schema)
+            df = reader.parquet(*sources)
+            if key is not None and schema is None:
+                if len(self._schema_memo) >= 256:
+                    self._schema_memo.clear()
+                self._schema_memo[key] = df.schema
+            tiers.append(df)
         if not tiers:
             return self.spark.createDataFrame([], "time timestamp")
         df = tiers[0]
@@ -928,7 +991,15 @@ class MeasurementCatalog:
         return None
 
     def views_for(self, db: str, measurement: str) -> set[str]:
-        return set(self._views.get((db, measurement), set()))
+        """Names of the live temp views that read ``db.measurement``."""
+        key = (db, measurement)
+        return {name for name, (owner, _) in list(self._views.items())
+                if owner == key}
+
+    def view_owners(self, db: str) -> set[tuple[str, str]]:
+        """Every (db, measurement) of ``db`` that some live view reads."""
+        return {owner for owner, _ in list(self._views.values())
+                if owner[0] == db}
 
     def _register_state(self, db: str, measurement: str) -> tuple | None:
         """Cheap freshness fingerprint: (tier path, committed snapshot
@@ -948,37 +1019,31 @@ class MeasurementCatalog:
 
     def register(self, db: str, measurement: str, view: str | None = None) -> str:
         name = view or f"{db}_{measurement}"
-        # idempotent re-register keeps the epoch (and with it the
-        # pruned-plan cache): the single-measurement REST endpoint
-        # registers its view on EVERY request, and an epoch bump per
-        # request would make the A9 plan cache miss 100% of the time.
-        # A genuinely new (measurement, view) binding still bumps.
-        already = name in self._views.get((db, measurement), set())
+        key = (db, measurement)
+        cur = self._views.get(name)
         state = self._register_state(db, measurement)
-        if (already and state is not None
-                and self._view_states.get((db, measurement)) == state):
-            # nothing committed since this view was built: skip the
-            # re-registration (a footer merge + file listing — ~500 ms
-            # on a 720-file measurement, per request on the REST path).
-            # Every engine write path commits a snapshot and calls
+        if cur == (key, state) and state is not None:
+            # this view already reads this measurement and nothing was
+            # committed since it was built: skip the rebuild. Every
+            # engine write path commits a snapshot and calls
             # invalidate(), so a stale skip requires an out-of-band
             # mutation that also bypassed the snapshot CAS.
             return name
         self.table(db, measurement).createOrReplaceTempView(name)
-        self._view_states[(db, measurement)] = state
-        if not already:
-            self._views.setdefault((db, measurement), set()).add(name)
+        self._views[name] = (key, state)
+        # a rebuild of the same binding keeps the epoch (and with it the
+        # pruned-plan cache): the single-measurement REST endpoint
+        # registers on EVERY request. A new or moved binding bumps it —
+        # a cached plan over this name reads the old owner.
+        if cur is None or cur[0] != key:
             self.epoch += 1
         return name
 
     def view_binding(self, name: str) -> tuple[str, str] | None:
-        """Reverse lookup: which (db, measurement) a registered view name
-        is bound to — lets the RBAC check resolve an unqualified table ref
-        back to its real database instead of trusting the name string."""
-        for (db, meas), views in self._views.items():
-            if name in views:
-                return (db, meas)
-        return None
+        """Which (db, measurement) the live view ``name`` reads, or None
+        when no catalog view has that name."""
+        cur = self._views.get(name)
+        return cur[0] if cur is not None else None
 
     def invalidate(self, db: str, measurement: str) -> None:
         """Re-resolve reads over a measurement after its file set changed
@@ -991,10 +1056,13 @@ class MeasurementCatalog:
         (internal/api/query.go:1049-1053)."""
         for p in self.paths(db, measurement):
             self.spark.catalog.refreshByPath(backend_for(p).spark_url(p))
-        for name in self._views.get((db, measurement), set()):
-            self.table(db, measurement).createOrReplaceTempView(name)
-        self._view_states[(db, measurement)] = \
-            self._register_state(db, measurement)
+        names = self.views_for(db, measurement)
+        if names:
+            state = self._register_state(db, measurement)
+            df = self.table(db, measurement)
+            for name in names:
+                df.createOrReplaceTempView(name)
+                self._views[name] = ((db, measurement), state)
         self.epoch += 1
         # the native-serving decoded-file cache holds committed files
         # too; stat-validation already catches in-place rewrites, this

@@ -2269,9 +2269,8 @@ class ArcServer:
                         if bk.isdir(p):
                             bk.remove_tree(p)
                             removed.append(p)
-                    for meas in list(cat._views):
-                        if meas[0] == name:
-                            cat.invalidate(*meas)
+                    for key in cat.view_owners(name):
+                        cat.invalidate(*key)
                     return self._json(200, {"deleted": name,
                                             "tiers_removed": len(removed)})
                 if url.path.startswith("/api/v1/queries/"):

@@ -113,3 +113,29 @@ def test_header_db_scoping_properties(scoping_env, data):
     shown_a = {r["measurement"]
                for r in svc.execute("SHOW MEASUREMENTS", db=db_a)}
     assert meas in shown_a
+
+
+def test_one_view_name_alternating_databases(spark, tmp_path):
+    """Scoped Spark-route queries alternate between two databases that
+    both hold ``cpu``: the temp view ``cpu`` has one owner at a time, so
+    every query reads its own database, and invalidating one database's
+    measurement never repoints the other's view."""
+    root = str(tmp_path / "data")
+    _write(root, "alt_a", "cpu", 3, 100)
+    _write(root, "alt_b", "cpu", 5, 200)
+    cat = MeasurementCatalog(spark, root)
+    svc = QueryService(spark, cat)
+    sql = "SELECT COUNT(*) AS n, SUM(marker) AS s FROM cpu WHERE 1=1"
+    want = {"alt_a": (3, 300), "alt_b": (5, 1000)}
+    for db in ("alt_a", "alt_b", "alt_a", "alt_b"):
+        row = svc.execute(sql, db=db)[0]
+        assert (row["n"], row["s"]) == want[db], db
+    assert cat.view_binding("cpu") == ("alt_b", "cpu")
+    assert cat.views_for("alt_b", "cpu") == {"cpu"}
+    assert cat.views_for("alt_a", "cpu") == set()
+    cat.invalidate("alt_a", "cpu")
+    assert cat.view_binding("cpu") == ("alt_b", "cpu")
+    row = svc.execute(sql, db="alt_b")[0]
+    assert (row["n"], row["s"]) == want["alt_b"]
+    # unscoped, the bare name reads its one owner — natively
+    assert svc.execute("SELECT COUNT(*) AS n FROM cpu")[0]["n"] == 5

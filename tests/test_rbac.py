@@ -318,6 +318,42 @@ def test_query_path_enforcement(spark, tmp_path):
     assert len(svc.query_measurement("prod_us", "events", token=tok)) == 3
 
 
+def test_scoped_query_checks_the_request_database(spark, tmp_path):
+    """Under x-arc-database, RBAC checks the table the request reads: a
+    bare name that is a measurement of the scoped database is checked
+    against THAT database, even after a query scoped to another database
+    left a view of the same name behind."""
+    from arc_spark.api import AccessDeniedError, QueryService
+    from arc_spark.catalog import MeasurementCatalog
+
+    auth = AuthStore(":memory:")
+    tok = auth.create_token("analyst", permissions=PERMISSIONS_NONE)
+    rb = RBACStore(":memory:", enabled=True)
+    org = rb.create_organization("acme")
+    team = rb.create_team(org["id"], "analysts")
+    rb.create_role(team["id"], "prod_*", ["read"])
+    rb.add_token_to_team("analyst", team["id"])
+
+    root = str(tmp_path)
+    _write_measurement(spark, root, "prod_us", "events")
+    _write_measurement(spark, root, "secret", "events")
+    svc = QueryService(spark, MeasurementCatalog(spark, root), rbac=rb,
+                       token_info_fn=auth.verify)
+
+    spark_sql = "SELECT count(*) AS n FROM events WHERE value >= 0"
+    native_sql = "SELECT count(*) AS n FROM events"
+    for sql in (spark_sql, native_sql):
+        with pytest.raises(AccessDeniedError, match="secret.events"):
+            svc.execute(sql, token=tok, db="secret")
+    # a scoped Spark-route query on prod_us binds the view `events`
+    assert svc.execute(spark_sql, token=tok, db="prod_us")[0]["n"] == 3
+    assert svc.catalog.view_binding("events") == ("prod_us", "events")
+    for sql in (spark_sql, native_sql):
+        with pytest.raises(AccessDeniedError, match="secret.events"):
+            svc.execute(sql, token=tok, db="secret")
+    assert svc.catalog.view_binding("events") == ("prod_us", "events")
+
+
 def test_query_path_unknown_token_skips_rbac(spark, tmp_path):
     """Engine-level callers without an HTTP auth layer (token unknown to
     the store) keep current behavior — the check is identity-gated."""

@@ -47,22 +47,54 @@ def _req(port, path, method="GET", token=None, body=None):
 
 
 class TestQueryServiceServing:
-    def test_native_count_starts_no_spark_job(self, spark, tmp_path):
+    def test_native_count_starts_no_spark_job(self, spark, tmp_path,
+                                              spark_jobs):
         """A footer COUNT(*) in json/msgpack is answered from metadata —
         no Spark job, as in the arrow and rows formats."""
         svc = _service(spark, str(tmp_path))
-        sc = spark.sparkContext
-        tracker = sc.statusTracker()
-        group = "native-count-probe"
-        sc.setJobGroup(group, group)
-        try:
+        with spark_jobs.started() as jobs:
             for fmt in ("json", "msgpack", "arrow", "rows"):
                 svc.execute("SELECT COUNT(*) FROM cpu", fmt=fmt)
-            assert list(tracker.getJobIdsForGroup(group)) == []
+        assert jobs == []
+        with spark_jobs.started() as jobs:
             spark.range(3).count()  # the probe does see a job
-            assert list(tracker.getJobIdsForGroup(group)) != []
-        finally:
-            sc.setJobGroup("", "")
+        assert jobs != []
+
+    def test_job_probe_sees_the_spark_route(self, spark, tmp_path,
+                                            spark_jobs):
+        """The probe counts jobs started under the registry's own job
+        group — a native route that fell back to Spark cannot hide."""
+        svc = _service(spark, str(tmp_path))
+        with spark_jobs.started() as jobs:
+            svc.execute("SELECT COUNT(*) FROM cpu WHERE 1=1")
+        assert jobs != []
+
+    @pytest.mark.parametrize("sql, want", [
+        ("SELECT COUNT(*) AS n FROM cpu", [{"n": 3}]),
+        ("SELECT MIN(time) AS lo, MAX(time) AS hi FROM cpu",
+         [{"lo": "2023-11-14 22:13:20", "hi": "2023-11-14 22:15:20"}]),
+        ("SELECT * FROM cpu WHERE time >= '2023-11-14 22:14:00' "
+         "AND time < '2023-11-14 22:16:00' LIMIT 10",
+         [{"host": "b"}, {"host": "c"}]),
+    ])
+    def test_first_scoped_query_on_a_database_is_native(
+            self, spark, tmp_path, spark_jobs, sql, want):
+        """The first db-scoped COUNT(*), MIN/MAX(time) or time-range
+        page on a database no query has touched resolves its table from
+        storage: no Spark job, no view registered."""
+        _ingest(spark, str(tmp_path))
+        cat = MeasurementCatalog(spark, str(tmp_path))
+        svc = QueryService(spark, cat)
+        with spark_jobs.started() as jobs:
+            rows = svc.execute(sql, db="metrics")
+        assert jobs == []
+        assert cat.views_for("metrics", "cpu") == set()
+        assert cat.view_binding("cpu") is None
+        got = [{k: (v.strftime("%Y-%m-%d %H:%M:%S")
+                    if hasattr(v, "strftime") else v)
+                for k, v in r.asDict().items() if k in want[0]}
+               for r in rows]
+        assert got == want
 
     def test_spark_path_json_labels_bool(self, spark, tmp_path):
         svc = _service(spark, str(tmp_path))
