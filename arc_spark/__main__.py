@@ -101,7 +101,6 @@ def _maintain(args) -> int:
     """One-shot out-of-process lifecycle pass: compaction / retention /
     export / reconciliation over every measurement under the configured
     root, thresholds from config, then exit. Output: one JSON line."""
-    from arc_spark.catalog import MeasurementCatalog
     from arc_spark.config import load_config, resolve_storage_root
     from arc_spark.session import get_spark
     from arc_spark.storage import backend_for
@@ -119,7 +118,6 @@ def _maintain(args) -> int:
     sp = cfg["spark"]
     spark = get_spark(cpus=sp["cpus"] or None,
                       shuffle_partitions=sp["shuffle_partitions"] or None)
-    catalog = MeasurementCatalog(spark, root)
     out: dict = {"root": root, "jobs": {}}
     measurements = []
     if bk.isdir(root):
@@ -136,7 +134,6 @@ def _maintain(args) -> int:
                 spark, root, db, meas,
                 min_files=comp["min_files"],
                 min_age_seconds=comp["min_age_hours"] * 3600,
-                catalog=catalog,
                 max_files_per_batch=comp["max_files_per_batch"],
                 defer_input_deletion=comp["defer_input_deletion"]))
         out["jobs"]["compaction"] = {"partitions": len(done)}

@@ -19,11 +19,11 @@ import os
 import re
 import time
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 import threading
 
-from arc_spark.catalog import MeasurementCatalog
+from arc_spark.catalog import MeasurementCatalog, validate_identifier
 from arc_spark.governance import (
     Governor,
     QueryRegistry,
@@ -324,7 +324,7 @@ class QueryService:
     def _resolve_ref(self, ref, db: str | None) -> tuple[str, str] | None:
         """The (db, measurement) a parsed table ref reads — the one
         resolver behind RBAC, the native routes and the Spark route's
-        view binding (:meth:`_scope_to_db`).
+        view binding (:meth:`_bind`).
 
         Scoped to ``db`` (x-arc-database): a one-part name that is a
         measurement of ``db`` resolves to it straight from storage — no
@@ -345,23 +345,46 @@ class QueryService:
             return key if key is not None and key[0] == ref[0] else None
         return None
 
-    def _scope_to_db(self, db: str, sql: str) -> None:
-        """Header-database scoping (reference x-arc-database): reject
-        multi-part table refs, and bind each unqualified ref that
-        :meth:`_resolve_ref` resolves to a measurement of ``db`` to that
-        measurement (bare-name view). Runs under ``_plan_lock`` so the
-        view binding is not observable by a concurrently-scoped request
-        for a different database."""
+    def _bind(self, sql: str, db: str | None) -> None:
+        """The one binder: point every one-part table ref that
+        :meth:`_resolve_ref` resolves — a measurement of the scoped
+        ``db``, or a catalog view name — at its measurement's latest
+        committed snapshot (``catalog.register`` rebuilds the view only
+        when that changed). A request scoped to ``db`` (reference
+        x-arc-database) may not name ``db.table``. Caller holds
+        ``_plan_lock``, so no concurrent request observes a binding, and
+        none lands inside ``prune_sql``'s view override window."""
         for ref in extract_tables(self.spark, sql):
             if len(ref) >= 2:
-                raise SqlValidationError(
-                    "cross-database queries (db.table) not allowed when "
-                    "the request is scoped to a database"
-                )
-            if self._resolve_ref(ref, db) == (db, ref[0]):
-                self.catalog.register(db, ref[0], view=ref[0])
+                if db is not None:
+                    raise SqlValidationError(
+                        "cross-database queries (db.table) not allowed "
+                        "when the request is scoped to a database")
+                continue
+            key = self._resolve_ref(ref, db)
+            if key is not None:
+                self.catalog.register(*key, view=ref[0])
+
+    def plan(self, sql: str, db: str | None = None) -> DataFrame:
+        """The Spark DataFrame for ``sql`` over fresh views: bind
+        (:meth:`_bind`), then SQL-surface partition pruning (reference
+        A2: WHERE time ranges become year/month/day/hour partition
+        predicates on each measurement scan), both under ``_plan_lock``
+        — the pruner's temporary view overrides must not be observable
+        by a concurrent request."""
+        with self._plan_lock:
+            self._bind(sql, db)
+            return prune_sql(self.spark, sql, self.catalog)
 
     _IDENT_RE = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
+
+    @staticmethod
+    def _measurement_sql(measurement: str, where: str | None) -> str:
+        """The single-measurement routes' read as SQL scoped to their db:
+        RBAC resolves its one-part ref to the pair the route serves,
+        exactly as for the same query under x-arc-database."""
+        return f"SELECT * FROM {measurement}" + (
+            f" WHERE {where}" if where else "")
 
     def query_measurement(
         self,
@@ -402,7 +425,8 @@ class QueryService:
                 val_sql = (f"SELECT * FROM {view}"
                            + (f" WHERE {where}" if where else ""))
                 validate_read_only(self.spark, val_sql)
-                self._check_rbac(token, val_sql, db=db)
+                self._check_rbac(token, self._measurement_sql(
+                    measurement, where), db=db)
                 # the filter goes through prune_sql, so a WHERE time range
                 # on this endpoint gets the derived partition predicate —
                 # the reference's flagship pruned read path (BASELINE's
@@ -464,9 +488,10 @@ class QueryService:
                 raise NativeScanUnsupported(
                     f"not a pure time-range predicate: {where!r}")
         self.governor.admit(token)
-        view = self.catalog.register(db, measurement)
-        where_sql = f" WHERE {where}" if where else ""
-        self._check_rbac(token, f"SELECT * FROM {view}{where_sql}", db=db)
+        validate_identifier(db, "database")
+        validate_identifier(measurement, "measurement")
+        rbac_sql = self._measurement_sql(measurement, where)
+        self._check_rbac(token, rbac_sql, db=db)
         cap = self.governor.row_cap(token)
         eff = int(limit) if cap is None else min(int(limit), cap)
         try:
@@ -483,7 +508,7 @@ class QueryService:
             # error, not an engine fault (the breaker must not trip)
             raise SqlValidationError(str(e)) from None
         self.registry.record_instant(
-            f"SELECT * FROM {view}{where_sql} LIMIT {eff}"
+            f"{rbac_sql} LIMIT {eff}"
             + (f" VERSION AS OF {snapshot}" if snapshot is not None else ""),
             token=token, rows=table.num_rows)
         return table
@@ -513,7 +538,7 @@ class QueryService:
         """A plan relation token list → (db, measurement) through
         :meth:`_resolve_ref`; None when unresolvable, or when a scoped
         request's ref reads another database (a qualified ref — the
-        Spark path must surface the SAME _scope_to_db error — or a view
+        Spark path must surface the SAME _bind error — or a view
         of another database, which only the Spark route serves)."""
         key = self._resolve_ref([p.strip() for p in rel_text.split(",")],
                                 db)
@@ -720,15 +745,7 @@ class QueryService:
                 self.registry.record_instant(sql, token=token,
                                              rows=table.num_rows)
                 return self._serve_native_table(table, fmt=fmt)
-        # SQL-surface partition pruning (reference A2's flagship behavior):
-        # WHERE time ranges become year/month/day/hour partition predicates
-        # on each measurement scan. The lock scopes the temporary pruned-view
-        # registration so concurrent execute() calls can't observe it.
-        with self._plan_lock:
-            if db is not None:
-                self._scope_to_db(db, sql)
-            df = prune_sql(self.spark, sql, self.catalog)
-        df = self.governor.cap(token, df)
+        df = self.governor.cap(token, self.plan(sql, db))
         return self.registry.run(df, sql=sql, token=token,
                                  timeout_s=self.governor.timeout_s(token),
                                  collect=_spark_collect(fmt))
@@ -816,13 +833,6 @@ class IngestService:
         # backlog. None disables. Same executor-resolvable-root rule as
         # the LP bulk path.
         self.distributed_flush_min_bytes = 64 << 20
-        # optional hook fired with the set of (db, measurement) keys after
-        # files land — the wire layer points it at catalog.invalidate so a
-        # registered view NEVER serves a stale file listing after a flush
-        # (Spark's FileStatusCache pins the listing a view was created
-        # with; the reference invalidates its query cache after writes the
-        # same way, internal/api/query.go:1049-1053)
-        self.on_measurements_written = None
         self._buffers: dict[tuple[str, str], list[dict]] = {}
         # (db, kind, payload, n_acked) — n_acked = rows counted at ack via
         # the header/byte walk, or -1 when the count was not determinable
@@ -1185,8 +1195,8 @@ class IngestService:
     def _finish_lp_bulk(self, db: str, results) -> int:
         """Shared bulk-LP epilogue: per-measurement manifest + ONE
         snapshot commit (the whole write becomes visible atomically —
-        files are invisible to snapshot readers until now), stats, and
-        flush notification. ``results``: (measurement, n_rows,
+        files are invisible to snapshot readers until now) and stats.
+        ``results``: (measurement, n_rows,
         tag_columns, written_files) per parsed chunk-measurement."""
         from arc_spark import snapshots
         from arc_spark.sources.writer import measurement_path, write_manifest
@@ -1210,7 +1220,6 @@ class IngestService:
             self.stats["acked"] += n_lines
             self.stats["flushed"] += n_lines
             self.stats["flushes"] += 1
-        self._notify_written({(db, meas) for meas in meas_tags})
         return n_lines
 
     def _drain_raw_distributed(
@@ -1307,7 +1316,6 @@ class IngestService:
             # left them invisible and the WAL retains the payloads
             snapshots.commit(measurement_path(root, db, meas),
                              add=meas_files.get(meas, []))
-        self._notify_written({(db, m) for m in meas_tags})
         return n_rows
 
     def _drain_stage_and_run(
@@ -1802,19 +1810,7 @@ class IngestService:
                 self._flushing_rows -= snap_rows
                 self._flushing_raw_bytes -= snap_raw_bytes
                 self._space.notify_all()
-            self._notify_written(set(buffers))
         return total + dist_rows
-
-    def _notify_written(self, keys: set) -> None:
-        """Fire on_measurements_written; an observer failure must never
-        fail (or retry) a flush whose data already landed."""
-        cb = self.on_measurements_written
-        if cb is None or not keys:
-            return
-        try:
-            cb(keys)
-        except Exception:
-            pass
 
     def _write_buffers(self, buffers: dict[tuple[str, str], list[dict]]) -> int:
         from arc_spark.sources.ingest import columnar_to_arrow, merge_batches

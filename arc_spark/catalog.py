@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import functools as _functools
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -197,9 +198,10 @@ class _DecodedFileCache:
     (uuid part names; compaction/DELETE publish new snapshots rather
     than rewriting), so caching the decoded tables is sound. Entries are
     validated by (mtime_ns, size) stat on every hit — an out-of-band
-    overwrite misses and re-reads — and :meth:`ArcCatalog.invalidate`
-    clears the cache wholesale (the documented hook after any file-set
-    mutation). Only files ≤ ``max_file_bytes`` are cached: the regime
+    overwrite misses and re-reads — and
+    :meth:`MeasurementCatalog.invalidate` evicts one measurement's files
+    (the hook after an out-of-band file-set change). Only files ≤
+    ``max_file_bytes`` are cached: the regime
     where per-file overhead dominates is tiny files; big compacted files
     stream efficiently already and would evict thousands of small ones.
 
@@ -549,19 +551,23 @@ class MeasurementCatalog:
         self.cold_root = cold_root
         self.daily_root = daily_root
         #: Spark temp-view name → (the (db, measurement) it reads, the
-        #: committed-snapshot state it was built from). One owner per
-        #: name: Spark has one temp view per name, so a second binding
-        #: replaces the first. The state lets register() skip the
-        #: rebuild when nothing changed (the serving hot path registers
-        #: per REQUEST; re-reading a 720-file listing cost ~500 ms)
+        #: committed state (:meth:`_register_state`) it was built from,
+        #: None once stale). One owner per name: Spark has one temp view
+        #: per name, so a second binding replaces the first. The state
+        #: lets register() skip the rebuild when nothing changed (the
+        #: serving hot path registers per REQUEST; re-reading a 720-file
+        #: listing cost ~500 ms)
         self._views: dict[str, tuple[tuple[str, str], tuple | None]] = {}
-        #: bumped whenever the view universe changes (register/invalidate);
-        #: consumers keying caches on (sql, epoch) — QueryService's pruned-
-        #: plan cache — drop stale plans without tracking individual views
+        self._views_lock = threading.Lock()
+        #: bumped whenever a view is rebuilt over a new owner or committed
+        #: state, and by invalidate(); consumers keying caches on
+        #: (sql, epoch) — QueryService's pruned-plan cache — drop stale
+        #: plans without tracking individual views
         self.epoch = 0
-        #: epoch-keyed footer-count cache for the native COUNT(*) path
-        self._count_cache: dict[tuple[str, str], tuple[int, int]] = {}
-        #: epoch-keyed footer min/max cache (native MIN/MAX path)
+        #: footer-count cache for the native COUNT(*) path, keyed on the
+        #: committed state it was counted at
+        self._count_cache: dict[tuple[str, str], tuple[tuple, int]] = {}
+        #: footer min/max cache (native MIN/MAX path), keyed likewise
         self._stats_cache: dict[tuple[str, str, str], tuple] = {}
         #: immutable per-file (row count, footer schema fingerprint) —
         #: files never mutate in place
@@ -607,13 +613,15 @@ class MeasurementCatalog:
         """Exact committed row count from parquet FOOTERS — no Spark job,
         no data pages (the reference's ~1 ms COUNT(*) served from DuckDB
         metadata; here the snapshot file list + footer num_rows). Sums
-        over every tier exactly like :meth:`table`; cached per catalog
-        epoch, so any flush/compaction/invalidate recomputes."""
+        over every tier exactly like :meth:`table`; cached per committed
+        state (:meth:`_register_state`), so any commit recomputes and an
+        unmanaged tier never caches."""
         from arc_spark import snapshots
 
         key = (db, measurement)
+        state = self._register_state(db, measurement)
         hit = self._count_cache.get(key)
-        if hit is not None and hit[0] == self.epoch:
+        if hit is not None and state is not None and hit[0] == state:
             return hit[1]
         total = 0
         for p in self.paths(db, measurement):
@@ -624,10 +632,10 @@ class MeasurementCatalog:
                          for r in snapshots.live_glob(p, bk=bk)]
             for f in files:
                 # per-FILE counts are immutable (parquet files never
-                # mutate in place), so an epoch bump (any flush) costs
+                # mutate in place), so a new commit (any flush) costs
                 # O(new files) footer reads, not O(all files)
                 total += self._footer(bk, f)[0]
-        self._count_cache[key] = (self.epoch, total)
+        self._count_cache[key] = (state, total)
         return total
 
     def _footer(self, bk, path: str) -> tuple[int, bytes]:
@@ -682,8 +690,9 @@ class MeasurementCatalog:
         from arc_spark import snapshots
 
         key = (db, measurement, col)
+        state = self._register_state(db, measurement)
         hit = self._stats_cache.get(key)
-        if hit is not None and hit[0] == self.epoch:
+        if hit is not None and state is not None and hit[0] == state:
             return hit[1]
         import pyarrow as pa
 
@@ -707,7 +716,7 @@ class MeasurementCatalog:
                 t = sch.field(col).type
                 if not _eligible(t) or (col_type is not None
                                         and t != col_type):
-                    self._stats_cache[key] = (self.epoch, None)
+                    self._stats_cache[key] = (state, None)
                     return None  # float/string stats or evolved type
                 col_type = t
                 idx = None
@@ -726,7 +735,7 @@ class MeasurementCatalog:
                         continue  # all values null in this group
                     st = cc.statistics
                     if st is None or not st.has_min_max:
-                        self._stats_cache[key] = (self.epoch, None)
+                        self._stats_cache[key] = (state, None)
                         return None  # stats missing → not answerable
                     lo = st.min if lo is None else min(lo, st.min)
                     hi = st.max if hi is None else max(hi, st.max)
@@ -737,7 +746,7 @@ class MeasurementCatalog:
             out = None
         else:
             out = (lo, hi, col_type)
-        self._stats_cache[key] = (self.epoch, out)
+        self._stats_cache[key] = (state, out)
         return out
 
     def table(self, db: str, measurement: str, merge_schema: bool = True) -> DataFrame:
@@ -996,17 +1005,16 @@ class MeasurementCatalog:
         return {name for name, (owner, _) in list(self._views.items())
                 if owner == key}
 
-    def view_owners(self, db: str) -> set[tuple[str, str]]:
-        """Every (db, measurement) of ``db`` that some live view reads."""
-        return {owner for owner, _ in list(self._views.values())
-                if owner[0] == db}
-
     def _register_state(self, db: str, measurement: str) -> tuple | None:
-        """Cheap freshness fingerprint: (tier path, committed snapshot
-        version) per tier — one directory listing each, no footer I/O.
-        None when any tier is UNMANAGED (no snapshot chain): freshness
-        can't be proven there, so callers must re-register every time
-        (globs are the source of truth and may drift silently)."""
+        """The freshness fingerprint of a measurement: (tier path,
+        committed snapshot version) per tier — one directory listing
+        each, no footer I/O. Views (:meth:`register`) and the footer
+        caches (:meth:`count_rows`, :meth:`column_stats`) are fresh
+        exactly when this is unchanged; every engine write path commits
+        a snapshot, which moves it. None when any tier is UNMANAGED (no
+        snapshot chain): freshness can't be proven there, so readers
+        rebuild every time (globs are the source of truth and may drift
+        silently)."""
         from arc_spark import snapshots
 
         st = []
@@ -1018,24 +1026,24 @@ class MeasurementCatalog:
         return tuple(st)
 
     def register(self, db: str, measurement: str, view: str | None = None) -> str:
+        """Bind temp view ``view`` (default ``<db>_<measurement>``) to the
+        measurement as of its latest commit — the pull side of freshness:
+        readers call this before planning, so a view is rebuilt at most
+        once per read of a changed measurement, never per write."""
         name = view or f"{db}_{measurement}"
         key = (db, measurement)
         cur = self._views.get(name)
         state = self._register_state(db, measurement)
         if cur == (key, state) and state is not None:
-            # this view already reads this measurement and nothing was
-            # committed since it was built: skip the rebuild. Every
-            # engine write path commits a snapshot and calls
-            # invalidate(), so a stale skip requires an out-of-band
-            # mutation that also bypassed the snapshot CAS.
-            return name
+            return name  # same owner, nothing committed since the build
         self.table(db, measurement).createOrReplaceTempView(name)
-        self._views[name] = (key, state)
-        # a rebuild of the same binding keeps the epoch (and with it the
-        # pruned-plan cache): the single-measurement REST endpoint
-        # registers on EVERY request. A new or moved binding bumps it —
-        # a cached plan over this name reads the old owner.
-        if cur is None or cur[0] != key:
+        with self._views_lock:
+            self._views[name] = (key, state)
+        # a cached pruned plan pins the view's old plan: a new owner or
+        # a new committed state bumps the epoch. Only an unmanaged tier's
+        # rebuild (state None, unprovable either way) keeps it —
+        # invalidate() is that tier's hook.
+        if cur != (key, state):
             self.epoch += 1
         return name
 
@@ -1046,32 +1054,24 @@ class MeasurementCatalog:
         return cur[0] if cur is not None else None
 
     def invalidate(self, db: str, measurement: str) -> None:
-        """Re-resolve reads over a measurement after its file set changed
-        (compaction/delete/retention/restore). Two caches need clearing:
-        the session's shared FileStatusCache (refreshByPath — or a plain
-        ``spark.read`` over the same path serves the stale listing), and
-        every temp view, which pins the file listing it was created with
-        and must be re-registered from a fresh scan. Mirrors the
-        reference's post-compaction cache invalidation
-        (internal/api/query.go:1049-1053)."""
+        """Hook for a change to a measurement's files that committed no
+        snapshot (files edited outside the engine's write paths, e.g. in
+        an unmanaged tree). Marks the measurement's views stale, so the
+        next :meth:`register` rebuilds them; refreshes Spark's cached
+        plans by path; evicts the measurement's decoded-file cache
+        entries; bumps the epoch. It never rebuilds a view: engine
+        writers commit a snapshot, and readers pull that through
+        :meth:`register`."""
+        key = (db, measurement)
+        with self._views_lock:
+            for name, (owner, _) in self._views.items():
+                if owner == key:
+                    self._views[name] = (key, None)
         for p in self.paths(db, measurement):
-            self.spark.catalog.refreshByPath(backend_for(p).spark_url(p))
-        names = self.views_for(db, measurement)
-        if names:
-            state = self._register_state(db, measurement)
-            df = self.table(db, measurement)
-            for name in names:
-                df.createOrReplaceTempView(name)
-                self._views[name] = ((db, measurement), state)
+            bk = backend_for(p)
+            self.spark.catalog.refreshByPath(bk.spark_url(p))
+            # trailing separator so 'cpu' never evicts a sibling whose
+            # name shares the prefix ('cpu_total'), and only THIS
+            # measurement's tiers: invalidating A must not cold-start B
+            _scan_cache.evict_prefix(bk.fs_path(p).rstrip("/") + "/")
         self.epoch += 1
-        # the native-serving decoded-file cache holds committed files
-        # too; stat-validation already catches in-place rewrites, this
-        # catches everything else the epoch bump is for — scoped to THIS
-        # measurement's tiers so invalidating A never cold-starts B's
-        # serving (r9 review)
-        # trailing separator so 'cpu' never evicts a sibling whose name
-        # shares the prefix ('cpu_total') — cached keys are file paths
-        # strictly under the measurement root (r9 advice)
-        for p in self.paths(db, measurement):
-            _scan_cache.evict_prefix(
-                backend_for(p).fs_path(p).rstrip("/") + "/")

@@ -575,7 +575,7 @@ def build_engine(cfg: dict, spark=None) -> dict:
         from arc_spark.operators.compaction import compact_measurement
         from arc_spark.storage import backend_for
 
-        def _compact_all(spark=spark, root=root, catalog=catalog):
+        def _compact_all(spark=spark, root=root):
             bk = backend_for(root)
             out = []
             if bk.isdir(root):
@@ -585,7 +585,6 @@ def build_engine(cfg: dict, spark=None) -> dict:
                             spark, root, db, meas,
                             min_files=comp["min_files"],
                             min_age_seconds=comp["min_age_hours"] * 3600,
-                            catalog=catalog,
                             max_files_per_batch=comp["max_files_per_batch"],
                             defer_input_deletion=comp["defer_input_deletion"],
                         ))
@@ -597,7 +596,7 @@ def build_engine(cfg: dict, spark=None) -> dict:
         from arc_spark.operators.lifecycle import apply_retention
         from arc_spark.storage import backend_for
 
-        def _retention_all(root=root, catalog=catalog):
+        def _retention_all(root=root):
             bk = backend_for(root)
             removed = 0
             if bk.isdir(root):
@@ -606,9 +605,7 @@ def build_engine(cfg: dict, spark=None) -> dict:
                         gone = apply_retention(
                             root, db, meas, retention_days=ret["days"],
                             buffer_days=ret["buffer_days"])
-                        if gone:
-                            catalog.invalidate(db, meas)
-                            removed += len(gone)
+                        removed += len(gone)
             return {"removed": removed}
 
         scheduler.add_job("retention", _retention_all, ret["interval_s"])
@@ -686,13 +683,8 @@ def build_engine(cfg: dict, spark=None) -> dict:
             cold = cfg["storage"]["cold_path"]
 
             def _tiering_sweep(root=root, cold=cold):
-                out = migrate_all(root, cold, server.tiering_policies,
-                                  ti["default_hot_max_age_days"])
-                if out["migrated_days"]:
-                    for db, metas in out["databases"].items():
-                        for meas in metas:
-                            catalog.invalidate(db, meas)
-                return out
+                return migrate_all(root, cold, server.tiering_policies,
+                                   ti["default_hot_max_age_days"])
 
             scheduler.add_job("tiering", _tiering_sweep, ti["interval_s"])
     mq = cfg["mqtt"]
@@ -717,8 +709,7 @@ def build_engine(cfg: dict, spark=None) -> dict:
         from arc_spark.sources.edgesync import HubIndex, HubReceiver
 
         server.edge_receiver = HubReceiver(
-            root, index=HubIndex(es["hub_index_db"] or ":memory:"),
-            catalog=catalog)
+            root, index=HubIndex(es["hub_index_db"] or ":memory:"))
         if es["hub_bundle_import_dirs"]:
             from arc_spark.sources.edgesync_bundle import (
                 BundleImporter,

@@ -73,6 +73,10 @@ class QueryTimeout(GovernanceError):
     pass
 
 
+class QueryCancelled(GovernanceError):
+    pass
+
+
 @dataclass
 class TokenPolicy:
     """Per-token limits (reference: per-token governance config)."""
@@ -268,14 +272,25 @@ class QueryRegistry:
                     return i
         return None
 
+    def _transition(self, info: QueryInfo, from_: str, to: str) -> bool:
+        """Move a live entry's status ``from_`` → ``to`` under ``_lock``;
+        False when another outcome already won. The only writer of a
+        live entry's status, so run(), the watchdog and cancel() agree
+        on exactly one outcome."""
+        with self._lock:
+            if info.status != from_:
+                return False
+            info.status = to
+            return True
+
     def cancel(self, query_id: str) -> bool:
-        info = self._queries.get(query_id)
-        if info is None or info.status != "running":
+        with self._lock:
+            info = self._queries.get(query_id)
+        if info is None or not self._transition(info, "running",
+                                                "cancelled"):
             return False
         info._cancel.set()
         self.spark.sparkContext.cancelJobGroup(query_id)
-        info.status = "cancelled"
-        info.finished_at = time.time()
         return True
 
     def record_instant(self, sql: str, token: str = "",
@@ -318,9 +333,8 @@ class QueryRegistry:
         watchdog: threading.Timer | None = None
         if timeout_s is not None:
             def _expire() -> None:
-                if info.status != "running":
+                if not self._transition(info, "running", "timeout"):
                     return
-                info.status = "timeout"
                 # cancelJobGroup only interrupts jobs that are ALREADY
                 # submitted; a cancel landing while the driver is still
                 # planning/launching is a no-op and the job submitted a
@@ -335,30 +349,26 @@ class QueryRegistry:
             watchdog.daemon = True
             watchdog.start()
         try:
-            result, n_rows = collect(df)
+            try:
+                result, n_rows = collect(df)
+            except Exception as exc:
+                if self._transition(info, "running", "error"):
+                    info.error = str(exc)[:500]
+                    raise
+                failure = exc
+            else:
+                if self._transition(info, "running", "done"):
+                    info.rows = n_rows
+                    return result
+                failure = None
+            # the watchdog or a cancel won, even if the result is here:
+            # the query fails the way its history records it (reference
+            # context.WithTimeout)
             if info.status == "timeout":
-                # the cancel raced the job's completion — the result is
-                # here, but the query exceeded its duration cap, so the
-                # governance contract (reference context.WithTimeout)
-                # still fails it.
                 raise QueryTimeout(
                     f"query {qid} exceeded max duration {timeout_s}s"
-                )
-            if info.status == "running":
-                info.status = "done"
-                info.rows = n_rows
-            return result
-        except QueryTimeout:
-            raise
-        except Exception as exc:
-            if info.status == "timeout":
-                raise QueryTimeout(
-                    f"query {qid} exceeded max duration {timeout_s}s"
-                ) from exc
-            if info.status != "cancelled":
-                info.status = "error"
-                info.error = str(exc)[:500]
-            raise
+                ) from failure
+            raise QueryCancelled(f"query {qid} was cancelled") from failure
         finally:
             if watchdog is not None:
                 watchdog.cancel()

@@ -159,16 +159,16 @@ def restore_backup(
     measurement: str | None = None,
     prefix: str | None = None,
     overwrite: bool = False,
-    catalog=None,
 ) -> dict:
     """Copy backup files back into the live tree.
 
     ``prefix`` restricts to a partition-path prefix inside each
     measurement (``"year=2024/month=1/day=15"`` restores one day — the
     partial-restore contract on the hive layout). Existing live files are
-    kept unless ``overwrite=True``; pass the owning ``MeasurementCatalog``
-    to re-resolve views over restored measurements (reference restore
-    re-registers measurements)."""
+    kept unless ``overwrite=True``. Catalog views over a restored
+    measurement rebuild on their next read: a merge commits a snapshot,
+    and a whole-measurement copy lands unmanaged, which views always
+    re-read."""
     src = backend_for(backup_root)
     dst = backend_for(root)
     manifest = src.read_json(
@@ -233,9 +233,6 @@ def restore_backup(
                     # unmanaged tree this bootstraps from the glob)
                     snapshots.commit(dst_meas, add=restored_data, bk=dst)
                 touched.append((d, m))
-    if catalog is not None:
-        for d, m in touched:
-            catalog.invalidate(d, m)
     return {"backup_id": backup_id, "restored_files": restored,
             "skipped_files": skipped,
             "measurements": [f"{d}.{m}" for d, m in touched]}

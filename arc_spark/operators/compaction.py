@@ -494,7 +494,6 @@ def compact_measurement_daily(
     min_files: int = 12,
     min_age_seconds: float = 86400,
     now: float | None = None,
-    catalog=None,
 ) -> list[dict]:
     """Daily-tier pass: merge eligible days into single day files under
     ``daily_root`` (see :func:`compact_day` for the layout contract)."""
@@ -509,8 +508,6 @@ def compact_measurement_daily(
     )
     if results:
         spark.catalog.refreshByPath(src_bk.spark_url(meas_path))
-        if catalog is not None:
-            catalog.invalidate(db, measurement)
     return results
 
 
@@ -522,15 +519,12 @@ def compact_measurement(
     min_files: int = 10,
     min_age_seconds: float = 3600,
     now: float | None = None,
-    catalog=None,
     max_files_per_batch: int = 30,
     defer_input_deletion: bool = False,
 ) -> list[dict]:
-    """Hourly-tier compaction pass over one measurement.
-
-    Pass the `MeasurementCatalog` that owns this measurement's views so they
-    are re-resolved after the file swap (temp views pin their file listing;
-    see MeasurementCatalog.invalidate)."""
+    """Hourly-tier compaction pass over one measurement. Each swap
+    commits a snapshot; catalog views pick it up on their next read
+    (MeasurementCatalog.register)."""
     bk = backend_for(root)
     meas_path = bk.join(root, db, measurement)
     recover_incomplete(meas_path)
@@ -544,6 +538,4 @@ def compact_measurement(
     )
     if results:
         spark.catalog.refreshByPath(bk.spark_url(meas_path))
-        if catalog is not None:
-            catalog.invalidate(db, measurement)
     return results

@@ -233,11 +233,12 @@ def prune_sql(spark, sql: str, catalog, time_col: str = "time"):
     Repeat queries hit a pruned-plan LRU (the reference's A9 SQL transform
     cache, internal/api/query.go): the parse → bound-extract →
     re-register → re-parse pipeline runs once per (sql, catalog state).
-    The key includes ``catalog.epoch``, bumped on every view registration
-    or invalidation (compaction, retention, delete, restore all call
-    ``invalidate``), so a cached plan over a replaced view can never be
-    served. DataFrames are immutable logical plans — re-executing one is
-    exactly re-running the query.
+    The key includes ``catalog.epoch``, which ``register`` bumps whenever
+    it rebuilds a view over a new owner or a new commit (readers bind
+    their views before calling this), and ``invalidate`` bumps too; so a
+    cached plan over a replaced view can never be served. DataFrames are
+    immutable logical plans — re-executing one is exactly re-running the
+    query.
     """
     epoch = getattr(catalog, "epoch", None)
     if epoch is None:

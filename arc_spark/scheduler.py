@@ -19,9 +19,8 @@ compaction against itself for the same reason). Semantics kept:
   next due time.
 
 Convenience registrars wire the engine's own operators: hourly/daily
-compaction, retention, CQ ticks, reconciliation dry-runs. Each runs
-against the catalog-aware entry points so views are re-resolved after
-file swaps.
+compaction, retention, CQ ticks, reconciliation dry-runs. Each commits
+a snapshot per file swap; catalog views pick it up on their next read.
 """
 
 from __future__ import annotations
@@ -78,13 +77,12 @@ class MaintenanceScheduler:
     # engine-wired conveniences (the reference's dedicated schedulers)
     def schedule_compaction(self, spark, root: str, db: str,
                             measurement: str, interval_s: float = 300,
-                            catalog=None, **kw) -> None:
+                            **kw) -> None:
         from arc_spark.operators.compaction import compact_measurement
 
         self.add_job(
             f"compaction:{db}.{measurement}",
-            lambda: compact_measurement(spark, root, db, measurement,
-                                        catalog=catalog, **kw),
+            lambda: compact_measurement(spark, root, db, measurement, **kw),
             interval_s)
 
     def schedule_retention(self, root: str, db: str, measurement: str,

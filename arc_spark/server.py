@@ -209,9 +209,6 @@ class ArcServer:
         if rbac is not None and auth is not None:
             self.query.rbac = rbac
             self.query.token_info_fn = auth.verify
-        if ingest_service is not None:
-            # flushed files must be visible to registered views immediately
-            ingest_service.on_measurements_written = self._invalidate_written
         outer = self
 
         class Handler(BaseHTTPRequestHandler):
@@ -1643,7 +1640,7 @@ class ArcServer:
 
                         validate_read_only(outer.query.spark, sql)
                         outer.query._check_rbac(token, sql)
-                        rows, method = estimate_rows(outer.query.spark.sql(sql))
+                        rows, method = estimate_rows(outer.query.plan(sql))
                         return {"estimated_rows": rows, "method": method}
 
                     ok, out = self._run(_estimate)
@@ -1702,7 +1699,6 @@ class ArcServer:
                             measurement=req.get("measurement"),
                             prefix=req.get("prefix"),
                             overwrite=bool(req.get("overwrite", False)),
-                            catalog=outer.query.catalog,
                         )
 
                     ok, out = self._run(_bk)
@@ -1833,10 +1829,6 @@ class ArcServer:
                                     max_files_per_batch=int(
                                         req.get("max_files_per_batch", 30)),
                                 )}
-                        # the one view rebuild per request, for every
-                        # operation (the compaction passes get no catalog,
-                        # or they would rebuild the views a second time)
-                        outer.query.catalog.invalidate(db, meas)
                         return out
 
                     ok, out = self._run(_manage)
@@ -1954,7 +1946,6 @@ class ArcServer:
                             outer.ingest.root, cold, db, meas,
                             older_than_days=float(
                                 req.get("older_than_days", 30)))
-                        outer.query.catalog.invalidate(db, meas)
                         return {"migrated": moved}
 
                     ok, out = self._run(_migrate)
@@ -2061,7 +2052,8 @@ class ArcServer:
                     if cq.paused:
                         return self._json(409, {"error": f"CQ {name!r} is paused"})
                     ok, out = self._run(lambda: cq.run_once(
-                        outer.query.spark, outer.ingest.root))
+                        outer.query.spark, outer.ingest.root,
+                        plan=outer.query.plan))
                     if ok:
                         self._json(200, out)
                     return
@@ -2269,8 +2261,6 @@ class ArcServer:
                         if bk.isdir(p):
                             bk.remove_tree(p)
                             removed.append(p)
-                    for key in cat.view_owners(name):
-                        cat.invalidate(*key)
                     return self._json(200, {"deleted": name,
                                             "tiers_removed": len(removed)})
                 if url.path.startswith("/api/v1/queries/"):
@@ -2331,13 +2321,6 @@ class ArcServer:
             st = self.import_stats.setdefault(kind, {"files": 0, "rows": 0})
             st["files"] += 1
             st["rows"] += int(rows)
-
-    def _invalidate_written(self, keys) -> None:
-        for db, meas in keys:
-            try:
-                self.query.catalog.invalidate(db, meas)
-            except Exception:
-                pass  # measurement may not be registered/known yet
 
     def start(self) -> "ArcServer":
         self._thread = threading.Thread(

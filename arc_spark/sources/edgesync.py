@@ -246,11 +246,9 @@ class HubReceiver:
     """Hub side: verify-then-promote file receive + capped reconcile."""
 
     def __init__(self, root: str, index: HubIndex | None = None,
-                 catalog=None, max_reconcile: int = MAX_RECONCILE_ENTRIES):
+                 max_reconcile: int = MAX_RECONCILE_ENTRIES):
         self.root = root
         self.index = index or HubIndex()
-        # optional MeasurementCatalog: received files invalidate views
-        self.catalog = catalog
         self.max_reconcile = max_reconcile
         self.activity: dict[str, dict] = {}  # spoke_id → counters
         # receive() runs under ThreadingHTTPServer: without per-path
@@ -344,12 +342,6 @@ class HubReceiver:
         self.index.record(path, sha256, size, spoke_id)
 
     def _post_promote(self, path: str, size: int, spoke_id: str) -> None:
-        if self.catalog is not None:
-            parts = path.replace("\\", "/").split("/")
-            try:
-                self.catalog.invalidate(parts[0], parts[1])
-            except Exception:
-                pass  # observability must not fail a committed transfer
         act = self.activity.setdefault(
             spoke_id or "unknown", {"files": 0, "bytes": 0, "last_seen": 0})
         act["files"] += 1

@@ -87,7 +87,12 @@ class ContinuousQuery:
             return None
         return start, end
 
-    def run_once(self, spark: SparkSession, root: str, now: dt.datetime | None = None) -> dict:
+    def run_once(self, spark: SparkSession, root: str,
+                 now: dt.datetime | None = None, plan=None) -> dict:
+        """Run the due window, if any. ``plan`` (``sql → DataFrame``,
+        default ``spark.sql``) builds the query — a server passes
+        ``QueryService.plan`` so the CQ reads views fresh from their
+        latest commit, like any other query."""
         now = now or dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
         bounds = self.window_bounds(now)
         if bounds is None:
@@ -97,7 +102,7 @@ class ContinuousQuery:
             start_time=f"TIMESTAMP '{start.isoformat(sep=' ')}'",
             end_time=f"TIMESTAMP '{end.isoformat(sep=' ')}'",
         )
-        result = spark.sql(sql)
+        result = (plan or spark.sql)(sql)
         if "time" not in result.columns:
             # stamp window start (reference continuous_query.go: window-start
             # convention for outputs without an explicit time column)

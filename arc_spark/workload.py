@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+import re
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -59,22 +60,27 @@ def _osum(expr: str) -> str:
     return f"CAST(SUM(CAST({expr} AS DECIMAL(30,6))) AS DOUBLE)"
 
 
+_BYTE_UNITS = {"": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30,
+               "t": 1 << 40, "p": 1 << 50}
+
+
+def _parse_bytes(raw: str) -> int:
+    """A Spark byte-size string ('10485760', '10485760b', '10mb', '1t',
+    '-1') as plain bytes, with Spark's suffixes (b, k/kb … p/pb, case and
+    surrounding space ignored). Raises ValueError on anything else: a
+    size gate must not guess a default for a setting it cannot read."""
+    m = re.fullmatch(r"(-?)(\d+)([kmgtp]?)b?", raw.strip().lower())
+    if m is None:
+        raise ValueError(f"unparseable byte size {raw!r}")
+    n = int(m.group(2)) * _BYTE_UNITS[m.group(3)]
+    return -n if m.group(1) else n
+
+
 def _broadcast_threshold_bytes(spark) -> int:
-    """The session's autoBroadcastJoinThreshold as plain bytes (the conf
-    string may be '10485760', '10485760b', or '10mb'; -1 disables)."""
-    raw = str(spark.conf.get("spark.sql.autoBroadcastJoinThreshold",
-                             "10485760")).strip().lower()
-    units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30}
-    if raw.endswith("b"):
-        raw = raw[:-1]
-    mult = 1
-    if raw and raw[-1] in units:
-        mult = units[raw[-1]]
-        raw = raw[:-1]
-    try:
-        return int(raw) * mult
-    except ValueError:
-        return 10 << 20
+    """The session's autoBroadcastJoinThreshold as plain bytes (-1
+    disables)."""
+    return _parse_bytes(str(spark.conf.get(
+        "spark.sql.autoBroadcastJoinThreshold", "10485760")))
 
 
 def _dims_broadcast_ok(spark, *frames) -> bool:

@@ -865,16 +865,15 @@ class TestDistributedFlush:
 
     def test_large_deferred_backlog_drains_distributed(self, spark, tmp_path):
         """A deferred-msgpack backlog over the threshold decodes+writes on
-        executors; rows, stats, manifest, and catalog notification all
-        match the in-process path."""
+        executors; rows, stats, manifest, and query visibility all match
+        the in-process path."""
         from arc_spark.api import IngestService
         from arc_spark.sources.writer import read_manifest
 
         svc = IngestService(spark, str(tmp_path), max_buffer_rows=10**9,
                             max_buffer_age_s=10**9, defer_decode=True)
         svc.distributed_flush_min_bytes = 1 << 10  # force the path
-        seen = []
-        svc.on_measurements_written = lambda keys: seen.append(sorted(keys))
+        query = QueryService(spark, MeasurementCatalog(spark, str(tmp_path)))
         for j in range(4):
             svc.write_msgpack("bench", self._payload(base=j * 5_000))
         n = svc.flush()
@@ -884,7 +883,9 @@ class TestDistributedFlush:
         back = spark.read.parquet(str(tmp_path / "bench" / "cpu"))
         assert back.count() == 20_000
         assert read_manifest(str(tmp_path), "bench", "cpu")["tag_columns"] == ["host"]
-        assert ("bench", "cpu") in [k for batch in seen for k in batch]
+        # the drain's commit is visible to a reader with no catalog call
+        assert query.execute("SELECT COUNT(*) FROM cpu WHERE 1=1",
+                             db="bench")[0][0] == 20_000
 
     def test_mixed_measurements_and_small_lp_coexist(self, spark, tmp_path):
         from arc_spark.api import IngestService

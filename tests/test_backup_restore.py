@@ -79,7 +79,7 @@ class TestBackupRestore:
             cat.table("db0", "cpu").count()
 
         res = restore_backup(bdir, man["backup_id"], tree,
-                             prefix="year=2024/month=1/day=16", catalog=cat)
+                             prefix="year=2024/month=1/day=16")
         assert res["restored_files"] > 0
         assert cat.table("db0", "cpu").count() == 240
         # day-15 data files excluded by prefix; only the measurement's

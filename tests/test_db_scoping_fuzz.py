@@ -13,7 +13,7 @@ name collisions:
    be bypassed by qualifying;
 3. the native COUNT fast path and the full Spark path agree under
    scoping (the two resolvers, ``_resolve_relation`` and
-   ``_scope_to_db``, must be the same function observably);
+   ``_bind``, must be the same function observably);
 4. non-identifier database names are rejected upfront;
 5. ``SHOW MEASUREMENTS`` defaults to the scoped database.
 

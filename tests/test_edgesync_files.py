@@ -264,7 +264,7 @@ class TestHttpTransport:
         hub_root = str(tmp_path / "hub")
         cat = MeasurementCatalog(spark, hub_root)
         srv = ArcServer(QueryService(spark, cat), port=0)
-        srv.edge_receiver = HubReceiver(hub_root, catalog=cat)
+        srv.edge_receiver = HubReceiver(hub_root)
         srv.start()
         try:
             base = f"http://127.0.0.1:{srv.port}"
@@ -397,7 +397,7 @@ class TestChunkedTransfer:
         hub_root = str(tmp_path / "hub")
         cat = MeasurementCatalog(spark, hub_root)
         srv = ArcServer(QueryService(spark, cat), port=0)
-        srv.edge_receiver = HubReceiver(hub_root, catalog=cat)
+        srv.edge_receiver = HubReceiver(hub_root)
         srv.max_upload_bytes = 64 << 10  # tiny cap to force chunking
         srv.start()
         try:

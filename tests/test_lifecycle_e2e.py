@@ -76,7 +76,7 @@ def test_crash_restart_compact_retain_query(spark, tmp_path):
 
     before = cat.table("m", "cpu").select("host", "time").distinct().count()
     results = compact_measurement(spark, root, "m", "cpu", min_files=2,
-                                  min_age_seconds=0, catalog=cat)
+                                  min_age_seconds=0)
     assert any(not r["skipped"] for r in results)
     assert cat.table("m", "cpu").count() == before  # LWW keeps distinct keys
     # snapshot matches physical state exactly (no orphans after prompt

@@ -627,7 +627,7 @@ class TestCompactionQueryIsolation:
             t.start()
         try:
             compact_measurement(spark, root, "m", "cpu", min_files=2,
-                                min_age_seconds=0, catalog=cat,
+                                min_age_seconds=0,
                                 defer_input_deletion=True)
         finally:
             stop.set()
