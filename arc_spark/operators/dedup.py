@@ -89,175 +89,6 @@ def dedup_last_writer_wins(
 # n-gram Jaccard (exact set similarity via inverted index)
 # --------------------------------------------------------------------------
 
-def _shingle_native_gen(k: int, extra_cols: tuple):
-    """mapInArrow generator: vectorized shingling (r13, VERDICT r12 #1).
-
-    **Kept as an OPT-IN (``ARC_SHINGLE_IMPL=native``), not the default.**
-    The r12 scoping predicted the expr twin's higher-order lambdas were
-    an interpreted CPU sink (~13 s CPU / 5k docs) worth the same 24×
-    class of win as the minhash kernel. The r13 A/B refuted that
-    premise on this Spark (4.1): the marginal cost of the per-word
-    ``xxhash64`` HOF over the words-only projection is ≈0 at every
-    measured factor, and this path — despite hashing in C at ~ns/word —
-    is 1.5× (factor 16) to 2.4–3.6× (factor 64, warm) SLOWER end to
-    end, because shipping the tokenized word arrays across the Arrow
-    boundary costs more than the JVM-side hashing it replaces
-    (SCALING.md r13 carries the full measurement table). Retained
-    because it is bit-exact, differentially fuzzed, and the
-    transfer/compute tradeoff could invert on a corpus whose plan
-    already crosses into Python adjacent to the shingle stage.
-
-    Design (why this sidesteps the r12-scoped ``lower()`` blocker):
-    tokenization (``lower``/``split``) STAYS JVM-side — so the
-    JVM-vs-utf8proc bit-exactness hazard scoped in SCALING.md r12 never
-    arises: no casing decision ever leaves Spark. Only the hashing
-    crosses the Arrow boundary, where:
-
-    - each word is XXH64(utf-8 bytes, seed 42) via the _cxxh C kernel
-      reading the Arrow string buffers (data + int32 offsets) in place —
-      bit-exact vs Spark's xxhash64 (catalyst XXH64.hashUnsafeBytes IS
-      standard XXH64 on little-endian hosts; locked by differential
-      fuzz in tests/test_shingle_native.py, incl. the unicode-casing
-      corpus and stripe-boundary word lengths);
-    - k consecutive word-hashes combine via k chained hashLong steps
-      (Spark's multi-arg xxhash64 folds children with the running hash
-      as seed), 7 numpy uint64 ops per step over the flat gram vector;
-    - array_distinct becomes a segmented first-occurrence unique
-      (stable lexsort by (doc, hash), keep first of each run, re-sort
-      kept positions) — bit-identical ARRAY ORDER to array_distinct.
-
-    NULL contract matches the expr twin exactly: NULL w (NULL text) and
-    <k-word docs yield NULL shingles; a NULL word element hashes to the
-    seed 42 (Spark's null-child rule), though words() never emits one.
-
-    Executor fallback: if the C kernel can't build there (no cc), words
-    hash through the pure-Python scalar twin — slow but bit-identical,
-    so a heterogeneous cluster degrades in speed, never in answers.
-    """
-    def gen(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        from arc_spark.operators._cxxh import (native_xxh64_batch,
-                                               xxh64_bytes)
-
-        P1 = np.uint64(0x9E3779B185EBCA87)
-        P2 = np.uint64(0xC2B2AE3D27D4EB4F)
-        P3 = np.uint64(0x165667B19E3779F9)
-        P4 = np.uint64(0x85EBCA77C2B2AE63)
-        P5 = np.uint64(0x27D4EB2F165667C5)
-        SEED0 = np.uint64(42)
-        fn = native_xxh64_batch()
-        with np.errstate(over="ignore"):
-            for rb in batches:
-                w_idx = rb.schema.get_field_index("w")
-                w = rb.column(w_idx)
-                n = len(w)
-                if n and (w.offset or w.values.offset):
-                    # sliced batch (never seen from Spark's serializer,
-                    # but raw-buffer indexing below assumes offset 0):
-                    # materialize an offset-0 copy
-                    w = w.take(pa.array(np.arange(n, dtype=np.int64)))
-                out_counts = np.zeros(n, np.int64)
-                if n:
-                    loffs = np.asarray(w.offsets, dtype=np.int64)
-                    valid = ~np.asarray(w.is_null())
-                    child = w.values
-                    cn = len(child)
-                else:
-                    loffs = np.zeros(1, np.int64)
-                    valid = np.zeros(0, bool)
-                    child = None
-                    cn = 0
-                if cn:
-                    coffs = np.frombuffer(
-                        child.buffers()[1], np.int32)[:cn + 1]
-                    cdata = child.buffers()[2]
-                    if cdata is None:  # all-empty-string child
-                        cdata = pa.py_buffer(b"")
-                    Wh = np.empty(cn, np.uint64)
-                    if fn is not None:
-                        fn(cdata.address, coffs.ctypes.data, cn, 42,
-                           Wh.ctypes.data)
-                    else:
-                        mv = memoryview(cdata)
-                        for i in range(cn):
-                            Wh[i] = xxh64_bytes(
-                                bytes(mv[coffs[i]:coffs[i + 1]]), 42)
-                    if child.null_count:
-                        # xxhash64(NULL) leaves the seed untouched
-                        Wh[~np.asarray(child.is_valid())] = SEED0
-                else:
-                    Wh = np.empty(0, np.uint64)
-                m = np.diff(loffs)
-                live = valid & (m >= k)
-                ci = (m - (k - 1))[live]
-                total = int(ci.sum())
-                if total:
-                    seg_start = np.cumsum(ci) - ci
-                    base_ix = loffs[:-1][live]
-                    idx = (np.arange(total, dtype=np.int64)
-                           - np.repeat(seg_start, ci)
-                           + np.repeat(base_ix, ci))
-                    # k chained hashLong(word_hash, running_seed) steps
-                    h = np.full(total, SEED0, np.uint64)
-                    tmp = np.empty(total, np.uint64)
-                    for j in range(k):
-                        k1 = Wh[idx + j] * P2
-                        np.left_shift(k1, np.uint64(31), out=tmp)
-                        np.right_shift(k1, np.uint64(33), out=k1)
-                        np.bitwise_or(k1, tmp, out=k1)
-                        k1 *= P1
-                        h += P5 + np.uint64(8)
-                        h ^= k1
-                        np.left_shift(h, np.uint64(27), out=tmp)
-                        np.right_shift(h, np.uint64(37), out=h)
-                        np.bitwise_or(h, tmp, out=h)
-                        h *= P1
-                        h += P4
-                        np.right_shift(h, np.uint64(33), out=tmp)
-                        h ^= tmp
-                        h *= P2
-                        np.right_shift(h, np.uint64(29), out=tmp)
-                        h ^= tmp
-                        h *= P3
-                        np.right_shift(h, np.uint64(32), out=tmp)
-                        h ^= tmp
-                    # segmented order-preserving unique == array_distinct
-                    did = np.repeat(np.arange(len(ci)), ci)
-                    order = np.lexsort((h, did))  # stable: ties keep pos
-                    oh, od = h[order], did[order]
-                    first = np.ones(total, bool)
-                    first[1:] = (od[1:] != od[:-1]) | (oh[1:] != oh[:-1])
-                    keep = np.sort(order[first])
-                    out_vals = h[keep].view(np.int64)
-                    out_counts[live] = np.bincount(
-                        did[keep], minlength=len(ci))
-                else:
-                    out_vals = np.empty(0, np.int64)
-                offs_py = np.concatenate(
-                    ([0], np.cumsum(out_counts))).tolist()
-                # NULL both NULL-w rows AND <k-word rows (the expr twin's
-                # CASE emits NULL for both; zero-length neighbors keep
-                # the surviving offsets consistent)
-                for i in np.flatnonzero(~(valid & (m >= k))):
-                    offs_py[i] = None  # null offset start => null list
-                shingles = pa.ListArray.from_arrays(
-                    pa.array(offs_py, type=pa.int32()),
-                    pa.array(out_vals, type=pa.int64()))
-                cols, names = [], []
-                for f_i in range(rb.num_columns):
-                    if f_i == w_idx:
-                        continue
-                    cols.append(rb.column(f_i))
-                    names.append(rb.schema.field(f_i).name)
-                cols.append(shingles)
-                names.append("shingles")
-                yield pa.RecordBatch.from_arrays(cols, names)
-
-    return gen
-
-
 SHINGLE_TASK_BYTES = int(os.environ.get(
     "ARC_SHINGLE_TASK_BYTES", str(128 << 10)))
 
@@ -324,34 +155,12 @@ def _shingled(df: DataFrame, id_col: str, text_col: str, k: int,
     streaming frames, and corpora big enough to fill the cluster, keep
     the full width — at 100 TB the clamp always resolves to
     defaultParallelism, so this changes nothing off-local.
-
-    r13: ``ARC_SHINGLE_IMPL=native`` opts into the vectorized twin
-    (:func:`_shingle_native_gen` via ``mapInArrow`` — C XXH64 over the
-    Arrow string buffers + numpy gram combine; tokenization stays
-    JVM-side). BIT-IDENTICAL output including array order (differential
-    fuzz in tests/test_shingle_native.py), but measured SLOWER at every
-    factor on this corpus (the Arrow transfer of the word arrays
-    outweighs the interpreted-HOF cost it removes — see the generator
-    docstring and SCALING.md r13), so the expression path stays the
-    default.
     """
-    import os as _os
-
-    spark = df.sparkSession
     n = _shingle_spread_width(df)
     extra = [F.col(c) for c in extra_cols]
     base = df.repartition(n).select(
         F.col(id_col).alias("doc"), *extra, words(text_col).alias("w")
     )
-    if _os.environ.get("ARC_SHINGLE_IMPL", "expr") == "native":
-        from pyspark.sql.types import (ArrayType, LongType, StructField,
-                                       StructType)
-
-        fields = [base.schema["doc"]]
-        fields += [base.schema[c] for c in extra_cols]
-        fields += [StructField("shingles", ArrayType(LongType()), True)]
-        return base.mapInArrow(_shingle_native_gen(k, tuple(extra_cols)),
-                               StructType(fields))
     hw = base.select("doc", *extra,
                      F.expr("transform(w, x -> xxhash64(x))").alias("hw"))
     tuple_hash = ",".join(f"element_at(hw, i + {j})" for j in range(k))

@@ -897,3 +897,26 @@ class TestBigramFluencyPastGatePersist:
             clear_registry()
         assert list(jobs) == [], (
             f"past-gate q74 ran Spark jobs at construction: {jobs}")
+
+
+def test_minhash_numpy_empty_shingles_null_sig():
+    # np.minimum.reduceat misbehaves on zero-length segments (returns the
+    # NEXT doc's first slot / IndexError at the tail) — an empty shingle
+    # array must yield a NULL signature like NULL shingles do, on every
+    # position including the last
+    import pandas as pd
+
+    from arc_spark.operators.dedup import _minhash_numpy_gen
+
+    gen = _minhash_numpy_gen(4, ())
+    pdf = pd.DataFrame({
+        "doc": [1, 2, 3, 4],
+        "shingles": [[11, 22], [], [33], []],
+    })
+    out = pd.concat(list(gen([pdf])))
+    sig = dict(zip(out["doc"], out["sig"]))
+    sz = dict(zip(out["doc"], out["sz"]))
+    assert sig[2] is None and sig[4] is None
+    assert pd.isna(sz[2]) and pd.isna(sz[4])
+    assert sig[1] is not None and len(sig[1]) == 4 and sz[1] == 2
+    assert sig[3] is not None and sz[3] == 1

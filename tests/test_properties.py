@@ -1301,7 +1301,7 @@ class TestIncrementalDedupDifferential:
 
     # r13 suite-budget trim: 12 -> 7 (each example is three
     # full Spark pipelines; the shingle/band machinery is
-    # further locked by test_shingle_native + q80's oracle).
+    # further locked by q80's oracle).
     # ARC_FULL_FUZZ=1 restores the full count (r14 knob).
     @settings(max_examples=12 if _FULL_FUZZ else 7, deadline=None)
     @given(st.data())
