@@ -11,8 +11,10 @@ mirrors the reference's nullable ExpiresAt (auth.go:72): an expired token
 verifies as None exactly like a revoked one. ``rotate`` re-mints the
 secret in place, keeping name/permissions (the reference's rotate path);
 ``last_used_at`` is stamped on successful verification (auth.go
-recordLastUsed — ours writes through; the reference batches, an
-optimization that matters at its request rates, not at ours).
+recordLastUsed), at most once per ``LAST_USED_RESOLUTION_S`` per token:
+a stamp younger than that is left alone, so a busy token costs one
+SQLite write a minute, not one per request (the reference batches its
+stamps for the same reason).
 
 ``AuthStore.tables_view()`` adapts the store to the mapping protocol
 ``QueryService.allowed_tables`` expects (``token in m`` / ``m[token]``),
@@ -28,6 +30,11 @@ import secrets
 import sqlite3
 import threading
 import time
+
+
+#: a verify rewrites ``last_used_at`` only once the stored stamp is at
+#: least this old
+LAST_USED_RESOLUTION_S = 60.0
 
 
 def _hash(token: str) -> str:
@@ -154,25 +161,28 @@ class AuthStore:
     # -- verification ------------------------------------------------------
     def verify(self, token: str, now: float | None = None) -> dict | None:
         """(name, allowed set | None) for a live, unexpired token, else
-        None. Stamps ``last_used_at`` on success."""
+        None. Stamps ``last_used_at`` on success when the stored stamp is
+        older than ``LAST_USED_RESOLUTION_S``."""
         if not token:
             return None
         t = now if now is not None else time.time()
         with self._lock:
             row = self._db.execute(
-                "SELECT name, allowed_tables, expires_at, permissions"
-                " FROM tokens WHERE token_hash = ? AND revoked = 0",
+                "SELECT name, allowed_tables, expires_at, permissions,"
+                " last_used_at FROM tokens"
+                " WHERE token_hash = ? AND revoked = 0",
                 (_hash(token),),
             ).fetchone()
             if row is None:
                 return None
-            name, allowed, expires_at, perms = row
+            name, allowed, expires_at, perms, last_used = row
             if expires_at is not None and t >= expires_at:
                 return None
-            self._db.execute(
-                "UPDATE tokens SET last_used_at = ? WHERE name = ?", (t, name)
-            )
-            self._db.commit()
+            if last_used is None or t - last_used >= LAST_USED_RESOLUTION_S:
+                self._db.execute(
+                    "UPDATE tokens SET last_used_at = ? WHERE name = ?",
+                    (t, name))
+                self._db.commit()
         # NULL permissions = pre-migration row → the read,write default;
         # stored-empty = deliberate RBAC-only token → empty list
         if perms is None:

@@ -614,23 +614,18 @@ class MeasurementCatalog:
         no data pages (the reference's ~1 ms COUNT(*) served from DuckDB
         metadata; here the snapshot file list + footer num_rows). Sums
         over every tier exactly like :meth:`table`; cached per committed
-        state (:meth:`_register_state`), so any commit recomputes and an
-        unmanaged tier never caches."""
+        state (:meth:`_register_state`), so any commit recomputes."""
         from arc_spark import snapshots
 
         key = (db, measurement)
         state = self._register_state(db, measurement)
         hit = self._count_cache.get(key)
-        if hit is not None and state is not None and hit[0] == state:
+        if hit is not None and hit[0] == state:
             return hit[1]
         total = 0
         for p in self.paths(db, measurement):
             bk = backend_for(p)
-            files = snapshots.data_files(p, bk=bk)
-            if files is None:
-                files = [bk.join(p, r)
-                         for r in snapshots.live_glob(p, bk=bk)]
-            for f in files:
+            for f in snapshots.data_files(p, bk=bk):
                 # per-FILE counts are immutable (parquet files never
                 # mutate in place), so a new commit (any flush) costs
                 # O(new files) footer reads, not O(all files)
@@ -692,7 +687,7 @@ class MeasurementCatalog:
         key = (db, measurement, col)
         state = self._register_state(db, measurement)
         hit = self._stats_cache.get(key)
-        if hit is not None and state is not None and hit[0] == state:
+        if hit is not None and hit[0] == state:
             return hit[1]
         import pyarrow as pa
 
@@ -704,11 +699,7 @@ class MeasurementCatalog:
         col_type = None
         for p in self.paths(db, measurement):
             bk = backend_for(p)
-            files = snapshots.data_files(p, bk=bk)
-            if files is None:
-                files = [bk.join(p, r)
-                         for r in snapshots.live_glob(p, bk=bk)]
-            for f in files:
+            for f in snapshots.data_files(p, bk=bk):
                 md = bk.parquet_metadata(f)
                 sch = md.schema.to_arrow_schema()
                 if col not in sch.names:
@@ -755,15 +746,15 @@ class MeasurementCatalog:
         'No files found' yields an EMPTY DataFrame, not an error — matching
         the reference (internal/api/query.go:2035-2037).
 
-        Snapshot-managed tiers (arc_spark.snapshots) resolve the COMMITTED
-        file list instead of globbing the directory: a crashed flush's
-        stray files are invisible until their commit, the reference's
-        Raft-manifest / Iceberg ReplaceDataFiles atomicity. The explicit
-        file list still carries ``basePath``, so hive partition columns
-        and Catalyst partition pruning behave exactly as a directory scan.
-        Unmanaged trees keep the glob path.
+        Every tier resolves its COMMITTED file list (arc_spark.snapshots)
+        instead of globbing the directory: a crashed flush's stray files
+        are invisible until their commit, the reference's Raft-manifest /
+        Iceberg ReplaceDataFiles atomicity. A tier that was never
+        committed is adopted on this first read. The explicit file list
+        still carries ``basePath``, so hive partition columns and
+        Catalyst partition pruning behave exactly as a directory scan.
 
-        A managed tier whose files share one footer schema reuses the
+        A tier whose files share one footer schema reuses the
         schema Spark inferred for that shape before (:meth:`_schema_key`),
         so only the first read of each shape runs the inference job.
         """
@@ -776,25 +767,16 @@ class MeasurementCatalog:
         for p in self.paths(db, measurement):
             bk = backend_for(p)
             files = snapshots.data_files(p, bk=bk)
-            key = None
-            if files is None:
-                # unmanaged: directory glob; a tier emptied by compaction/
-                # tiering (dir skeleton, no files) cannot be read — skip
-                if not bk.find_files(p, suffix=".parquet"):
-                    continue
-                sources = [bk.spark_url(p)]
-            elif not files:
-                continue  # managed but empty snapshot
-            else:
-                sources = [bk.spark_url(f) for f in files]
-                key = self._schema_key(bk, p, files, merge_schema)
+            if not files:
+                continue  # empty snapshot: a dir skeleton can't be read
+            key = self._schema_key(bk, p, files, merge_schema)
             reader = self.spark.read.option("basePath", bk.spark_url(p))
             if merge_schema:
                 reader = reader.option("mergeSchema", "true")
             schema = self._schema_memo.get(key) if key is not None else None
             if schema is not None:
                 reader = reader.schema(schema)
-            df = reader.parquet(*sources)
+            df = reader.parquet(*[bk.spark_url(f) for f in files])
             if key is not None and schema is None:
                 if len(self._schema_memo) >= 256:
                     self._schema_memo.clear()
@@ -883,9 +865,6 @@ class MeasurementCatalog:
                 files = snapshots.files_at(p, snapshot, bk=bk)
             else:
                 files = snapshots.data_files(p, bk=bk)
-            if files is None:
-                files = [bk.join(p, r)
-                         for r in snapshots.live_glob(p, bk=bk)]
             if time_range is not None:
                 all_files = files
                 # window from the path RELATIVE to the measurement root —
@@ -1005,25 +984,19 @@ class MeasurementCatalog:
         return {name for name, (owner, _) in list(self._views.items())
                 if owner == key}
 
-    def _register_state(self, db: str, measurement: str) -> tuple | None:
+    def _register_state(self, db: str, measurement: str) -> tuple:
         """The freshness fingerprint of a measurement: (tier path,
         committed snapshot version) per tier — one directory listing
-        each, no footer I/O. Views (:meth:`register`) and the footer
-        caches (:meth:`count_rows`, :meth:`column_stats`) are fresh
-        exactly when this is unchanged; every engine write path commits
-        a snapshot, which moves it. None when any tier is UNMANAGED (no
-        snapshot chain): freshness can't be proven there, so readers
-        rebuild every time (globs are the source of truth and may drift
-        silently)."""
+        each, no footer I/O (a never-committed tier is adopted first).
+        Views (:meth:`register`) and the footer caches
+        (:meth:`count_rows`, :meth:`column_stats`) are fresh exactly
+        when this is unchanged; every engine write path commits a
+        snapshot, and :meth:`invalidate` re-adopts a hand-edited tree,
+        so both move it."""
         from arc_spark import snapshots
 
-        st = []
-        for p in self.paths(db, measurement):
-            vers = snapshots.latest_version(p, bk=backend_for(p))
-            if vers is None:
-                return None
-            st.append((p, vers))
-        return tuple(st)
+        return tuple((p, snapshots.latest_version(p, bk=backend_for(p)))
+                     for p in self.paths(db, measurement))
 
     def register(self, db: str, measurement: str, view: str | None = None) -> str:
         """Bind temp view ``view`` (default ``<db>_<measurement>``) to the
@@ -1034,34 +1007,34 @@ class MeasurementCatalog:
         key = (db, measurement)
         cur = self._views.get(name)
         state = self._register_state(db, measurement)
-        if cur == (key, state) and state is not None:
+        if cur == (key, state):
             return name  # same owner, nothing committed since the build
         self.table(db, measurement).createOrReplaceTempView(name)
         with self._views_lock:
             self._views[name] = (key, state)
         # a cached pruned plan pins the view's old plan: a new owner or
-        # a new committed state bumps the epoch. Only an unmanaged tier's
-        # rebuild (state None, unprovable either way) keeps it —
-        # invalidate() is that tier's hook.
-        if cur != (key, state):
-            self.epoch += 1
+        # a new committed state bumps the epoch
+        self.epoch += 1
         return name
 
     def view_binding(self, name: str) -> tuple[str, str] | None:
         """Which (db, measurement) the live view ``name`` reads, or None
         when no catalog view has that name."""
-        cur = self._views.get(name)
-        return cur[0] if cur is not None else None
+        bound = self._views.get(name)
+        return bound[0] if bound is not None else None
 
     def invalidate(self, db: str, measurement: str) -> None:
         """Hook for a change to a measurement's files that committed no
-        snapshot (files edited outside the engine's write paths, e.g. in
-        an unmanaged tree). Marks the measurement's views stale, so the
-        next :meth:`register` rebuilds them; refreshes Spark's cached
-        plans by path; evicts the measurement's decoded-file cache
-        entries; bumps the epoch. It never rebuilds a view: engine
-        writers commit a snapshot, and readers pull that through
-        :meth:`register`."""
+        snapshot (files dropped in or deleted by hand, outside the
+        engine's write paths). Re-adopts every tier
+        (:func:`arc_spark.snapshots.adopt`: the snapshot becomes the
+        live files), marks the measurement's views stale so the next
+        :meth:`register` rebuilds them, refreshes Spark's cached plans
+        by path, evicts the measurement's decoded-file cache entries and
+        bumps the epoch. It never rebuilds a view: engine writers commit
+        a snapshot, and readers pull that through :meth:`register`."""
+        from arc_spark import snapshots
+
         key = (db, measurement)
         with self._views_lock:
             for name, (owner, _) in self._views.items():
@@ -1069,6 +1042,7 @@ class MeasurementCatalog:
                     self._views[name] = (key, None)
         for p in self.paths(db, measurement):
             bk = backend_for(p)
+            snapshots.adopt(p, bk=bk)
             self.spark.catalog.refreshByPath(bk.spark_url(p))
             # trailing separator so 'cpu' never evicts a sibling whose
             # name shares the prefix ('cpu_total'), and only THIS

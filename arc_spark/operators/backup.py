@@ -166,9 +166,11 @@ def restore_backup(
     measurement (``"year=2024/month=1/day=15"`` restores one day — the
     partial-restore contract on the hive layout). Existing live files are
     kept unless ``overwrite=True``. Catalog views over a restored
-    measurement rebuild on their next read: a merge commits a snapshot,
-    and a whole-measurement copy lands unmanaged, which views always
-    re-read."""
+    measurement rebuild on their next read: a merge commits the restored
+    files as a new snapshot, and a whole-measurement copy carries the
+    backed-up snapshot chain (so files the source never committed stay
+    invisible; a tree backed up before its first commit is adopted on its
+    first read)."""
     src = backend_for(backup_root)
     dst = backend_for(root)
     manifest = src.read_json(
@@ -229,8 +231,7 @@ def restore_backup(
                     from arc_spark import snapshots
 
                     # publish the restored files in one commit so
-                    # snapshot readers see the partial restore (on an
-                    # unmanaged tree this bootstraps from the glob)
+                    # snapshot readers see the partial restore
                     snapshots.commit(dst_meas, add=restored_data, bk=dst)
                 touched.append((d, m))
     return {"backup_id": backup_id, "restored_files": restored,

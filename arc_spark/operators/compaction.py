@@ -89,20 +89,17 @@ def compaction_candidates(
     now: float | None = None,
 ) -> list[str]:
     """Partition dirs eligible for compaction (reference tier policy).
-    On a snapshot-managed tree only COMMITTED files count — deferred-
-    deletion orphans must not keep a fully-compacted partition eligible."""
+    Only COMMITTED files count — deferred-deletion orphans must not keep
+    a fully-compacted partition eligible."""
     from arc_spark import snapshots
 
     bk = backend_for(meas_path)
     now = now if now is not None else time.time()
-    cur = snapshots.current(meas_path, bk=bk)
-    committed = ({bk.join(meas_path, r) for r in cur[1]}
-                 if cur is not None else None)
+    committed = set(snapshots.data_files(meas_path, bk=bk))
     out = []
     for d in partition_dirs(meas_path):
-        files = bk.list_files(d, suffix=".parquet")
-        if committed is not None:
-            files = [f for f in files if f in committed]
+        files = [f for f in bk.list_files(d, suffix=".parquet")
+                 if f in committed]
         if len(files) < min_files:
             continue
         newest = max(bk.mtime(f) for f in files)
@@ -123,10 +120,10 @@ def compact_partition_dir(
 ) -> dict:
     """Compact one hive partition dir: N files → ⌈N/batch⌉, sorted + deduped.
 
-    ``defer_input_deletion`` (snapshot-managed trees only): skip the
-    physical removal of replaced inputs — the snapshot commit already made
-    them invisible, so an in-flight query that resolved the PREVIOUS
-    snapshot can finish reading them (no missing-file race). The orphans
+    ``defer_input_deletion``: skip the physical removal of replaced
+    inputs — the snapshot commit already made them invisible, so an
+    in-flight query that resolved the PREVIOUS snapshot can finish
+    reading them (no missing-file race). The orphans
     are the reconciler's ``orphan_data`` class, swept once aged. This is
     the lakehouse deletion discipline (Iceberg expire-snapshots); prompt
     deletion (default) matches the reference's immediate swap.
@@ -156,16 +153,16 @@ def compact_partition_dir(
     tags = manifest.get("tag_columns", [])
     sort_keys = [c for c in manifest.get("sort_keys", []) if c != "time"] + ["time"]
 
-    inputs = bk.list_files(part_dir, suffix=".parquet")
-    # on a snapshot-managed tree, compact only COMMITTED files: an orphan
-    # (crash-leaked, reader-invisible) merged in would resurrect rows the
-    # visible state never had — orphans are the reconciler's to sweep
+    # compact only COMMITTED files: an orphan (crash-leaked,
+    # reader-invisible) merged in would resurrect rows the visible state
+    # never had — orphans are the reconciler's to sweep. Resolving the
+    # snapshot also adopts a never-committed tree BEFORE any job manifest
+    # is written, so the recorded commit is recovery's only pivot.
     from arc_spark import snapshots
 
-    cur = snapshots.current(meas_path, bk=bk)
-    if cur is not None:
-        committed = {bk.join(meas_path, r) for r in cur[1]}
-        inputs = [f for f in inputs if f in committed]
+    committed = set(snapshots.data_files(meas_path, bk=bk))
+    inputs = [f for f in bk.list_files(part_dir, suffix=".parquet")
+              if f in committed]
     if len(inputs) <= 1:
         return {"partition": part_dir, "inputs": len(inputs), "skipped": True}
 
@@ -284,18 +281,15 @@ def _compact_file_batch(
 def recover_incomplete(meas_path: str) -> int:
     """Sweep partial compactions after a crash.
 
-    Decision per leftover job manifest (reference manifest.go recovery).
-    On a SNAPSHOT-MANAGED tree the commit is the pivot: outputs present
-    in the current snapshot → the swap became visible, ROLL FORWARD
-    (apply any remaining recorded commits — cross-tree jobs like the
-    daily tier record two — then finish removing inputs); outputs not in
-    the snapshot → readers never saw them, ROLL BACK by deleting them.
-    On an unmanaged tree the legacy rule applies:
-    - every input still present → publish did not complete input removal;
-      ROLL BACK (readers see the exact pre-compaction file set).
-    - any input already removed → moves strictly precede input removal,
-      so publication finished; ROLL FORWARD.
-    Tmp dirs and manifests are dropped either way."""
+    Decision per leftover job manifest (reference manifest.go recovery):
+    the recorded commit is the pivot. Outputs present in the destination
+    tree's current snapshot → the swap became visible, ROLL FORWARD
+    (apply the recorded commits — cross-tree jobs like the daily tier
+    record two — then finish removing inputs); otherwise (no outputs
+    published yet, or not in the snapshot) readers never saw them, ROLL
+    BACK by deleting them. Every compaction adopts its trees before it
+    writes a job manifest, so the snapshot is authoritative here. Tmp
+    dirs and manifests are dropped either way."""
     from arc_spark import snapshots
 
     bk = backend_for(meas_path)
@@ -304,27 +298,17 @@ def recover_incomplete(meas_path: str) -> int:
         job = bk.read_json(m)
         inputs = job.get("inputs", [])
         published = job.get("published", [])
-        commits = job.get("commits")
-        forward = None
-        if commits and published:
-            dst_tree = commits[0].get("tree", "")
-            committed = (snapshots.contains(dst_tree, published[0])
-                         if dst_tree else None)
-            if committed is not None:
-                forward = committed
-        if forward is None:
-            # inputs may live on another tree/backend (daily-tier jobs)
-            forward = bool(inputs) and any(
-                not backend_for(f).exists(f) for f in inputs)
+        commits = job.get("commits") or []
+        forward = bool(commits and published) and snapshots.contains(
+            commits[0]["tree"], published[0])
         if forward:
-            # outputs are visible (or input removal already began):
-            # finish the swap — re-apply commits (idempotent set ops on
-            # the snapshot) then remove surviving inputs
-            for c in commits or []:
-                tree = c.get("tree", "")
-                if tree:
-                    snapshots.commit(tree, add=c.get("add", []),
-                                     remove=c.get("remove", []))
+            # outputs are visible: finish the swap — re-apply commits
+            # (idempotent set ops on the snapshot; inputs may live on
+            # another tree/backend for daily-tier jobs) then remove
+            # surviving inputs
+            for c in commits:
+                snapshots.commit(c["tree"], add=c.get("add", []),
+                                 remove=c.get("remove", []))
             for f in inputs:
                 backend_for(f).remove_file_if_exists(f)
         else:
@@ -359,14 +343,11 @@ def daily_candidates(
 
     bk = backend_for(meas_path)
     now = now if now is not None else time.time()
-    cur = snapshots.current(meas_path, bk=bk)
-    committed = ({bk.join(meas_path, r) for r in cur[1]}
-                 if cur is not None else None)
+    committed = set(snapshots.data_files(meas_path, bk=bk))
     out = []
     for d in day_dirs(meas_path):
-        files = bk.find_files(d, suffix=".parquet")
-        if committed is not None:
-            files = [f for f in files if f in committed]
+        files = [f for f in bk.find_files(d, suffix=".parquet")
+                 if f in committed]
         if len(files) < min_files:
             continue
         newest = max(bk.mtime(f) for f in files)
@@ -409,14 +390,12 @@ def compact_day(
     tags = manifest.get("tag_columns", [])
     sort_keys = [c for c in manifest.get("sort_keys", []) if c != "time"] + ["time"]
 
-    inputs = src_bk.find_files(day_dir, suffix=".parquet")
     src_meas_path = src_bk.join(root, db, measurement)
     from arc_spark import snapshots
 
-    cur = snapshots.current(src_meas_path, bk=src_bk)
-    if cur is not None:
-        committed = {src_bk.join(src_meas_path, r) for r in cur[1]}
-        inputs = [f for f in inputs if f in committed]
+    committed = set(snapshots.data_files(src_meas_path, bk=src_bk))
+    inputs = [f for f in src_bk.find_files(day_dir, suffix=".parquet")
+              if f in committed]
     if not inputs:
         return {"day": day_dir, "inputs": 0, "skipped": True}
 
@@ -442,6 +421,11 @@ def compact_day(
     published = [dst_bk.join(out_day_dir, f"{measurement}_daily_{ts}_0.parquet")]
     dst_meas = dst_bk.join(daily_root, db, measurement)
     src_meas = src_meas_path
+    # adopt the daily tree (a fresh one, even an object-store prefix that
+    # is no directory yet, commits its empty snapshot) before the job
+    # manifest exists: an output moved in by a job that crashes before
+    # its commit then stays invisible, and recovery rolls it back
+    snapshots.adopt(dst_meas, bk=dst_bk)
     # two trees change: the daily tier gains the merged file, the hot tier
     # loses the day's files. Recorded in the job manifest so
     # recover_incomplete can re-apply BOTH on roll-forward — otherwise a
@@ -474,8 +458,6 @@ def compact_day(
     # twice (union read, transient, healed by recovery) rather than not
     # at all. Inputs removed only after both commits (recover rolls
     # forward past here).
-    from arc_spark import snapshots
-
     snapshots.commit(dst_meas, add=published, bk=dst_bk)
     snapshots.commit(src_meas, remove=inputs, bk=src_bk)
     src_bk.remove_tree(day_dir)

@@ -175,11 +175,7 @@ def export_delta_log(meas_path: str, bk=None, table_name: str | None = None,
 
 
 def _committed_rels(meas_path: str, bk) -> list[str]:
-    files = snapshots.data_files(meas_path, bk=bk)
-    if files is None:
-        # unmanaged tree: adopt the live glob, exactly like a first commit
-        return sorted(snapshots.live_glob(meas_path, bk=bk))
-    return sorted(bk.relpath(f, meas_path).replace("\\", "/") for f in files)
+    return snapshots.current(meas_path, bk=bk)[1]
 
 
 EXPORT_COMMIT_RETRIES = 5

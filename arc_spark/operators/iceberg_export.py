@@ -256,10 +256,7 @@ def _current_metadata(bk, table_path: str) -> tuple[int, dict | None]:
 
 
 def _committed_rels(meas_path: str, bk) -> list[str]:
-    files = snapshots.data_files(meas_path, bk=bk)
-    if files is None:
-        return sorted(snapshots.live_glob(meas_path, bk=bk))
-    return sorted(bk.relpath(f, meas_path).replace("\\", "/") for f in files)
+    return snapshots.current(meas_path, bk=bk)[1]
 
 
 def export_iceberg(meas_path: str, bk=None, table_name: str | None = None,

@@ -128,15 +128,12 @@ def apply_retention(
 
 
 def _read_live(spark: SparkSession, bk, meas_path: str):
-    """Scan the measurement's LIVE file set: the committed snapshot on a
-    managed tree (orphans invisible, exactly what readers see), the
-    directory glob otherwise. Returns None when there is nothing to read."""
+    """Scan the measurement's LIVE file set: the committed snapshot
+    (orphans invisible, exactly what readers see). Returns None when
+    there is nothing to read."""
     from arc_spark import snapshots
 
     files = snapshots.data_files(meas_path, bk=bk)
-    if files is None:
-        return spark.read.option("mergeSchema", "true").parquet(
-            bk.spark_url(meas_path))
     if not files:
         return None
     return spark.read.option("mergeSchema", "true").parquet(

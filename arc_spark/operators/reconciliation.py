@@ -223,9 +223,9 @@ class Reconciler:
                     if not run.dry_run:
                         run.recovered_jobs += recover_incomplete(meas_path)
 
-                # current committed file set (None → unmanaged tree)
-                cur = snapshots.current(meas_path, bk=bk)
-                snap_set = set(cur[1]) if cur is not None else None
+                # current committed file set (a dry run adopts nothing)
+                snap_set = set(snapshots.current(
+                    meas_path, bk=bk, publish=not run.dry_run)[1])
                 seen_rels: set[str] = set()
 
                 # 2) walk every file once, classify the rest
@@ -266,11 +266,10 @@ class Reconciler:
                                     and self._aged_out(bk, f, now, run)):
                                 self._delete(bk, f, run)
                             continue
-                        if (snap_set is not None
-                                and "/".join(parts[2:]) not in snap_set):
-                            # managed tree, in-layout, NOT committed: the
-                            # precise orphan class — invisible to readers,
-                            # safe to sweep once aged (still opt-in)
+                        if "/".join(parts[2:]) not in snap_set:
+                            # in-layout, NOT committed: the precise
+                            # orphan class — invisible to readers, safe to
+                            # sweep once aged (still opt-in)
                             run.note("orphan_data", f)
                             if (self.delete_stray_data
                                     and self._aged_out(bk, f, now, run)):
@@ -298,12 +297,11 @@ class Reconciler:
                 #    loss): heal the manifest so reads recover — the
                 #    manifest-vs-walk diff repair, computed from the walk
                 #    above (no extra stat calls)
-                if snap_set is not None:
-                    missing = sorted(snap_set - seen_rels)
-                    for rel_m in missing:
-                        run.note("missing_data", bk.join(meas_path, rel_m))
-                    if missing and not run.dry_run:
-                        snapshots.commit(meas_path, remove=missing, bk=bk)
+                missing = sorted(snap_set - seen_rels)
+                for rel_m in missing:
+                    run.note("missing_data", bk.join(meas_path, rel_m))
+                if missing and not run.dry_run:
+                    snapshots.commit(meas_path, remove=missing, bk=bk)
         # 4) staged ingest payload files: the bulk-LP and distributed-drain
         #    paths stage payloads under root-level dot dirs and remove them
         #    in a finally — a driver crash mid-job leaks them (hundreds of

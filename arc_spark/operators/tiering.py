@@ -9,10 +9,9 @@ invisible to queries except for storage latency.
 
 The hot and cold roots may live on DIFFERENT storage backends
 (:mod:`arc_spark.storage`; reference internal/storage/backend.go) — the
-canonical deployment tiers local NVMe to an object store. Same-backend
-moves try a rename first (free on local/HDFS); cross-backend or
-no-rename stores take the copy-verify-delete path, and a partition is
-only deleted from hot after its cold copy holds every hot file (crash
+canonical deployment tiers local NVMe to an object store. Every move is
+copy → commit cold add → commit hot remove → delete hot, and a partition
+is only deleted from hot after its cold copy holds every hot file (crash
 leaves a duplicate, never a loss — the catalog's union read tolerates
 the duplicate window).
 """
@@ -56,19 +55,16 @@ def migrate_to_cold(
 
     hot_bk = backend_for(root)
     cold_bk = backend_for(cold_root)
-    same_backend = hot_bk is cold_bk
     now = now or dt.datetime.now()
     cutoff = now - dt.timedelta(days=older_than_days)
     hot_meas = hot_bk.join(root, db, measurement)
     cold_meas = cold_bk.join(cold_root, db, measurement)
-    # snapshot-managed tiers take the copy protocol even on one backend:
-    # a whole-dir rename would yank files out from under the committed
-    # hot snapshot before any commit could follow (readers error on
-    # missing files), whereas copy → commit cold add → commit hot remove
-    # → delete hot is re-runnable from every crash point (worst window:
-    # the day visible on both tiers, healed by the next run)
-    managed = (snapshots.is_managed(hot_meas, bk=hot_bk)
-               or snapshots.is_managed(cold_meas, bk=cold_bk))
+    # copy even on one backend: a whole-dir rename would yank files out
+    # from under the committed hot snapshot before any commit could
+    # follow (readers error on missing files), whereas copy → commit cold
+    # add → commit hot remove → delete hot is re-runnable from every
+    # crash point (worst window: the day visible on both tiers, healed by
+    # the next run)
     moved: list[str] = []
     for day_dir in _day_dirs(hot_meas):
         if _dir_day(day_dir) >= cutoff:
@@ -77,13 +73,6 @@ def migrate_to_cold(
         dest = cold_bk.join(cold_meas, rel)
         cold_bk.mkdirs(cold_bk.dirname(dest))
         if not cold_bk.exists(dest):
-            if same_backend and not managed:
-                try:
-                    hot_bk.move_dir(day_dir, dest)  # rename fast path
-                    moved.append(rel)
-                    continue
-                except OSError:
-                    pass
             pafs.copy_files(
                 hot_bk.fs_path(day_dir),
                 cold_bk.fs_path(dest),
@@ -94,11 +83,12 @@ def migrate_to_cold(
         hot_files = {hot_bk.basename(f) for f in hot_bk.find_files(day_dir)}
         cold_files = {cold_bk.basename(f) for f in cold_bk.find_files(dest)}
         if hot_files <= cold_files:
-            if managed:
-                cold_add = [f for f in cold_bk.find_files(dest, suffix=".parquet")]
-                hot_del = hot_bk.find_files(day_dir, suffix=".parquet")
-                snapshots.commit(cold_meas, add=cold_add, bk=cold_bk)
-                snapshots.commit(hot_meas, remove=hot_del, bk=hot_bk)
+            snapshots.commit(
+                cold_meas, add=cold_bk.find_files(dest, suffix=".parquet"),
+                bk=cold_bk)
+            snapshots.commit(
+                hot_meas, remove=hot_bk.find_files(day_dir, suffix=".parquet"),
+                bk=hot_bk)
             hot_bk.remove_tree(day_dir)
             moved.append(rel)
     return moved

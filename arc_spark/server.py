@@ -476,7 +476,7 @@ def _logs(h):
     # recent-request ring buffer (reference /api/v1/logs)
     limit = _int_arg(h.args, "limit", 100)
     with h.arc._metrics_lock:
-        entries = list(h.arc.logs)[-max(limit, 0):]
+        entries = list(h.arc.logs)[-limit:] if limit > 0 else []
     h.json(200, {"logs": entries})
 
 

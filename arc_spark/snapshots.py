@@ -28,13 +28,18 @@ This module is the Spark-native equivalent. Per measurement directory
   columns and Catalyst partition pruning work exactly as they do for a
   directory scan, because the file index is just pre-resolved.
 
-Adoption is incremental: a tree without ``_arc_snapshots`` is
-*unmanaged* and reads fall back to the directory glob. The FIRST commit
-on such a tree bootstraps from a glob of the live files, so existing
-data stays visible. All engine write paths (flush, distributed drains,
-compaction, delete, retention, tiering, restore) commit; ad-hoc files
-dropped into a managed tree by hand are invisible until a commit or
-snapshot removal — which is the point.
+Every tree is managed. A tree that was never committed (hand-built,
+written before the snapshot layer, or restored from a backup taken
+before its first commit) is ADOPTED the first time anything resolves
+it: :func:`current` publishes a full snapshot of its live files
+(:func:`live_glob`) and returns it, so existing data stays visible and
+every consumer sees one kind of tree. After that, files dropped in by
+hand are invisible and files deleted by hand make reads fail loudly,
+until :func:`adopt` runs again (``MeasurementCatalog.invalidate`` is
+that hook) — which is the point. Re-adoption never commits a file the
+retained history replaced or a leftover compaction job recorded
+(:func:`_retired`). A missing directory reads as the empty snapshot
+``(0, [])`` and nothing is written.
 
 Concurrency: threads in one process serialize on an in-process lock;
 across PROCESSES, :func:`commit` is a version compare-and-swap — the
@@ -81,15 +86,16 @@ PRUNE_MIN_AGE_S = 60.0
 # guarantees the count-based prune can never cut a live fold chain.
 FOLD_EVERY = 8
 
-_locks: dict[str, threading.Lock] = {}
+# re-entrant: adopt() holds the tree's lock across its check-then-commit
+_locks: dict[str, threading.RLock] = {}
 _locks_guard = threading.Lock()
 
 
-def _lock_for(meas_path: str) -> threading.Lock:
+def _lock_for(meas_path: str) -> threading.RLock:
     with _locks_guard:
         lk = _locks.get(meas_path)
         if lk is None:
-            lk = _locks[meas_path] = threading.Lock()
+            lk = _locks[meas_path] = threading.RLock()
         return lk
 
 
@@ -112,19 +118,15 @@ def _versions(bk, meas_path: str) -> list[tuple[int, str]]:
     return out
 
 
-def is_managed(meas_path: str, bk=None) -> bool:
-    bk = bk or backend_for(meas_path)
-    return bool(_versions(bk, meas_path))
-
-
-def latest_version(meas_path: str, bk=None) -> int | None:
-    """Newest committed snapshot version, or None for an unmanaged tree.
-    ONE directory listing, no version-file reads — the cheap freshness
-    fingerprint (versions are CAS-monotonic, so an unchanged number means
-    an unchanged committed file set)."""
+def latest_version(meas_path: str, bk=None) -> int:
+    """Newest committed snapshot version. ONE directory listing, no
+    version-file reads — the cheap freshness fingerprint (versions are
+    CAS-monotonic, so an unchanged number means an unchanged committed
+    file set). A never-committed tree is adopted first (:func:`current`);
+    a missing directory is version 0."""
     bk = bk or backend_for(meas_path)
     vers = _versions(bk, meas_path)
-    return vers[-1][0] if vers else None
+    return vers[-1][0] if vers else current(meas_path, bk=bk)[0]
 
 
 def _load_state(bk, meas_path: str):
@@ -135,8 +137,8 @@ def _load_state(bk, meas_path: str):
     unreadable file (a reader racing an object-store PUT can only hit
     this on the very latest key) invalidates everything above it — the
     fold restarts below, so readers always see a consistent prefix.
-    Returns files=None for an unmanaged tree (no readable full
-    snapshot)."""
+    Returns files=None when there is no readable full snapshot (a tree
+    :func:`current` has yet to adopt)."""
     vers = _versions(bk, meas_path)
     chain: list[tuple[int, dict]] = []
     base = None
@@ -171,27 +173,82 @@ def _load_state(bk, meas_path: str):
     return top, files, len(chain)
 
 
-def current(meas_path: str, bk=None) -> tuple[int, list[str]] | None:
-    """(version, relative file list) of the current snapshot, or None for
-    an unmanaged tree. A torn/unreadable latest version falls back to the
-    previous one (rename is atomic locally; on an object store a reader
-    racing the PUT may see the key before the body — the prior chain
-    is always complete)."""
+def current(meas_path: str, bk=None,
+            publish: bool = True) -> tuple[int, list[str]]:
+    """(version, relative file list) of the current snapshot. A
+    torn/unreadable latest version falls back to the previous one
+    (rename is atomic locally; on an object store a reader racing the
+    PUT may see the key before the body — the prior chain is always
+    complete). A tree with no readable full snapshot is adopted first
+    (:func:`adopt`); a missing directory is ``(0, [])`` and writes
+    nothing. ``publish=False`` (a dry run) resolves a tree that was
+    never committed to ``(0, live files)`` without adopting it."""
     bk = bk or backend_for(meas_path)
     ver, files, _ = _load_state(bk, meas_path)
     if files is None:
-        return None
-    return ver, sorted(files)
+        if not bk.isdir(meas_path):
+            return 0, []
+        if not publish:
+            return 0, sorted(live_glob(meas_path, bk=bk))
+        adopt(meas_path, bk=bk)
+        ver, files, _ = _load_state(bk, meas_path)
+    return ver, sorted(files or ())
 
 
-def data_files(meas_path: str, bk=None) -> list[str] | None:
-    """Absolute paths of the current snapshot's data files; None when the
-    tree is unmanaged (caller falls back to the directory glob)."""
+def adopt(meas_path: str, bk=None) -> int:
+    """Commit the tree's live files as its snapshot; returns the current
+    version. A tree that was never committed (even a missing one) gets
+    :func:`commit`'s bootstrap: a full snapshot of :func:`live_glob`.
+    A committed tree is RE-adopted after hand edits: add = live −
+    committed − :func:`_retired`, remove = committed − live, and nothing
+    is written when both are empty, so threads racing to adopt one fresh
+    tree leave one bootstrap version. Re-adoption cannot tell a file
+    dropped in by hand from a crash-leaked flush file; it only refuses
+    the engine's own uncommitted files that :func:`_retired` names."""
     bk = bk or backend_for(meas_path)
-    cur = current(meas_path, bk=bk)
-    if cur is None:
-        return None
-    _, rels = cur
+    with _lock_for(meas_path):
+        ver, files, _ = _load_state(bk, meas_path)
+        if files is None:
+            return commit(meas_path, bk=bk)
+        live = set(live_glob(meas_path, bk=bk))
+        add = live - files - _retired(bk, meas_path)
+        remove = files - live
+        if not add and not remove:
+            return ver
+        return commit(meas_path, add=sorted(add), remove=sorted(remove),
+                      bk=bk)
+
+
+def _retired(bk, meas_path: str) -> set[str]:
+    """Relative paths re-adoption must never commit: every file a
+    retained snapshot version names (a live file the current snapshot
+    leaves out was committed once and then replaced — e.g. compaction
+    inputs kept by ``defer_input_deletion``), and the outputs a leftover
+    compaction job manifest records (in flight, or crashed before its
+    commit: ``recover_incomplete`` decides those). History older than
+    the pruned versions is not consulted."""
+    out: set[str] = set()
+    for _, path in _versions(bk, meas_path):
+        try:
+            obj = bk.read_json(path)
+        except Exception:
+            continue
+        for key in ("files", "add", "remove"):
+            if isinstance(obj.get(key), list):
+                out.update(obj[key])
+    for m in bk.find_files(meas_path, suffix=".compact-manifest.json"):
+        try:
+            job = bk.read_json(m)
+        except Exception:
+            continue
+        out.update(_rel(bk, meas_path, p) for p in job.get("published", []))
+    return out
+
+
+def data_files(meas_path: str, bk=None) -> list[str]:
+    """Absolute paths of the current snapshot's data files."""
+    bk = bk or backend_for(meas_path)
+    _, rels = current(meas_path, bk=bk)
     return [bk.join(meas_path, r) for r in rels]
 
 
@@ -288,8 +345,9 @@ def _is_live_data_file(rel: str) -> bool:
 
 
 def live_glob(meas_path: str, bk=None) -> list[str]:
-    """The unmanaged view: every live .parquet under the tree (tmp dirs,
-    staging, dot/underscore dirs excluded) as RELATIVE paths."""
+    """Every live .parquet under the tree (tmp dirs, staging,
+    dot/underscore dirs excluded) as RELATIVE paths — what adoption
+    commits."""
     bk = bk or backend_for(meas_path)
     if not bk.isdir(meas_path):
         return []
@@ -318,9 +376,9 @@ class CommitContention(RuntimeError):
 def commit(meas_path: str, add=(), remove=(), bk=None,
            max_retries: int = 64) -> int:
     """Publish the next snapshot = current ∪ add − remove. Returns the new
-    version. On an unmanaged tree the base is a glob of live files (which
-    already includes just-written adds), so the first commit adopts
-    everything in place.
+    version. On a never-committed tree the base is a glob of live files
+    (which already includes just-written adds), so the first commit
+    adopts everything in place.
 
     Contract for writers: call AFTER the added files are fully written
     and BEFORE any removed file is physically deleted.
@@ -401,10 +459,7 @@ def commit(meas_path: str, add=(), remove=(), bk=None,
             "races — check for a runaway external committer")
 
 
-def contains(meas_path: str, path: str, bk=None) -> bool | None:
-    """Is ``path`` in the current snapshot? None when unmanaged."""
+def contains(meas_path: str, path: str, bk=None) -> bool:
+    """Is ``path`` in the current snapshot?"""
     bk = bk or backend_for(meas_path)
-    cur = current(meas_path, bk=bk)
-    if cur is None:
-        return None
-    return _rel(bk, meas_path, path) in set(cur[1])
+    return _rel(bk, meas_path, path) in current(meas_path, bk=bk)[1]

@@ -588,8 +588,7 @@ class SpokeAgent:
     def _committed_files(self) -> list[str]:
         """Relative paths of every COMMITTED data file under the spoke
         root — snapshot-resolved per measurement (orphans from crashed
-        flushes are invisible here exactly as they are to readers);
-        unmanaged trees fall back to the glob."""
+        flushes are invisible here exactly as they are to readers)."""
         from arc_spark import snapshots
 
         bk = backend_for(self.root)
@@ -599,16 +598,8 @@ class SpokeAgent:
         for db in bk.list_dirs(self.root):
             for meas in bk.list_dirs(bk.join(self.root, db)):
                 meas_path = bk.join(self.root, db, meas)
-                files = snapshots.data_files(meas_path, bk=bk)
-                if files is None:
-                    # unmanaged tree: live_glob applies the same
-                    # tmp/staging exclusions as committed snapshots, so a
-                    # mid-write compaction output is never hashed/shipped
-                    files = [bk.join(meas_path, r)
-                             for r in snapshots.live_glob(meas_path, bk=bk)]
-                for f in files:
-                    rel = f"{db}/{meas}/" + bk.relpath(f, meas_path).replace(
-                        "\\", "/")
+                for r in snapshots.current(meas_path, bk=bk)[1]:
+                    rel = f"{db}/{meas}/{r}"
                     try:
                         validate_sync_path(rel)
                     except ValueError:

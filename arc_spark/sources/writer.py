@@ -134,10 +134,8 @@ def write_measurement(
     else:
         pdf = pdf.repartition(*[F.col(c) for c in part_cols])
     # snapshot diff base: Spark's committer doesn't report written files,
-    # so the commit adds (after − before). On an unmanaged tree the first
-    # commit bootstraps from a glob, which already includes this write.
-    managed = snapshots.is_managed(out, bk=bk)
-    before = set(snapshots.live_glob(out, bk=bk)) if managed else set()
+    # so the commit adds (after − before)
+    before = set(snapshots.live_glob(out, bk=bk))
     # partition columns FIRST in the sort: FileFormatWriter requires rows
     # ordered by partition columns and inserts its own (sort-key-destroying)
     # sort if they aren't a prefix of the actual ordering — with the prefix
@@ -151,12 +149,8 @@ def write_measurement(
     )
     write_manifest(root, db, measurement, tag_columns, sort_keys, dedup_time,
                    decimals=decimals)
-    if managed:
-        added = [f for f in snapshots.live_glob(out, bk=bk)
-                 if f not in before]
-        snapshots.commit(out, add=added, bk=bk)
-    else:
-        snapshots.commit(out, bk=bk)  # bootstrap: adopt the live tree
+    added = [f for f in snapshots.live_glob(out, bk=bk) if f not in before]
+    snapshots.commit(out, add=added, bk=bk)
     return out
 
 

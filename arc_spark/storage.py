@@ -27,8 +27,6 @@ with Spark data access translated to the subtree's local files.
 
 Object-store semantics honored:
 
-- no rename: :meth:`move_dir` falls back to copy+delete when the
-  filesystem's ``move`` is unsupported (S3);
 - no empty directories: :meth:`isdir`/listings treat a non-empty prefix
   as a directory; :meth:`mkdirs` is a no-op where directories aren't real;
 - mtime may be missing on some backends: :meth:`mtime` returns 0.0 then
@@ -43,7 +41,6 @@ import json
 import os
 import posixpath
 
-import pyarrow as pa
 import pyarrow.fs as pafs
 
 __all__ = [
@@ -385,16 +382,6 @@ class StorageBackend:
         self.move_file(src, dst)
         return True
 
-    def move_dir(self, src: str, dst: str) -> None:
-        """Directory rename where the fs supports it (local/HDFS); object
-        stores have no rename, so fall back to copy+delete — the same
-        migrate contract as the reference's S3 backend."""
-        try:
-            self.fs.move(self.fs_path(src), self.fs_path(dst))
-        except (OSError, NotImplementedError, pa.ArrowException):
-            self.copy_tree(src, dst)
-            self.fs.delete_dir(self.fs_path(src))
-
     def stream_copy_to(self, src: str, dst_bk: "StorageBackend",
                        dst: str, chunk_bytes: int = 8 << 20) -> int:
         """Cross-backend single-file copy in bounded chunks — never holds
@@ -409,14 +396,6 @@ class StorageBackend:
                     return total
                 fout.write(chunk)
                 total += len(chunk)
-
-    def copy_tree(self, src: str, dst: str) -> None:
-        pafs.copy_files(
-            self.fs_path(src),
-            self.fs_path(dst),
-            source_filesystem=self.fs,
-            destination_filesystem=self.fs,
-        )
 
     # -- parquet metadata ---------------------------------------------------
     def parquet_metadata(self, path: str):

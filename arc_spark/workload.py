@@ -721,14 +721,6 @@ def events_measurement(spark: SparkSession, sf: str):
                           mode="overwrite")
         with open(done, "w"):
             pass
-    meas = os.path.join(root, "bench", "events")
-    from arc_spark import snapshots
-
-    if not snapshots.is_managed(meas):
-        # cached trees built before the snapshot layer: adopt the live
-        # glob so the serving fast path (and register's freshness skip)
-        # get the committed file list every engine write produces today
-        snapshots.commit(meas)
     cat = MeasurementCatalog(spark, root)
     cat.register("bench", "events", view="events_m")  # one footer merge, reused
     _HIVE_EVENTS_CACHE[key] = (root, cat)

@@ -4,6 +4,7 @@ surfaces as engine objects, SURVEY §3.1 / §3.3)."""
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import pytest
 
@@ -754,6 +755,9 @@ class TestDistributedBulkIngest:
             if force_spark:
                 svc.local_fused_max_bytes = 0
             assert svc.write_line_protocol("metrics", lines) == 3000
+            # the write path itself committed: no read has touched (and
+            # so adopted) the tree yet
+            assert os.listdir(f"{root}/metrics/cpu/_arc_snapshots")
             roots[name] = root
         rows = {}
         for name, root in roots.items():
@@ -762,12 +766,9 @@ class TestDistributedBulkIngest:
                 (r["time"], r["host"], r["usage"], r["load"])
                 for r in df.collect())
         assert rows["local"] == rows["spark"]
-        from arc_spark import snapshots
         from arc_spark.sources.writer import read_manifest
 
         for root in roots.values():
-            mp = f"{root}/metrics/cpu"
-            assert snapshots.is_managed(mp)
             assert read_manifest(root, "metrics", "cpu")["tag_columns"] \
                 == ["host"]
 

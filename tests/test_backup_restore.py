@@ -61,6 +61,38 @@ class TestBackupRestore:
         assert cat.table("db0", "cpu").count() == 240
         assert cat.table("db0", "mem").count() == 120
 
+    def test_whole_restore_keeps_uncommitted_files_invisible(
+            self, spark, tmp_path):
+        """A whole-measurement copy carries the backed-up snapshot chain:
+        a file the source never committed (a crashed flush) stays
+        invisible in the restored tree."""
+        import pyarrow as pa
+
+        from arc_spark.sources.writer import write_measurement_arrow
+
+        def batch(n, v0):
+            return pa.table({
+                "time": pa.array([1_705_300_000_000_000 + v0 + i
+                                  for i in range(n)], pa.timestamp("us")),
+                "host": pa.array([f"h{i % 2}" for i in range(n)]),
+                "value": pa.array([float(v0 + i) for i in range(n)]),
+            })
+
+        root = str(tmp_path / "live")
+        write_measurement_arrow(batch(10, 0), root, "db0", "cpu",
+                                tag_columns=["host"])
+        write_measurement_arrow(batch(5, 100), root, "db0", "cpu",
+                                tag_columns=["host"], manifest=False)
+        src_rows = MeasurementCatalog(spark, root).count_rows("db0", "cpu")
+        assert src_rows == 10
+        bdir = str(tmp_path / "backups")
+        man = create_backup(root, bdir, now_ms=1700000000000)
+        dst = str(tmp_path / "restored")
+        restore_backup(bdir, man["backup_id"], dst)
+        cat = MeasurementCatalog(spark, dst)
+        assert cat.count_rows("db0", "cpu") == src_rows
+        assert cat.table("db0", "cpu").count() == src_rows
+
     def test_partial_day_restore(self, spark, tree, tmp_path):
         bdir = str(tmp_path / "backups")
         man = create_backup(tree, bdir, db="db0", measurement="cpu")

@@ -137,16 +137,22 @@ def test_delete_where_rewrites_only_affected_files(spark, tmp_path):
 
 class TestPublishCrashRecovery:
     """Regression (ADVICE medium): a crash between publishing the compacted
-    file and removing inputs left BOTH copies with no way to roll back."""
+    file and removing inputs left BOTH copies with no way to roll back.
+    The scaffold is the state a crashed ``_compact_file_batch`` leaves: the
+    tree adopted before the job manifest, the manifest recording the swap
+    commit, the output moved in."""
 
     def _scaffold(self, tmp_path):
-        part = tmp_path / "metrics" / "cpu" / "year=2024" / "month=03" / "day=01" / "hour=10"
+        from arc_spark import snapshots
+
+        meas = tmp_path / "metrics" / "cpu"
+        part = meas / "year=2024" / "month=03" / "day=01" / "hour=10"
         part.mkdir(parents=True)
         i1, i2 = part / "a.parquet", part / "b.parquet"
         i1.write_bytes(b"input-a")
         i2.write_bytes(b"input-b")
+        snapshots.current(str(meas))  # compaction adopts before the manifest
         pub = part / "cpu_compacted_1_0.parquet"
-        pub.write_bytes(b"compacted")
         manifest = part.parent / (part.name + ".compact-manifest.json")
         import json as _json
         manifest.write_text(_json.dumps({
@@ -154,11 +160,14 @@ class TestPublishCrashRecovery:
             "tmp_dir": str(part) + ".compact-tmp-dead",
             "partition": str(part),
             "published": [str(pub)],
+            "commits": [{"tree": str(meas), "add": [str(pub)],
+                         "remove": [str(i1), str(i2)]}],
         }))
+        pub.write_bytes(b"compacted")
         return part, i1, i2, pub
 
     def test_rolls_back_when_inputs_survive(self, tmp_path):
-        # crash after the output move but before any input removal
+        # crash after the output move but before the swap commit
         part, i1, i2, pub = self._scaffold(tmp_path)
         meas = str(tmp_path / "metrics" / "cpu")
         assert recover_incomplete(meas) >= 1
@@ -166,13 +175,17 @@ class TestPublishCrashRecovery:
         assert not pub.exists()                   # duplicate copy removed
 
     def test_rolls_forward_when_input_removal_started(self, tmp_path):
-        # crash mid input-removal: outputs are fully published by then
+        # crash mid input-removal: the swap was committed before it began
+        from arc_spark import snapshots
+
         part, i1, i2, pub = self._scaffold(tmp_path)
-        i1.unlink()
         meas = str(tmp_path / "metrics" / "cpu")
+        snapshots.commit(meas, add=[str(pub)], remove=[str(i1), str(i2)])
+        i1.unlink()
         assert recover_incomplete(meas) >= 1
         assert pub.exists()                       # published output kept
         assert not i2.exists()                    # swap completed
+        assert snapshots.data_files(meas) == [str(pub)]
 
 
 class TestDailyTier:

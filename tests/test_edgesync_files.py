@@ -218,12 +218,14 @@ class TestEndToEnd:
             "hour=0.compact-tmp-abc123"
         tmpdir.mkdir(parents=True)
         (tmpdir / "partial.parquet").write_bytes(b"MID-WRITE")
-        assert snapshots.data_files(str(base)) is None  # unmanaged
+        assert not (base / snapshots.SNAP_DIR).exists()  # never committed
         agent = SpokeAgent(spoke_root, SyncLedger(),
                            MemoryTransport(HubReceiver(str(tmp_path / "hub"))))
         rels = agent._committed_files()
         assert rels == ["metrics/cpu/year=2024/month=1/day=1/hour=0/"
                         "data.parquet"]
+        # discovery adopted the tree: its snapshot excludes the tmp output
+        assert snapshots.data_files(str(base)) == [str(good / "data.parquet")]
 
     def test_digest_mismatch_rejected_nothing_visible(self, tmp_path):
         recv = HubReceiver(str(tmp_path / "hub"))

@@ -282,6 +282,26 @@ class TestManagementRoutes:
         assert info["shortlived"]["last_used_at"] is not None
         assert info["shortlived"]["expires_at"] is not None
 
+    def test_last_used_stamp_is_throttled(self, tmp_path):
+        from arc_spark.auth import AuthStore
+
+        auth = AuthStore(str(tmp_path / "stamp.db"))
+        tok = auth.create_token("busy")
+        updates = []
+        auth._db.set_trace_callback(
+            lambda sql: updates.append(sql)
+            if sql.lstrip().upper().startswith("UPDATE") else None)
+        t0 = 1_800_000_000.0
+        for i in range(100):  # 100 verifies inside one minute
+            assert auth.verify(tok, now=t0 + i * 0.5)["name"] == "busy"
+        assert len(updates) == 1
+        stamped = {t["name"]: t for t in auth.list_tokens()}["busy"]
+        assert stamped["last_used_at"] == t0
+        assert auth.verify(tok, now=t0 + 61)["name"] == "busy"
+        assert len(updates) == 2
+        stamped = {t["name"]: t for t in auth.list_tokens()}["busy"]
+        assert stamped["last_used_at"] == t0 + 61
+
     def test_delete_endpoint(self, live):
         port, admin, *_ = live
         status, body, _ = _req(
@@ -614,6 +634,15 @@ class TestManagementRoutes:
         assert status == 200
         mem = json.loads(body)
         assert mem["jvm_total_bytes"] > 0 and mem["driver_max_rss_kb"] > 0
+
+    def test_logs_limit_bounds_the_ring(self, live):
+        port, admin, *_ = live
+        for _ in range(20):
+            _req(port, "/health")
+        status, body, _ = _req(port, "/api/v1/logs?limit=0", token=admin)
+        assert status == 200 and json.loads(body)["logs"] == []
+        status, body, _ = _req(port, "/api/v1/logs?limit=5", token=admin)
+        assert status == 200 and len(json.loads(body)["logs"]) == 5
 
     def test_mqtt_routes(self, spark, tmp_path):
         from arc_spark.sources.mqtt import MqttIngestBridge, MqttSubscription

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import datetime as dt
 import glob
+import importlib
 import os
 import threading
 
@@ -51,11 +52,16 @@ class TestSnapshotPrimitives:
         root = str(tmp_path)
         os.makedirs(f"{root}/year=2024/month=1/day=1/hour=0")
         open(f"{root}/year=2024/month=1/day=1/hour=0/a.parquet", "w").close()
-        assert snapshots.data_files(root) is None  # unmanaged
-        v = snapshots.commit(root)
-        assert v == 1
+        # the first read adopts the never-committed tree: one full
+        # bootstrap version listing exactly the live glob
         files = snapshots.data_files(root)
         assert files == [f"{root}/year=2024/month=1/day=1/hour=0/a.parquet"]
+        assert [v for v, _ in snapshots._versions(backend_for(root), root)] \
+            == [1]
+        assert "files" in backend_for(root).read_json(
+            f"{root}/_arc_snapshots/v{1:012d}.json")
+        assert snapshots.commit(root) == 2
+        assert snapshots.data_files(root) == files
 
     def test_add_remove_and_versions(self, tmp_path):
         root = str(tmp_path)
@@ -800,3 +806,341 @@ class TestTimeTravel:
                 s["version"] for s in snaps)
         finally:
             server.stop()
+
+
+_T0 = 1_705_276_800_000_000  # 2024-01-15T00:00Z in µs
+
+
+def _hand_tree(root: str, hours=(0, 1, 2), n: int = 10) -> str:
+    """A never-committed measurement tree, written straight with pyarrow
+    (no engine write path, so no ``_arc_snapshots``): ``n`` rows per
+    hour file under ``<root>/m/cpu``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    base = os.path.join(root, "m", "cpu")
+    for h in hours:
+        d = os.path.join(base, "year=2024", "month=1", "day=15", f"hour={h}")
+        os.makedirs(d, exist_ok=True)
+        pq.write_table(pa.table({
+            "time": pa.array([_T0 + h * 3_600_000_000 + i for i in range(n)],
+                             pa.timestamp("us", tz="UTC")),
+            "host": pa.array([f"h{i % 2}" for i in range(n)]),
+            "value": pa.array([float(h * 100 + i) for i in range(n)]),
+        }), os.path.join(d, f"part-{h}.parquet"))
+    return base
+
+
+def _version_files(meas: str) -> list[tuple[int, dict]]:
+    bk = backend_for(meas)
+    return [(v, bk.read_json(p)) for v, p in snapshots._versions(bk, meas)]
+
+
+def _reconcile_dry(spark, root):
+    from arc_spark.operators.reconciliation import Reconciler
+
+    out = Reconciler(root).reconcile(dry_run=True)
+    return {k: out[k] for k in ("found", "samples", "deleted",
+                                "recovered_jobs", "skipped_grace", "error")}
+
+
+def _spoke_files(spark, root):
+    from arc_spark.sources.edgesync import (
+        HubReceiver,
+        MemoryTransport,
+        SpokeAgent,
+        SyncLedger,
+    )
+
+    agent = SpokeAgent(root, SyncLedger(), MemoryTransport(
+        HubReceiver(os.path.join(root, "..", "hub"))))
+    return agent._committed_files()
+
+
+def _export_rels(module):
+    def read(spark, root):
+        mod = importlib.import_module(f"arc_spark.operators.{module}")
+        meas = os.path.join(root, "m", "cpu")
+        return mod._committed_rels(meas, backend_for(meas))
+    return read
+
+
+def _count_matching(spark, root):
+    from arc_spark.operators.lifecycle import count_matching
+
+    return count_matching(spark, os.path.join(root, "m", "cpu"),
+                          "value >= 100")
+
+
+_HOUR_RELS = [f"year=2024/month=1/day=15/hour={h}/part-{h}.parquet"
+              for h in range(3)]
+
+# every reader path, with what it must return on the three-hour tree
+_READERS = {
+    "table": (lambda s, r: MeasurementCatalog(s, r).table("m", "cpu")
+              .count(), 30),
+    "count_rows": (lambda s, r: MeasurementCatalog(s, r).count_rows(
+        "m", "cpu"), 30),
+    "column_stats": (lambda s, r: MeasurementCatalog(s, r).column_stats(
+        "m", "cpu", "value"), None),  # float stats never answer
+    "column_stats_time": (lambda s, r: MeasurementCatalog(s, r).column_stats(
+        "m", "cpu", "time")[:2], (
+            dt.datetime(2024, 1, 15, tzinfo=dt.timezone.utc),
+            dt.datetime(2024, 1, 15, 2, 0, 0, 9, tzinfo=dt.timezone.utc))),
+    "scan_arrow": (lambda s, r: MeasurementCatalog(s, r).scan_arrow(
+        "m", "cpu").num_rows, 30),
+    "count_matching": (_count_matching, 20),
+    "delta_export": (_export_rels("export"), _HOUR_RELS),
+    "iceberg_export": (_export_rels("iceberg_export"), _HOUR_RELS),
+    "spoke_agent": (_spoke_files, [f"m/cpu/{r}" for r in _HOUR_RELS]),
+    # the dry-run report a never-committed tree got before adoption
+    # existed: the tmp dir and the debris file, nothing else
+    "reconciler": (_reconcile_dry, {
+        "found": {"job_state": 1, "debris": 1}, "deleted": 0,
+        "recovered_jobs": 0, "skipped_grace": 1, "error": None,
+        "samples": {
+            "job_state": ["<root>/m/cpu/year=2024/month=1/day=15/"
+                          "hour=1.compact-tmp-abc"],
+            "debris": ["<root>/m/cpu/year=2024/month=1/day=15/"
+                       "hour=0/_SUCCESS"]}}),
+}
+
+
+class TestAdoption:
+    """Every tree is snapshot-managed: the first touch of a tree that was
+    never committed publishes one full bootstrap snapshot of its live
+    files, and every reader resolves that snapshot."""
+
+    @pytest.mark.parametrize("reader", sorted(_READERS))
+    def test_reader_adopts_hand_built_tree(self, spark, tmp_path, reader):
+        root = str(tmp_path / "data")
+        meas = _hand_tree(root)
+        # debris and a tmp dir: never part of the adopted file list
+        open(os.path.join(meas, "year=2024/month=1/day=15/hour=0/_SUCCESS"),
+             "w").close()
+        tmpd = os.path.join(meas, "year=2024/month=1/day=15/"
+                                  "hour=1.compact-tmp-abc")
+        os.makedirs(tmpd)
+        open(os.path.join(tmpd, "partial.parquet"), "w").close()
+        fn, expected = _READERS[reader]
+        got = fn(spark, root)
+        if reader == "reconciler":
+            expected = {**expected, "samples": {
+                k: [p.replace("<root>", root) for p in v]
+                for k, v in expected["samples"].items()}}
+        assert got == expected
+        vers = _version_files(meas)
+        if reader == "reconciler":
+            assert vers == []  # a dry run resolves without adopting
+        else:
+            assert [v for v, _ in vers] == [1]  # one bootstrap version
+            assert vers[0][1]["files"] == _HOUR_RELS  # full = the glob
+
+    def test_hand_edits_invisible_until_invalidate(self, spark, tmp_path):
+        root = str(tmp_path)
+        meas = _hand_tree(root)
+        cat = MeasurementCatalog(spark, root)
+        assert cat.count_rows("m", "cpu") == 30  # adopts
+        # dropped in by hand after adoption: invisible
+        _hand_tree(root, hours=(3,), n=5)
+        assert cat.count_rows("m", "cpu") == 30
+        assert cat.scan_arrow("m", "cpu").num_rows == 30
+        assert cat.table("m", "cpu").count() == 30
+        cat.invalidate("m", "cpu")
+        assert cat.count_rows("m", "cpu") == 35
+        assert cat.scan_arrow("m", "cpu").num_rows == 35
+        assert cat.table("m", "cpu").count() == 35
+        # deleted by hand: reads fail loudly until invalidate re-adopts
+        os.remove(os.path.join(meas, _HOUR_RELS[0]))
+        with pytest.raises(Exception):
+            cat.scan_arrow("m", "cpu")
+        cat.invalidate("m", "cpu")
+        assert _HOUR_RELS[0] not in snapshots.current(meas)[1]
+        assert cat.count_rows("m", "cpu") == 25
+        assert cat.table("m", "cpu").count() == 25
+        # nothing changed since: a further invalidate commits nothing
+        v = snapshots.latest_version(meas)
+        cat.invalidate("m", "cpu")
+        assert snapshots.latest_version(meas) == v
+
+    def test_invalidate_leaves_engine_files_uncommitted(
+            self, spark, tmp_path, monkeypatch):
+        """Re-adoption commits files dropped in by hand, never the
+        engine's own uncommitted files: compaction inputs kept by
+        ``defer_input_deletion`` and the output of a compaction that
+        crashed between its move and its commit stay invisible through
+        ``invalidate``."""
+        from arc_spark.operators.compaction import (
+            compact_partition_dir,
+            recover_incomplete,
+        )
+
+        root = str(tmp_path)
+        for i in range(3):
+            write_measurement(_df(spark, n=20, value0=i * 100, t_off=i),
+                              root, "m", "cpu", tag_columns=["host"])
+        meas = f"{root}/m/cpu"
+        cat = MeasurementCatalog(spark, root)
+
+        def served():
+            return sorted(r["value"]
+                          for r in cat.table("m", "cpu").collect())
+
+        before = served()
+        assert len(before) == 60
+        hours = sorted(glob.glob(f"{meas}/year=*/month=*/day=*/hour=*"))
+        compact_partition_dir(spark, root, "m", "cpu", hours[0],
+                              defer_input_deletion=True)
+        assert len(glob.glob(f"{hours[0]}/*.parquet")) == 4  # 3 kept + 1
+        cat.invalidate("m", "cpu")
+        assert served() == before
+        assert cat.count_rows("m", "cpu") == 60
+
+        def boom(*a, **k):
+            raise OSError("crash before snapshot commit")
+
+        monkeypatch.setattr(snapshots, "commit", boom)
+        with pytest.raises(OSError):
+            compact_partition_dir(spark, root, "m", "cpu", hours[1])
+        monkeypatch.undo()
+        cat.invalidate("m", "cpu")
+        assert served() == before
+        recover_incomplete(meas)
+        cat.invalidate("m", "cpu")
+        assert served() == before
+        assert cat.count_rows("m", "cpu") == 60
+
+    def test_second_count_reads_no_footer(self, spark, tmp_path,
+                                          monkeypatch):
+        from arc_spark.storage import StorageBackend
+
+        root = str(tmp_path)
+        _hand_tree(root)
+        cat = MeasurementCatalog(spark, root)
+        assert cat.count_rows("m", "cpu") == 30
+        reads = []
+        real_footer = MeasurementCatalog._footer
+        real_md = StorageBackend.parquet_metadata
+        monkeypatch.setattr(
+            MeasurementCatalog, "_footer",
+            lambda self, bk, p: reads.append(p) or real_footer(self, bk, p))
+        monkeypatch.setattr(
+            StorageBackend, "parquet_metadata",
+            lambda self, p: reads.append(p) or real_md(self, p))
+        assert cat.count_rows("m", "cpu") == 30
+        assert reads == []  # served from the per-state count cache
+
+    def test_daily_crash_after_move_into_fresh_tree(self, spark, tmp_path,
+                                                    monkeypatch):
+        """Crash after the daily output is moved into a FRESH daily tree,
+        before the first commit into it: a catalog read (which adopts any
+        tree it touches) and then recovery must serve each of the day's
+        rows exactly once, and no snapshot may list a missing file."""
+        from arc_spark.operators.compaction import (
+            compact_day,
+            recover_incomplete,
+        )
+        from arc_spark.storage import StorageBackend
+
+        root, daily = str(tmp_path / "hot"), str(tmp_path / "daily")
+        for h in range(3):
+            write_measurement_arrow(_arrow(spark, n=10, hour=h), root, "m",
+                                    "cpu", tag_columns=["host"])
+        cat = MeasurementCatalog(spark, root, daily_root=daily)
+        before = sorted(r["value"] for r in cat.table("m", "cpu").collect())
+        assert len(before) == 30
+        day_dir = glob.glob(f"{root}/m/cpu/year=*/month=*/day=*")[0]
+        real_move = StorageBackend.move_file
+
+        def crash_after_output_move(self, src, dst):
+            real_move(self, src, dst)
+            if "_daily_" in dst:
+                raise OSError("crash after the output move")
+
+        monkeypatch.setattr(StorageBackend, "move_file",
+                            crash_after_output_move)
+        with pytest.raises(OSError):
+            compact_day(spark, root, "m", "cpu", day_dir, daily)
+        monkeypatch.undo()
+        assert glob.glob(f"{daily}/m/cpu/**/*_daily_*.parquet",
+                         recursive=True)  # the output is on disk
+
+        def served():
+            return sorted(r["value"]
+                          for r in cat.table("m", "cpu").collect())
+
+        assert served() == before  # the read adopts: rows exactly once
+        recover_incomplete(f"{daily}/m/cpu")
+        assert served() == before
+        assert cat.scan_arrow("m", "cpu").num_rows == 30
+        for tree in (f"{root}/m/cpu", f"{daily}/m/cpu"):
+            for f in snapshots.data_files(tree):
+                assert os.path.exists(f), f
+
+    def test_concurrent_first_reads_agree(self, spark, tmp_path):
+        root = str(tmp_path)
+        meas = _hand_tree(root, hours=range(6))
+        cat = MeasurementCatalog(spark, root)
+        gate = threading.Barrier(8)
+        results, errs = [], []
+
+        def first_read():
+            try:
+                gate.wait()
+                t = cat.scan_arrow("m", "cpu")
+                results.append(sorted(t.column("value").to_pylist()))
+            except Exception as e:  # pragma: no cover
+                errs.append(e)
+
+        import sys
+
+        ts = [threading.Thread(target=first_read) for _ in range(8)]
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-5)  # interleave the check-then-commit
+        try:
+            for t in ts:
+                t.start()
+            for t in ts:
+                t.join(timeout=120)
+        finally:
+            sys.setswitchinterval(interval)
+        assert not any(t.is_alive() for t in ts)
+        assert errs == []
+        assert len(results) == 8
+        assert all(r == results[0] for r in results)
+        assert len(results[0]) == 60
+        assert [v for v, _ in _version_files(meas)] == [1]
+
+    def test_missing_directory_writes_nothing(self, tmp_path):
+        meas = str(tmp_path / "nope" / "m" / "cpu")
+        assert snapshots.current(meas) == (0, [])
+        assert snapshots.data_files(meas) == []
+        assert snapshots.latest_version(meas) == 0
+        assert not os.path.exists(str(tmp_path / "nope"))
+        # an explicit adopt (compaction's fresh daily tree) does commit
+        # the empty snapshot, whatever the backend's directory semantics
+        assert snapshots.adopt(meas) == 1
+        assert snapshots.current(meas) == (1, [])
+
+
+def test_no_tree_kind_checks_outside_snapshots():
+    """Whether a tree has been committed yet is snapshots.py's concern
+    alone: no other module asks, and only the Spark writer's before/after
+    diff (Spark does not report the files it wrote) globs a tree."""
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "arc_spark"
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        if rel == "snapshots.py":
+            continue
+        src = path.read_text()
+        for word in ("is_managed", "unmanaged"):
+            if re.search(word, src, re.IGNORECASE):
+                offenders.append(f"{rel}: {word}")
+        globs = src.count("live_glob(")
+        if globs and not (rel == "sources/writer.py" and globs == 2):
+            offenders.append(f"{rel}: live_glob x{globs}")
+    assert offenders == []
