@@ -47,8 +47,8 @@ PermissionError_ = AccessDeniedError
 def _lp_byte_ranges(payload: bytes, n: int) -> list[tuple[int, int]]:
     """(offset, length) byte ranges covering `payload`, newline-snapped:
     seek forward from each approximate cut to the next newline (O(n)
-    scans, not O(bytes)). Shared by the local-threaded and distributed
-    fused LP writers."""
+    scans, not O(bytes)). Bulk LP enters the decode-write kernel as one
+    chunk entry per range."""
     bounds = [0]
     step = max(1, len(payload) // n)
     for i in range(1, n):
@@ -60,6 +60,77 @@ def _lp_byte_ranges(payload: bytes, n: int) -> list[tuple[int, int]]:
     bounds.append(len(payload))
     return [(off, end - off)
             for off, end in zip(bounds, bounds[1:]) if end > off]
+
+
+def _measurement_ok(meas: str) -> bool:
+    """Post-decode name check: a path-shaped measurement name is skipped
+    (and reported) rather than raised, so one bad name cannot fail a
+    whole executor job or wedge the flush retry loop."""
+    try:
+        validate_identifier(meas, "measurement")
+        return True
+    except ValueError:
+        return False
+
+
+def decode_entry(kind: str, payload) -> dict[str, dict]:
+    """One ingest payload → {measurement: columnar batch}, empty batches
+    dropped. ``kind`` is ``"msgpack"`` or ``"lp[:precision]"`` (the tag
+    deferred payloads carry); line protocol splits per measurement and
+    skips malformed lines. The one decode dispatch of the deferred flush,
+    the distributed drain and bulk LP."""
+    if kind.startswith("lp"):
+        from arc_spark.sources.line_protocol import parse_chunk_columnar
+
+        precision = kind.split(":")[1] if ":" in kind else "ns"
+        # bulk LP chunks are memoryview slices of one payload: bytes()
+        # copies the chunk inside the worker, and is free on bytes
+        per_meas = parse_chunk_columnar(bytes(payload), precision)
+        return {m: b for m, b in per_meas.items() if b["columns"]}
+    from arc_spark.sources.ingest import decode_msgpack_payload
+
+    batch = decode_msgpack_payload(payload)
+    if not batch["columns"]:
+        return {}
+    return {batch.get("measurement") or "default": batch}
+
+
+def _decode_write(root: str, db: str, entries, decimal_config: dict,
+                  sort_keys_cfg: dict) -> list[tuple]:
+    """The bulk decode-and-write kernel: decode ``(kind, bytes)`` entries,
+    merge each measurement's batches and write them as hour-partitioned
+    Parquet, uncommitted (``manifest=False``; :meth:`IngestService.
+    _publish` commits). Runs on local threads and inside Spark tasks.
+
+    Returns ``(measurement, rows, tag_columns, files)`` per measurement,
+    ``files`` relative to the measurement path. A measurement whose name
+    fails :func:`validate_identifier` is not written and comes back with
+    ``files`` None: bulk LP rejects the payload, the drain drops it."""
+    from arc_spark.sources.ingest import columnar_to_arrow, merge_batches
+    from arc_spark.sources.writer import write_measurement_arrow
+
+    by_meas: dict[str, list[dict]] = {}
+    for kind, payload in entries:
+        for meas, batch in decode_entry(kind, payload).items():
+            by_meas.setdefault(meas, []).append(batch)
+    out = []
+    for meas, batches in by_meas.items():
+        if not _measurement_ok(meas):
+            out.append((meas, 0, [], None))
+            continue
+        decimals = decimal_config.get(meas)
+        # merge_batches, not a plain concat: an all-null column in one
+        # payload (string by inference) must merge with a sibling
+        # payload's real type exactly as on the buffered flush path
+        table = merge_batches([columnar_to_arrow(b, decimal_columns=decimals)
+                               for b in batches])
+        tags = sorted({c for b in batches for c in (b.get("tag_columns") or [])})
+        files: list[str] = []
+        write_measurement_arrow(table, root, db, meas, tag_columns=tags,
+                                sort_keys=sort_keys_cfg.get(meas),
+                                manifest=False, written_out=files)
+        out.append((meas, table.num_rows, tags, files))
+    return out
 
 
 class NativeScanUnsupported(Exception):
@@ -816,22 +887,18 @@ class IngestService:
         # instead of in driver Python — the backfill path (reference keeps
         # bulk imports off the hot ingest workers too, internal/api/import*)
         self.distributed_decode_min_bytes = distributed_decode_min_bytes
-        # bulk-LP payloads at/below this size take the LOCAL THREADED
-        # fused path instead of a Spark job: the chunk parse is
-        # pyarrow.compute (GIL-releasing) and the write is pyarrow
-        # parquet, so a thread pool scales them across cores without
-        # paying the Python-task job round-trip (~180-300 ms fixed on
-        # this box — measured as 40%+ of the 1M-line lane). An HTTP
-        # payload this size is single-node work by definition (the
-        # reference's bulk import is likewise in-process native
-        # workers); genuinely large backfills still fan out via Spark.
+        # bulk-LP payloads at/below this size run the decode-write kernel
+        # on LOCAL THREADS instead of a Spark job (the Python-task round-
+        # trip was 40%+ of the 1M-line lane); larger backfills fan out as
+        # one staged Spark job. Not a config key: 0 forces the Spark
+        # engine, which tests and bench.py do to cover it
         self.local_fused_max_bytes = 128 * 1024 * 1024
-        # deferred-msgpack backlogs at/above this size drain DISTRIBUTED
-        # (staged file + mapInPandas decode+write, the fused bulk-LP
-        # shape): the driver's one-process decode ceiling is ~3.5M rec/s,
-        # the distributed drain measured 13M rec/s warm on a 12M-row
-        # backlog. None disables. Same executor-resolvable-root rule as
-        # the LP bulk path.
+        # deferred backlogs (msgpack or LP) at/above this size per db drain
+        # DISTRIBUTED through the same staged job: the driver's one-process
+        # decode ceiling is ~3.5M rec/s, the distributed drain measured
+        # 13M rec/s warm on a 12M-row backlog; at 2× it drains as two
+        # concurrent jobs. None disables. Same executor-resolvable-root
+        # rule as bulk LP.
         self.distributed_flush_min_bytes = 64 << 20
         self._buffers: dict[tuple[str, str], list[dict]] = {}
         # (db, kind, payload, n_acked) — n_acked = rows counted at ack via
@@ -1004,328 +1071,141 @@ class IngestService:
     def _write_line_protocol_distributed(
         self, db: str, payload: bytes, precision: str
     ) -> int:
-        """Bulk LP ingest, fused parse+write: byte-chunk the payload at
-        newline boundaries, then ONE shuffle-free Spark job in which each
-        task parses its chunks AND writes the resulting hour-partitioned
-        Parquet directly from the executor (in-process Arrow writer — the
-        reference's per-worker independent files,
-        internal/ingest/arrow_writer.go). No persist barrier, no align
-        pass, no write shuffle: wall-clock is one map stage.
+        """Bulk LP ingest (``POST /api/v1/import/lp`` and LP payloads of
+        at least ``distributed_decode_min_bytes``): synchronous, no WAL —
+        the write completes before the ack. The payload splits at newlines
+        into ``lp:<precision>`` chunk entries, :func:`_decode_write` parses
+        and writes each chunk, and :meth:`_publish` commits every
+        measurement once, so the whole write becomes visible atomically.
+        The reference's bulk import is the same shape: in-process native
+        workers, then one manifest update (internal/api/import_inprocess.go).
 
-        Tradeoffs vs the former two-pass plan (still available as
-        ``line_protocol.payload_to_dataframe``): concurrent tasks produce
-        one file per (chunk, hour) instead of one per hour — exactly the
-        small-file shape hourly compaction (A20) exists to merge — and a
-        field whose lexical TYPE differs across chunks (``1i`` vs ``1.5``)
-        yields per-file schema conflicts instead of a widened global
-        schema; LP typing is per-line deterministic, so any consistently
+        Engine by size, with identical files, manifest and commit: a
+        payload of at most ``local_fused_max_bytes`` (128 MB) runs the
+        kernel on local threads; a larger backfill runs one staged Spark
+        job (:meth:`_decode_write_spark`). A Python-task job costs
+        ~0.26–0.33 s of round-trip on its own, about the whole threaded
+        parse+write of 1M lines.
+
+        Files are one per (chunk, measurement, hour), the small-file shape
+        hourly compaction merges. A field whose lexical type differs across
+        chunks (``1i`` vs ``1.5``) gives per-file schemas instead of a
+        widened one; LP typing is per-line deterministic, so a consistently
         typed source is unaffected (the reference likewise rejects
-        cross-batch type drift, import_inprocess.go).
+        cross-batch type drift).
 
-        Returns the payload's line count (every line either parses or
-        fails the job).
-
-        Transport: the payload is STAGED as one file under the storage
-        root and tasks receive only (offset, length) byte ranges — a
-        1-row-per-task ``spark.range`` frame, single stage, no shuffle.
-        Shipping the bytes through ``createDataFrame`` + ``repartition``
-        cost ~0.5 s driver-side Arrow conversion plus a shuffle of the
-        whole payload before any task ran; the staged file costs one
-        sequential write and the ranges are newline-snapped without
-        scanning the payload. Executors resolve the staged path with the
-        same auto-resolvable-backend rule the fused writer already
-        requires (local/file/s3).
-
-        Task sizing: ~2 MB of payload per task. Python tasks cost ~25 ms
-        each in scheduling/worker-handshake overhead regardless of work,
-        so tiny chunks make a 250k-line backfill overhead-bound (measured
-        0.9 s at 64 chunks vs ~0.35 s at 8); a 2 MB slice parses+writes
-        in ~100 ms, keeping overhead under a third of task time while
-        large backfills still fan out to 2×cores."""
-        import json as _json
-        import uuid as _uuid
-
-        import pandas as pd
-
+        Malformed lines are skipped. A measurement name that fails
+        :func:`validate_identifier` rejects the payload with
+        ``SqlValidationError`` (400): the files already written are
+        deleted and nothing is committed. Returns the rows written."""
+        from arc_spark.sources.writer import measurement_path
         from arc_spark.storage import backend_for
 
-        if len(payload) <= self.local_fused_max_bytes:
-            return self._write_lp_fused_local(db, payload, precision)
-
-        bk = backend_for(self.root)
-        par = self.spark.sparkContext.defaultParallelism
-        # ~3 MB per task, capped at cores/2: measured on local[32] with a
-        # 49 MB payload — 16 tasks 0.67 s, 24 tasks 1.52 s, 32 tasks 2.56 s
-        # (per-Python-task overhead is ~25-30 ms SERIALIZED, and full-width
-        # fan-out contends with the parse itself); at 15 MB the same rule
-        # lands on 6 tasks ≈ 0.4 s
-        n_tasks = max(1, min(max(4, par // 2), len(payload) // (3 << 20) + 1))
-        ranges = _lp_byte_ranges(payload, n_tasks)
-        staging = bk.join(self.root, ".lp-staging")
-        bk.mkdirs(staging)
-        staged = bk.join(staging, f"{_uuid.uuid4().hex}.lp")
-        bk.write_bytes(staged, payload)
-        root, precision_ = self.root, precision
-        sort_keys_cfg = self.sort_keys_config
-
-        def parse_write(batches):
-            # each concurrent worker gets ONE native thread: N workers ×
-            # a default per-process pool of N threads oversubscribes the
-            # box N-fold (measured: parse p50 503 ms vs 71 ms at 25 tasks)
-            from arc_spark.functions.threads import pin_math_threads
-
-            pin_math_threads()
-            from arc_spark.sources.ingest import columnar_to_arrow
-            from arc_spark.sources.line_protocol import parse_chunk_columnar
-            from arc_spark.sources.writer import write_measurement_arrow
-            from arc_spark.storage import backend_for as _bf
-
-            ebk = _bf(staged)
-            for bpdf in batches:
-                for i in bpdf["id"]:
-                    off, ln = ranges[int(i)]
-                    chunk = ebk.read_range(staged, off, ln)
-                    per_meas = parse_chunk_columnar(chunk, precision_)
-                    out = {"measurement": [], "n": [], "tags": [],
-                           "files": []}
-                    for meas, batch in per_meas.items():
-                        table = columnar_to_arrow(batch)
-                        wl: list[str] = []
-                        write_measurement_arrow(
-                            table, root, db, meas,
-                            tag_columns=batch["tag_columns"],
-                            sort_keys=sort_keys_cfg.get(meas),
-                            manifest=False, written_out=wl,
-                        )
-                        out["measurement"].append(meas)
-                        out["n"].append(table.num_rows)
-                        out["tags"].append(_json.dumps(batch["tag_columns"]))
-                        out["files"].append(_json.dumps(wl))
-                    yield pd.DataFrame(out)
-
-        try:
-            results = (
-                self.spark.range(0, len(ranges), 1, len(ranges))
-                .mapInPandas(parse_write,
-                             "measurement string, n long, tags string, "
-                             "files string")
-                .collect()
-            )
-        finally:
-            bk.remove_file_if_exists(staged)
-
-        return self._finish_lp_bulk(db, [
-            (r["measurement"], r["n"], _json.loads(r["tags"]),
-             _json.loads(r["files"])) for r in results])
-
-    def _write_lp_fused_local(self, db: str, payload: bytes,
-                              precision: str) -> int:
-        """Bulk LP ingest, fused parse+write, LOCAL THREADS — the
-        single-node twin of :meth:`_write_line_protocol_distributed`.
-
-        The per-chunk work is pyarrow end to end (vectorized parse in
-        pyarrow.compute, zstd parquet write via pads.write_dataset), both
-        of which release the GIL — so a ThreadPoolExecutor scales them
-        across cores WITHOUT a Spark job, skipping the Python-task
-        round-trip that is pure overhead at HTTP-payload sizes (measured
-        on this harness: a NOOP 16-task Python job costs ~260-330 ms
-        wall; the entire threaded parse+write of 1M lines is less). The
-        reference's bulk import is the same shape — in-process native
-        workers (internal/api/import_inprocess.go). Payloads above
-        ``local_fused_max_bytes`` (true backfills) still take the
-        distributed path; identical file layout, manifest, and
-        single-commit-per-measurement visibility either way."""
-        from concurrent.futures import ThreadPoolExecutor
-
-        from arc_spark.sources.ingest import columnar_to_arrow
-        from arc_spark.sources.line_protocol import parse_chunk_columnar
-
-        # measured sweep on local[32], 49 MB / 1M lines: 8 workers 0.28 s,
-        # 16 0.37 s, 25 0.51 s, 32 0.60 s — beyond ~8 threads the
-        # GIL-held per-chunk glue between the GIL-releasing pyarrow
-        # segments serializes and the handoff churn dominates.
-        # r10 re-sweep (after the parse head's byte gates moved into
-        # Arrow kernels): each chunk now carries ~26 ms of GIL-held
-        # kernel-dispatch glue REGARDLESS of size, so 2-per-worker
-        # oversubscription lost to 1-per-worker — parse-only 16ch/8w
-        # 0.336 s vs 8ch/8w 0.184 s; whole lane 0.406 → 0.323 s (1M),
-        # 0.125 → 0.120 s (250k). Chunks now cap at the worker count.
-        # workers first, then cap chunks AT the worker count: a literal
-        # 8-chunk cap on a <8-core box re-creates the 2-per-worker
-        # oversubscription the sweep showed regresses (r10 advice).
-        max_workers = min(8, os.cpu_count() or 8)
-        n_chunks = max(1, min(max_workers, len(payload) // (2 << 20) + 1))
-        n_workers = min(max_workers, n_chunks)
-        # NOT raised: Arrow's 8-thread IO pool does serialize 8 concurrent
-        # chunk writes in isolation (110 ms vs 45 at io=cpu, JVM-free
-        # microbench), but in the fused path the write half already hides
-        # inside the other threads' parse window (parse wall ~175 ms >
-        # saturated-write wall ~110 ms) — a 12-pass alternating in-session
-        # A/B measured io=32 as a wash-to-slightly-worse (r11), so the
-        # process-global knob stays untouched.
-        ranges = _lp_byte_ranges(payload, n_chunks)
-        root, sort_keys_cfg = self.root, self.sort_keys_config
-
-        def work(rng):
-            from arc_spark.sources.writer import write_measurement_arrow
-
-            off, ln = rng
-            per_meas = parse_chunk_columnar(payload[off:off + ln],
-                                            precision)
-            out = []
-            for meas, batch in per_meas.items():
-                table = columnar_to_arrow(batch)
-                wl: list[str] = []
-                write_measurement_arrow(
-                    table, root, db, meas,
-                    tag_columns=batch["tag_columns"],
-                    sort_keys=sort_keys_cfg.get(meas),
-                    manifest=False, written_out=wl)
-                out.append((meas, table.num_rows,
-                            batch["tag_columns"], wl))
-            return out
-
-        if len(ranges) == 1:
-            results = work(ranges[0])
+        local = len(payload) <= self.local_fused_max_bytes
+        if local:
+            # ~2 MB per chunk, at most one chunk per worker, at most 8
+            # workers: each chunk carries ~26 ms of GIL-held kernel glue
+            # regardless of size, so beyond ~8 threads (or 2 chunks per
+            # worker) the glue serializes — 1M lines: 8 workers 0.28 s,
+            # 16 0.37 s, 32 0.60 s; 16ch/8w 0.336 s vs 8ch/8w 0.184 s
+            # parse-only
+            n = max(1, min(8, os.cpu_count() or 8,
+                           len(payload) // (2 << 20) + 1))
         else:
-            with ThreadPoolExecutor(max_workers=n_workers) as ex:
-                results = [r for rs in ex.map(work, ranges) for r in rs]
-        return self._finish_lp_bulk(db, results)
+            # ~3 MB per task, capped at cores/2: per-Python-task overhead
+            # is ~25-30 ms serialized, and full-width fan-out contends
+            # with the parse itself (local[32], 49 MB: 16 tasks 0.67 s,
+            # 24 tasks 1.52 s, 32 tasks 2.56 s)
+            par = self.spark.sparkContext.defaultParallelism
+            n = max(1, min(max(4, par // 2), len(payload) // (3 << 20) + 1))
+        kind, view = f"lp:{precision}", memoryview(payload)
+        entries = [(kind, view[off:off + ln])
+                   for off, ln in _lp_byte_ranges(payload, n)]
+        if local:
+            from concurrent.futures import ThreadPoolExecutor
 
-    def _finish_lp_bulk(self, db: str, results) -> int:
-        """Shared bulk-LP epilogue: per-measurement manifest + ONE
-        snapshot commit (the whole write becomes visible atomically —
-        files are invisible to snapshot readers until now) and stats.
-        ``results``: (measurement, n_rows,
-        tag_columns, written_files) per parsed chunk-measurement."""
-        from arc_spark import snapshots
-        from arc_spark.sources.writer import measurement_path, write_manifest
+            def work(entry):
+                return _decode_write(self.root, db, [entry],
+                                     self.decimal_config,
+                                     self.sort_keys_config)
 
-        root = self.root
-        n_lines = 0
-        meas_tags: dict[str, set] = {}
-        meas_files: dict[str, list] = {}
-        for meas, n, tags, files in results:
-            n_lines += n
-            meas_tags.setdefault(meas, set()).update(tags)
-            meas_files.setdefault(meas, []).extend(files)
-        for meas, tags in meas_tags.items():
-            tag_list = sorted(tags)
-            write_manifest(root, db, meas, tag_list,
-                           self._manifest_sort_keys(meas, tag_list),
-                           decimals=self._dec_manifest(meas))
-            snapshots.commit(measurement_path(root, db, meas),
-                             add=meas_files.get(meas, []))
+            # parse and Parquet write are pyarrow end to end and release
+            # the GIL, so threads scale them across cores without a job
+            with ThreadPoolExecutor(max_workers=max(1, len(entries))) as ex:
+                results = [r for rs in ex.map(work, entries) for r in rs]
+        else:
+            results = self._decode_write_spark(db, entries)
+        bad = [meas for meas, _, _, files in results if files is None]
+        if bad:
+            bk = backend_for(self.root)
+            for meas, _, _, files in results:
+                for f in files or ():
+                    bk.remove_file_if_exists(
+                        bk.join(measurement_path(self.root, db, meas), f))
+            validate_identifier(bad[0], "measurement")
+        n_rows = self._publish(db, results)
         with self._lock:
-            self.stats["acked"] += n_lines
-            self.stats["flushed"] += n_lines
+            self.stats["acked"] += n_rows
+            self.stats["flushed"] += n_rows
             self.stats["flushes"] += 1
-        return n_lines
+        return n_rows
 
     def _drain_raw_distributed(
         self, db: str, entries: list[tuple[str, bytes]]
     ) -> int:
         """Distributed drain of a deferred-payload backlog ((kind, bytes)
-        pairs — msgpack or line protocol): payloads are STAGED as one
-        concatenated file (payload boundaries are natural split points —
-        no byte-splitting problem), and executor tasks decode their
-        payload group and write hour-partitioned Parquet directly (the
-        fused shape of the bulk-LP path). Breaks the driver's one-process
-        decode ceiling: measured 13M rec/s warm on a 12M-row msgpack
-        backlog vs ~3.5M for the in-process flush workers.
+        pairs, msgpack or line protocol) through the staged Spark job of
+        :meth:`_decode_write_spark`, then one :meth:`_publish`. Breaks the
+        driver's one-process decode ceiling: 13M rec/s warm on a 12M-row
+        msgpack backlog vs ~3.5M for the in-process flush workers.
 
-        r15 (guide §2.6 overlap): a backlog big enough for 2+ jobs drains
-        as TWO CONCURRENT half-jobs instead of one. Each job stays
-        cores/2-capped (the r11 finding that full-width fan-out within
-        ONE job is ~8% slower stands — it doubles per-task fixed cost),
-        but two jobs in flight back-fill each other's task tails and
-        fill the cores one capped job leaves idle: a fixed ~262 MB /
-        12M-row backlog measured 15.0 → 19.0M rows/s p50 (+27%, 5/5
-        aligned passes; 3- and 4-way splits oversubscribe the Python
-        workers and LOSE — 0.71/0.89/0.94 s p50 for 2/3/4). Manifest and
-        snapshot stay ONE commit over the merged results, so atomic
-        visibility and the tag-union semantics are byte-identical to the
-        single-job drain. The split gate is byte-based
-        (distributed_flush_min_bytes per sub-job), so small backlogs pay
-        nothing.
+        A backlog of at least 2 × ``distributed_flush_min_bytes`` drains
+        as TWO concurrent jobs over contiguous byte-balanced halves: each
+        job stays cores/2-capped, and the second back-fills the first's
+        task tails (~262 MB / 12M rows: 15.0 → 19.0M rows/s p50; 3- and
+        4-way splits oversubscribe the Python workers and lose). The
+        publish is one commit over both halves either way, so visibility
+        and the tag union match the single-job drain.
 
-        Same constraints as the fused LP writer: the root must be
-        executor-resolvable (local/file/s3), per-task schema merging, and
-        at-least-once on failure (the WAL retains the payloads; a retry
-        after a partial write duplicates rows, which compaction's
-        last-writer-wins dedup collapses for tagged measurements —
-        failure of EITHER sub-job fails the whole drain, and the caller
-        requeues the full snapshot exactly as before).
+        Same constraints as bulk LP: the root must be executor-resolvable
+        (local/file/s3), schemas merge per task, and a failure of either
+        job fails the whole drain, which the caller requeues: at-least-
+        once (the WAL retains the payloads; compaction's last-writer-wins
+        dedup collapses replayed rows of tagged measurements). Invalid
+        measurement names are dropped.
 
         Returns rows written; the caller owns stats/WAL accounting."""
-        import json as _json
-
-        from arc_spark import snapshots
-        from arc_spark.sources.writer import measurement_path, write_manifest
-
-        total_bytes = sum(len(p) for _, p in entries)
-        min_per_job = self.distributed_flush_min_bytes or (64 << 20)
-        n_jobs = max(1, min(int(os.environ.get("ARC_DEFER_DRAIN_JOBS",
-                                               "2")),
-                            total_bytes // max(1, min_per_job),
-                            len(entries)))
-        if n_jobs <= 1:
-            results = self._drain_stage_and_run(db, entries)
-        else:
-            # contiguous byte-balanced halves (payload order preserved
-            # within each job; the two jobs overlap on the scheduler)
-            parts: list[list[tuple[str, bytes]]] = []
-            target = total_bytes / n_jobs
-            cur: list[tuple[str, bytes]] = []
+        total = sum(len(p) for _, p in entries)
+        parts = [entries]
+        if total >= 2 * (self.distributed_flush_min_bytes or (64 << 20)):
             acc = 0
-            for e in entries:
-                cur.append(e)
-                acc += len(e[1])
-                if acc >= target * (len(parts) + 1) and len(parts) < n_jobs - 1:
-                    parts.append(cur)
-                    cur = []
-            if cur:
-                parts.append(cur)
+            for i, (_, p) in enumerate(entries[:-1]):
+                acc += len(p)
+                if acc >= total / 2:
+                    parts = [entries[:i + 1], entries[i + 1:]]
+                    break
+        if len(parts) == 1:
+            results = self._decode_write_spark(db, entries)
+        else:
             from concurrent.futures import ThreadPoolExecutor
 
             with ThreadPoolExecutor(max_workers=len(parts)) as ex:
-                results = [r for part in ex.map(
-                    lambda p: self._drain_stage_and_run(db, p), parts)
-                    for r in part]
-        n_rows = 0
-        meas_tags: dict[str, set] = {}
-        meas_files: dict[str, list] = {}
-        for r in results:
-            n_rows += r["n"]
-            meas_tags.setdefault(r["measurement"], set()).update(
-                _json.loads(r["tags"]))
-            meas_files.setdefault(r["measurement"], []).extend(
-                _json.loads(r["files"]))
-        root = self.root
-        for meas, tags in meas_tags.items():
-            tag_list = sorted(tags)
-            # carry decimal metadata: the drained tasks applied
-            # decimal_config to the data, so the manifest must say so —
-            # otherwise this atomic replace silently drops decimals the
-            # in-process flush recorded
-            write_manifest(root, db, meas, tag_list,
-                           self._manifest_sort_keys(meas, tag_list),
-                           decimals=self._dec_manifest(meas))
-            # atomic visibility: all of this drain's files for the
-            # measurement publish in one snapshot swap; a crash mid-drain
-            # left them invisible and the WAL retains the payloads
-            snapshots.commit(measurement_path(root, db, meas),
-                             add=meas_files.get(meas, []))
-        return n_rows
+                results = [r for rs in ex.map(
+                    lambda p: self._decode_write_spark(db, p), parts)
+                    for r in rs]
+        return self._publish(db, results)
 
-    def _drain_stage_and_run(
-        self, db: str, entries: list[tuple[str, bytes]]
-    ) -> list:
-        """Stage one concatenated payload file and run ONE decode+write
-        job over it; returns the job's result rows (measurement/n/tags/
-        files per task-measurement). Commit/manifest/stats belong to the
-        caller (:meth:`_drain_raw_distributed`), which may run several of
-        these concurrently."""
+    def _decode_write_spark(self, db: str, entries) -> list[tuple]:
+        """Run :func:`_decode_write` as ONE shuffle-free Spark job. The
+        entries are STAGED as one concatenated file under the storage
+        root, and each task of a ``spark.range`` frame reads one
+        CONTIGUOUS group of them with a single range read (1 GET per task
+        on object stores) and decodes+writes it on the executor. Shipping
+        the bytes through ``createDataFrame`` instead cost ~0.5 s of
+        driver-side Arrow conversion plus a shuffle of the whole payload.
+        Executors resolve the staged path with the auto-resolvable-backend
+        rule (local/file/s3). Returns the kernel's result tuples; manifest
+        and commit belong to the caller."""
         import json as _json
         import uuid as _uuid
 
@@ -1339,7 +1219,7 @@ class IngestService:
         staged = bk.join(staging, f"{_uuid.uuid4().hex}.bin")
         offs: list[tuple[int, int, str]] = []
         pos = 0
-        # stream payloads straight to the staging file: concatenating a
+        # stream entries straight to the staging file: concatenating a
         # multi-hundred-MB bytes object first costs two full copies
         with bk.fs.open_output_stream(bk.fs_path(staged)) as f:
             for kind, p in entries:
@@ -1347,104 +1227,80 @@ class IngestService:
                 f.write(p)
                 pos += len(p)
         par = self.spark.sparkContext.defaultParallelism
-        # cores/2 cap: same per-Python-task overhead finding as the bulk
-        # LP path (full-width fan-out contends with the decode itself;
-        # also re-measured on gzip backlogs where decompress doubles the
-        # per-payload C work — full width was still ~8% SLOWER, so the
-        # cap stays unconditional)
+        # cores/2 cap: full-width fan-out contends with the decode itself
+        # (re-measured on gzip backlogs too, where decompress doubles the
+        # per-payload C work: full width was still ~8% slower)
         n_tasks = max(1, min(max(4, par // 2), len(offs)))
-        # CONTIGUOUS groups, not round-robin: payloads were written in
-        # order, so each group is one contiguous byte range — the task
-        # issues a single range read and slices payloads in memory
-        # (1 GET per task on object stores instead of hundreds)
         per = (len(offs) + n_tasks - 1) // n_tasks
-        groups = [offs[i * per:(i + 1) * per] for i in range(n_tasks)]
-        groups = [g for g in groups if g]
-        n_tasks = len(groups)
-        root, decimal_config = self.root, self.decimal_config
-        sort_keys_cfg = self.sort_keys_config
+        groups = [g for g in (offs[i * per:(i + 1) * per]
+                              for i in range(n_tasks)) if g]
+        root = self.root
+        decimal_config, sort_keys_cfg = self.decimal_config, self.sort_keys_config
 
-        def decode_write(batches):
+        def task(batches):
+            # each concurrent worker gets ONE native thread: N workers ×
+            # a default pool of N threads oversubscribes the box N-fold
+            # (parse p50 503 ms vs 71 ms at 25 tasks)
             from arc_spark.functions.threads import pin_math_threads
 
             pin_math_threads()
-            from arc_spark.catalog import validate_identifier
-            from arc_spark.sources.ingest import (
-                columnar_to_arrow,
-                decode_msgpack_payload,
-                merge_batches,
-            )
-
-            def _meas_ok(meas: str) -> bool:
-                # post-ack on an executor: drop path-shaped measurement
-                # names rather than failing (and endlessly retrying) the
-                # whole drain job
-                try:
-                    validate_identifier(meas, "measurement")
-                    return True
-                except ValueError:
-                    return False
-            from arc_spark.sources.line_protocol import parse_chunk_columnar
-            from arc_spark.sources.writer import write_measurement_arrow
-            from arc_spark.storage import backend_for as _bf
-
-            ebk = _bf(staged)
+            ebk = backend_for(staged)
             for bpdf in batches:
                 for i in bpdf["id"]:
                     grp = groups[int(i)]
                     base = grp[0][0]
-                    span = grp[-1][0] + grp[-1][1] - base
-                    blob = ebk.read_range(staged, base, span)
-                    by_meas: dict[str, list] = {}
-                    for off, ln, kind in grp:
-                        payload = blob[off - base:off - base + ln]
-                        if kind.startswith("lp"):
-                            precision = (kind.split(":")[1]
-                                         if ":" in kind else "ns")
-                            for meas, b in parse_chunk_columnar(
-                                    payload, precision).items():
-                                if b["columns"] and _meas_ok(meas):
-                                    by_meas.setdefault(meas, []).append(b)
-                            continue
-                        b = decode_msgpack_payload(payload)
-                        m_name = b.get("measurement") or "default"
-                        if b["columns"] and _meas_ok(m_name):
-                            by_meas.setdefault(m_name, []).append(b)
-                    out = {"measurement": [], "n": [], "tags": [],
-                           "files": []}
-                    for meas, bl in by_meas.items():
-                        decs = decimal_config.get(meas)
-                        # merge_batches, not a plain concat: an all-null
-                        # column in one payload (string by inference)
-                        # must merge with a sibling payload's real type
-                        # exactly as on the in-process flush path
-                        tbl = merge_batches(
-                            [columnar_to_arrow(x, decimal_columns=decs)
-                             for x in bl])
-                        tags = sorted({c for x in bl
-                                       for c in (x.get("tag_columns") or [])})
-                        wl: list[str] = []
-                        write_measurement_arrow(
-                            tbl, root, db, meas, tag_columns=tags,
-                            sort_keys=sort_keys_cfg.get(meas),
-                            manifest=False, written_out=wl,
-                        )
-                        out["measurement"].append(meas)
-                        out["n"].append(tbl.num_rows)
-                        out["tags"].append(_json.dumps(tags))
-                        out["files"].append(_json.dumps(wl))
-                    yield pd.DataFrame(out)
+                    blob = ebk.read_range(
+                        staged, base, grp[-1][0] + grp[-1][1] - base)
+                    res = _decode_write(
+                        root, db,
+                        [(kind, blob[off - base:off - base + ln])
+                         for off, ln, kind in grp],
+                        decimal_config, sort_keys_cfg)
+                    yield pd.DataFrame({
+                        "measurement": [r[0] for r in res],
+                        "n": [r[1] for r in res],
+                        "tags": [_json.dumps(r[2]) for r in res],
+                        "files": [_json.dumps(r[3]) for r in res]})
 
         try:
-            return (
-                self.spark.range(0, n_tasks, 1, n_tasks)
-                .mapInPandas(decode_write,
-                             "measurement string, n long, tags string, "
-                             "files string")
+            rows = (
+                self.spark.range(0, len(groups), 1, len(groups))
+                .mapInPandas(task, "measurement string, n long, tags string, "
+                                   "files string")
                 .collect()
             )
         finally:
             bk.remove_file_if_exists(staged)
+        return [(r["measurement"], r["n"], _json.loads(r["tags"]),
+                 _json.loads(r["files"])) for r in rows]
+
+    def _publish(self, db: str, results) -> int:
+        """Manifest + ONE snapshot commit per measurement over
+        :func:`_decode_write` results: everything a bulk write or drain
+        wrote for a measurement becomes visible in one swap, and a crash
+        before it leaves the files invisible (the WAL, or the client's
+        retry, redoes the rows). Skipped names (``files`` None) are
+        ignored. Returns rows published; callers keep their own stats."""
+        from arc_spark import snapshots
+        from arc_spark.sources.writer import measurement_path, write_manifest
+
+        n_rows = 0
+        meas_tags: dict[str, set] = {}
+        meas_files: dict[str, list] = {}
+        for meas, n, tags, files in results:
+            if files is None:
+                continue
+            n_rows += n
+            meas_tags.setdefault(meas, set()).update(tags)
+            meas_files.setdefault(meas, []).extend(files)
+        for meas, tags in meas_tags.items():
+            tag_list = sorted(tags)
+            write_manifest(self.root, db, meas, tag_list,
+                           self._manifest_sort_keys(meas, tag_list),
+                           decimals=self._dec_manifest(meas))
+            snapshots.commit(measurement_path(self.root, db, meas),
+                             add=meas_files[meas])
+        return n_rows
 
     def _admit(
         self,
@@ -1606,10 +1462,11 @@ class IngestService:
     ) -> tuple[dict[tuple[str, str], list[dict]], int, int]:
         """Decode deferred payloads (flush time) → {(db, meas): [batches]}.
 
-        LP payloads split PER MEASUREMENT via ``parse_chunk_columnar`` —
-        the same grouping the distributed drain applies — so where a
-        deferred stream lands never depends on whether the backlog
-        crossed ``distributed_flush_min_bytes``.
+        Every payload decodes through :func:`decode_entry`, the dispatch
+        the distributed drain's kernel uses, so where a deferred stream
+        lands never depends on whether the backlog crossed
+        ``distributed_flush_min_bytes``; invalid measurement names are
+        dropped the same way (post-ack, a 400 is no longer possible).
 
         Returns (batches, ACKED DELTA, DROPPED): the delta is actual
         decoded rows minus what the ack path already counted per entry
@@ -1618,20 +1475,6 @@ class IngestService:
         ack-counted lines that failed to parse — the client-visible
         deferred ack is OPTIMISTIC on malformed input (documented in the
         README), and this counter makes the drop observable."""
-        from arc_spark.catalog import validate_identifier
-        from arc_spark.sources.ingest import decode_msgpack_payload
-        from arc_spark.sources.line_protocol import parse_chunk_columnar
-
-        def _name_ok(meas: str) -> bool:
-            # post-ack: an invalid (path-shaped) measurement name can't be
-            # 400'd anymore — drop the batch instead of poisoning the
-            # flush retry loop; the drop shows up in parse_dropped
-            try:
-                validate_identifier(meas, "measurement")
-                return True
-            except ValueError:
-                return False
-
         # LP payloads parse CONCURRENTLY across entries: the kernels in
         # parse_chunk_columnar release the GIL, one ~500 KB payload costs
         # ~10 ms of Arrow compute, and a deferred backlog below the
@@ -1645,36 +1488,22 @@ class IngestService:
         if len(lp_idx) > 1:
             from concurrent.futures import ThreadPoolExecutor
 
-            def _parse_lp(i: int) -> dict:
-                _db, kind, payload, _n = raw[i]
-                precision = kind.split(":")[1] if ":" in kind else "ns"
-                return parse_chunk_columnar(payload, precision)
-
             workers = min(8, os.cpu_count() or 8, len(lp_idx))
             with ThreadPoolExecutor(max_workers=workers) as ex:
-                lp_parsed = dict(zip(lp_idx, ex.map(_parse_lp, lp_idx)))
+                lp_parsed = dict(zip(lp_idx, ex.map(
+                    lambda i: decode_entry(raw[i][1], raw[i][2]), lp_idx)))
 
         out: dict[tuple[str, str], list[dict]] = {}
         delta = 0
         dropped = 0
         for idx, (db, kind, payload, n_pre) in enumerate(raw):
+            per_meas = (lp_parsed[idx] if idx in lp_parsed
+                        else decode_entry(kind, payload))
             actual = 0
-            if kind.startswith("lp"):
-                precision = kind.split(":")[1] if ":" in kind else "ns"
-                per_meas = (lp_parsed[idx] if idx in lp_parsed
-                            else parse_chunk_columnar(payload, precision))
-                for meas, batch in per_meas.items():
-                    if batch["columns"] and _name_ok(meas):
-                        n = len(batch["columns"][next(iter(batch["columns"]))])
-                        out.setdefault((db, meas), []).append(batch)
-                        actual += n
-            else:
-                batch = decode_msgpack_payload(payload)
-                meas = batch.get("measurement") or "default"
-                if batch["columns"] and _name_ok(meas):
-                    actual = len(
-                        batch["columns"][next(iter(batch["columns"]))])
+            for meas, batch in per_meas.items():
+                if _measurement_ok(meas):
                     out.setdefault((db, meas), []).append(batch)
+                    actual += len(batch["columns"][next(iter(batch["columns"]))])
             pre = n_pre if n_pre >= 0 else 0
             delta += actual - pre
             if actual < pre:
@@ -1827,9 +1656,6 @@ class IngestService:
             tag_cols = sorted(
                 {c for b in batches for c in (b.get("tag_columns") or [])}
             )
-            dec_manifest = (
-                {c: list(ps) for c, ps in decimals.items()} if decimals else None
-            )
             sort_keys = self.sort_keys_config.get(meas)  # None → tags+time
             # steady-state flushes write Parquet in-process (the reference's
             # design — no per-flush Spark job). A backlog bigger than one
@@ -1862,44 +1688,30 @@ class IngestService:
                 merged = merge_batches(group)
                 write_measurement_arrow(
                     merged, self.root, db, meas, tag_columns=tag_cols,
-                    sort_keys=sort_keys, decimals=dec_manifest,
-                    manifest=False, written_out=written,
+                    sort_keys=sort_keys, manifest=False, written_out=written,
                 )
                 return merged.num_rows
 
-            if chunks:
-                from arc_spark.sources.writer import write_manifest
-
-                # once per flush, atomically — not per concurrent chunk
-                manifest_keys = list(sort_keys) if sort_keys else (tag_cols or [])
-                if "time" not in manifest_keys:
-                    manifest_keys = manifest_keys + ["time"]
-                write_manifest(self.root, db, meas, tag_cols,
-                               manifest_keys, decimals=dec_manifest)
             if len(chunks) <= 1:
-                total += sum(_write_chunk(c) for c in chunks)
+                n = sum(_write_chunk(c) for c in chunks)
             else:
                 from concurrent.futures import ThreadPoolExecutor
 
                 workers = min(len(chunks), 4)
                 with ThreadPoolExecutor(max_workers=workers) as ex:
-                    total += sum(ex.map(_write_chunk, chunks))
+                    n = sum(ex.map(_write_chunk, chunks))
             if written:
-                # ONE snapshot commit per measurement per flush: readers
-                # see the whole flush or none of it (reference Raft-
-                # manifest atomicity; a crash before this line leaves the
-                # chunk files invisible and the WAL replays the rows)
-                from arc_spark import snapshots
-                from arc_spark.sources.writer import measurement_path
-
-                snapshots.commit(
-                    measurement_path(self.root, db, meas), add=written)
+                # manifest + ONE snapshot commit per measurement per flush:
+                # readers see the whole flush or none of it (reference
+                # Raft-manifest atomicity; a crash before the commit leaves
+                # the chunk files invisible and the WAL replays the rows)
+                total += self._publish(db, [(meas, n, tag_cols, written)])
             for t in big:
                 df = self.spark.createDataFrame(t)
                 write_measurement(df, self.root, db, meas,
                                   tag_columns=tag_cols,
                                   sort_keys=sort_keys,
-                                  decimals=dec_manifest)
+                                  decimals=self._dec_manifest(meas))
                 total += t.num_rows
         return total
 

@@ -84,9 +84,6 @@ DEFAULTS: dict[str, dict[str, Any]] = {
         "decimal_columns": [],   # ["measurement:col=precision,scale", ...]
         "sort_keys": [],         # ["measurement:col1,col2", ...] — time
                                  # appended automatically (sort_keys.go)
-        # bulk-LP payloads at/below this take the local threaded fused
-        # writer (no Spark job); above it, the distributed fan-out
-        "local_fused_max_bytes": 128 * 1024 * 1024,
     },
     "query": {
         # deployment-wide limits for tokens without an explicit policy
@@ -524,7 +521,6 @@ def build_engine(cfg: dict, spark=None) -> dict:
         decimal_config=parse_decimal_columns(ing["decimal_columns"]),
         sort_keys_config=parse_sort_keys(ing["sort_keys"]),
     )
-    ingest.local_fused_max_bytes = int(ing["local_fused_max_bytes"])
 
     auth = None
     if cfg["auth"]["enabled"]:

@@ -460,7 +460,9 @@ def compact_day(
     # forward past here).
     snapshots.commit(dst_meas, add=published, bk=dst_bk)
     snapshots.commit(src_meas, remove=inputs, bk=src_bk)
-    src_bk.remove_tree(day_dir)
+    # exactly the inputs: a file a late flush committed into this day
+    # while the job ran stays on disk and in the hot snapshot
+    src_bk.remove_data_files(inputs, day_dir)
     dst_bk.remove_tree(tmp_dir, ignore_errors=True)
     dst_bk.remove_file(job_manifest)
     return {"day": day_dir, "output": published[0] if published else None,

@@ -10,10 +10,10 @@ invisible to queries except for storage latency.
 The hot and cold roots may live on DIFFERENT storage backends
 (:mod:`arc_spark.storage`; reference internal/storage/backend.go) — the
 canonical deployment tiers local NVMe to an object store. Every move is
-copy → commit cold add → commit hot remove → delete hot, and a partition
-is only deleted from hot after its cold copy holds every hot file (crash
-leaves a duplicate, never a loss — the catalog's union read tolerates
-the duplicate window).
+copy → commit cold add → commit hot remove → delete hot, over exactly the
+files the hot snapshot lists for the day, so a hot file is only deleted
+after both commits (crash leaves a duplicate, never a loss — the
+catalog's union read tolerates the duplicate window).
 """
 
 from __future__ import annotations
@@ -47,9 +47,11 @@ def migrate_to_cold(
 ) -> list[str]:
     """Move day partitions older than the cutoff to the cold root.
 
-    Returns the list of migrated day-relative paths. Safe to re-run; a
-    partially-migrated day (both copies exist) is completed by deleting
-    the hot copy only when the cold copy holds every hot file.
+    Moves exactly the hot snapshot's files under each day: the cold
+    commit adds their copies, the hot commit removes them, and only they
+    are deleted. Returns the list of migrated day-relative paths. Safe to
+    re-run; a partially-migrated day is completed, reusing the copies a
+    crashed run left.
     """
     from arc_spark import snapshots
 
@@ -65,32 +67,35 @@ def migrate_to_cold(
     # add → commit hot remove → delete hot is re-runnable from every
     # crash point (worst window: the day visible on both tiers, healed by
     # the next run)
+    committed = set(snapshots.data_files(hot_meas, bk=hot_bk))
     moved: list[str] = []
     for day_dir in _day_dirs(hot_meas):
         if _dir_day(day_dir) >= cutoff:
             continue
+        # the day's COMMITTED files only: an uncommitted orphan (a crashed
+        # flush's file) must not become visible by changing tiers
+        files = [f for f in hot_bk.find_files(day_dir, suffix=".parquet")
+                 if f in committed]
+        if not files:
+            continue
         rel = hot_bk.relpath(day_dir, hot_meas)
         dest = cold_bk.join(cold_meas, rel)
-        cold_bk.mkdirs(cold_bk.dirname(dest))
-        if not cold_bk.exists(dest):
+        copies = [cold_bk.join(dest, hot_bk.relpath(f, day_dir))
+                  for f in files]
+        for src, dst in zip(files, copies):
+            if cold_bk.exists(dst):
+                continue  # copied by a run that crashed before its commits
+            cold_bk.mkdirs(cold_bk.dirname(dst))
             pafs.copy_files(
-                hot_bk.fs_path(day_dir),
-                cold_bk.fs_path(dest),
+                hot_bk.fs_path(src),
+                cold_bk.fs_path(dst),
                 source_filesystem=hot_bk.fs,
                 destination_filesystem=cold_bk.fs,
             )
-        # copy exists (from this run or a crashed prior one): verify + drop hot
-        hot_files = {hot_bk.basename(f) for f in hot_bk.find_files(day_dir)}
-        cold_files = {cold_bk.basename(f) for f in cold_bk.find_files(dest)}
-        if hot_files <= cold_files:
-            snapshots.commit(
-                cold_meas, add=cold_bk.find_files(dest, suffix=".parquet"),
-                bk=cold_bk)
-            snapshots.commit(
-                hot_meas, remove=hot_bk.find_files(day_dir, suffix=".parquet"),
-                bk=hot_bk)
-            hot_bk.remove_tree(day_dir)
-            moved.append(rel)
+        snapshots.commit(cold_meas, add=copies, bk=cold_bk)
+        snapshots.commit(hot_meas, remove=files, bk=hot_bk)
+        hot_bk.remove_data_files(files, day_dir)
+        moved.append(rel)
     return moved
 
 

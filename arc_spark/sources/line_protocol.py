@@ -289,21 +289,6 @@ def _infer_lp_schema(recs: list[dict]):
     return tag_cols, field_types, meas_tags, meas_fields
 
 
-def chunk_payload(payload: bytes, chunk_bytes: int) -> list[bytes]:
-    """Split a payload into ~chunk_bytes pieces at newline boundaries —
-    O(bytes) driver work, no per-line scan."""
-    chunks: list[bytes] = []
-    start, n = 0, len(payload)
-    while start < n:
-        end = min(start + chunk_bytes, n)
-        if end < n:
-            nl = payload.find(b"\n", end)
-            end = n if nl == -1 else nl + 1
-        chunks.append(payload[start:end])
-        start = end
-    return chunks
-
-
 def _vec_group(hp, fp, ts, scale):
     """Vector-parse ONE uniform single-measurement group.
 
@@ -499,12 +484,13 @@ def parse_chunk_columnar(chunk: bytes, precision: str) -> dict[str, dict]:
     chunks take :func:`parse_chunk_vectorized`; anything irregular falls
     through to the per-line loop below (identical output either way).
 
-    Malformed lines are SKIPPED, not fatal: every caller is post-ack
-    (deferred flush / distributed drain), where raising would wedge the
-    flush retry loop on one poison line. The drop is observable — the
-    ack/flush delta reconciles stats and IngestService surfaces it as
-    ``parse_dropped`` (the synchronous ack path uses :func:`parse_batch`,
-    which still rejects the whole payload at ack time)."""
+    Malformed lines are SKIPPED, not fatal. Post-ack callers (deferred
+    flush, distributed drain) must not wedge the flush retry loop on one
+    poison line; the ack/flush delta reconciles their stats and
+    IngestService surfaces the drop as ``parse_dropped``. The synchronous
+    ``IngestService.write_line_protocol`` ack path parses with this too
+    and compares the parsed rows with :func:`count_lines`, rejecting the
+    whole payload on any shortfall; bulk LP keeps the skip."""
     fast = parse_chunk_vectorized(chunk, precision)
     if fast is not None:
         return fast
@@ -542,157 +528,6 @@ def parse_chunk_columnar(chunk: bytes, precision: str) -> dict[str, dict]:
         out[meas] = {"columns": columns,
                      "tag_columns": sorted(st["tags"])}
     return out
-
-
-def payload_to_dataframe(spark, payload: bytes, precision: str = "ns",
-                         chunk_bytes: int | None = None):
-    """Bulk LP payload → (flat DataFrame, schema info, line count, cache).
-
-    The payload is split into ~``chunk_bytes`` BYTE chunks at newline
-    boundaries on the driver (O(bytes) slicing, no per-line Python), the
-    chunks ship to executors as a tiny binary-column DataFrame, and each
-    chunk parses exactly ONCE, distributed:
-
-    1. parse pass — each chunk parses into chunk-local columnar lists,
-       pickled to a binary cell, next to a JSON schema summary (tag/field
-       types per measurement + line count). The pass is persisted
-       (memory-and-disk); collecting just the summaries materializes it.
-       EVERY line contributes to the merged schema, so a measurement or
-       field first appearing deep in the payload is never silently dropped
-       (a first-chunk sample cannot promise that).
-    2. align pass — over the CACHED parse output: unpickle, pad each
-       chunk's columns out to the merged schema. No per-line work.
-
-    The returned ``cache`` is the persisted intermediate; the caller
-    unpersists it after consuming the flat frame. The driver never builds
-    an N-row DataFrame and never re-reads the payload.
-    """
-    import pandas as pd
-    from pyspark import StorageLevel
-
-    if chunk_bytes is None:
-        # ~2 chunks per core: full parallelism with some stragglers slack
-        target = max(2 * spark.sparkContext.defaultParallelism, 1)
-        chunk_bytes = max(len(payload) // target, 64 * 1024)
-    chunks = chunk_payload(payload, chunk_bytes)
-
-    pdf = pd.DataFrame({"chunk": chunks})
-    chunk_df = spark.createDataFrame(pdf, schema="chunk binary").repartition(
-        min(len(chunks), spark.sparkContext.defaultParallelism) or 1
-    )
-
-    # pass 1: the only parse — columnar chunk payload + schema summary
-    def parse_chunks(batches):
-        import json as _json
-        import pickle as _pickle
-
-        for bpdf in batches:
-            for chunk in bpdf["chunk"]:
-                recs = [
-                    parse_line(s, precision)
-                    for s in bytes(chunk).decode("utf-8", "replace").splitlines()
-                    if s.strip() and not s.startswith("#")
-                ]
-                tc, ft, mt, mf = _infer_lp_schema(recs)
-                ms: list = []
-                ts: list = []
-                tags: dict[str, list] = {}
-                fields: dict[str, list] = {}
-                n_rows = 0
-                for r in recs:
-                    ms.append(r["measurement"])
-                    ts.append(r["time_us"])
-                    for c, v in r["tags"].items():
-                        col = tags.get(c)
-                        if col is None:
-                            col = tags[c] = [None] * n_rows
-                        col.append(v)
-                    for c, v in r["fields"].items():
-                        col = fields.get(c)
-                        if col is None:
-                            col = fields[c] = [None] * n_rows
-                        col.append(v)
-                    n_rows += 1
-                    for col in tags.values():
-                        if len(col) < n_rows:
-                            col.append(None)
-                    for col in fields.values():
-                        if len(col) < n_rows:
-                            col.append(None)
-                yield pd.DataFrame({
-                    "summary": [_json.dumps({
-                        "tags": sorted(tc),
-                        "field_types": {k: t.__name__ for k, t in ft.items()},
-                        "meas_tags": {m: sorted(s) for m, s in mt.items()},
-                        "meas_fields": {m: sorted(s) for m, s in mf.items()},
-                        "n_lines": len(recs),
-                    })],
-                    "blob": [_pickle.dumps(
-                        {"m": ms, "t": ts, "tags": tags, "fields": fields},
-                        protocol=_pickle.HIGHEST_PROTOCOL,
-                    )],
-                })
-
-    import json as _json
-
-    parsed = chunk_df.mapInPandas(
-        parse_chunks, "summary string, blob binary"
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-
-    _RANK = {"bool": 0, "int": 1, "float": 2, "str": 3}
-    _TYPE = {"bool": bool, "int": int, "float": float, "str": str}
-    tag_cols: set[str] = set()
-    field_types: dict[str, type] = {}
-    meas_tags: dict[str, set] = {}
-    meas_fields: dict[str, set] = {}
-    n_lines = 0
-    for row in parsed.select("summary").collect():
-        s = _json.loads(row["summary"])
-        tag_cols.update(s["tags"])
-        n_lines += s["n_lines"]
-        for m, ts in s["meas_tags"].items():
-            meas_tags.setdefault(m, set()).update(ts)
-        for m, fs in s["meas_fields"].items():
-            meas_fields.setdefault(m, set()).update(fs)
-        for k, tname in s["field_types"].items():
-            prev = field_types.get(k)
-            if prev is None or _RANK[tname] > _RANK[prev.__name__]:
-                # widen by rank except str never demotes numerics: int<float,
-                # bool<int — same widening _infer_lp_schema applies per chunk
-                field_types[k] = _TYPE[tname]
-    spark_type = {int: "long", float: "double", str: "string", bool: "boolean"}
-    schema = ", ".join(
-        ["measurement string", "time timestamp_ntz"]
-        + [f"`{c}` string" for c in sorted(tag_cols)]
-        + [f"`{c}` {spark_type[t]}" for c, t in sorted(field_types.items())]
-    )
-    tag_list, field_list = sorted(tag_cols), sorted(field_types)
-
-    # pass 2: align cached chunk columns to the merged schema (no re-parse)
-    def align_chunks(batches):
-        import pickle as _pickle
-
-        for bpdf in batches:
-            for blob in bpdf["blob"]:
-                d = _pickle.loads(bytes(blob))
-                n = len(d["m"])
-                cols: dict[str, list] = {"measurement": d["m"]}
-                for c in tag_list:
-                    cols[c] = d["tags"].get(c) or [None] * n
-                for c in field_list:
-                    cols[c] = d["fields"].get(c) or [None] * n
-                out = pd.DataFrame(cols)
-                out.insert(1, "time", pd.to_datetime(
-                    pd.Series(d["t"], dtype="float64") if not d["t"]
-                    else pd.Series(d["t"]), unit="us"))
-                yield out[["measurement", "time"] + tag_list + field_list]
-
-    flat = parsed.select("blob").mapInPandas(align_chunks, schema=schema)
-    info = {
-        "tags": {m: sorted(s) for m, s in meas_tags.items()},
-        "fields": {m: sorted(s) for m, s in meas_fields.items()},
-    }
-    return flat, info, n_lines, parsed
 
 
 def lines_to_dataframe(spark, lines_df, precision: str = "ns",

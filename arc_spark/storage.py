@@ -319,6 +319,25 @@ class StorageBackend:
         crc = self.join(self.dirname(path), "." + self.basename(path) + ".crc")
         self.remove_file_if_exists(crc)
 
+    def remove_data_files(self, files: list[str], top: str) -> None:
+        """Delete exactly ``files`` (and their crc sidecars), then every
+        directory between them and ``top`` (inclusive) that holds no file
+        any more. Unlike ``remove_tree(top)``, a file another writer put
+        under ``top`` meanwhile — a flush committing into a day being
+        moved — survives with its directories."""
+        top = top.rstrip("/")
+        dirs = {top}
+        for f in files:
+            self.remove_file_if_exists(f)
+            self.remove_crc_sidecar(f)
+            d = self.dirname(f)
+            while len(d) > len(top) and d.startswith(top + "/"):
+                dirs.add(d)
+                d = self.dirname(d)
+        for d in sorted(dirs, key=len, reverse=True):
+            if not self.find_files(d):
+                self.remove_tree(d, ignore_errors=True)
+
     def remove_tree(self, path: str, ignore_errors: bool = False) -> None:
         try:
             self.fs.delete_dir(self.fs_path(path))

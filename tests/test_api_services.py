@@ -684,11 +684,11 @@ class TestBackgroundFlush:
 
 
 class TestDistributedBulkIngest:
-    """The fused bulk-LP writer has two engines behind one routing
-    threshold: LOCAL THREADS for HTTP-sized payloads (≤
+    """Bulk LP runs one decode-and-write kernel on two engines behind one
+    routing threshold: LOCAL THREADS for HTTP-sized payloads (≤
     local_fused_max_bytes — skips the Python-task job round-trip) and
-    the Spark mapInPandas fan-out for true backfills. Semantics are
-    identical; the parametrization pins both."""
+    the staged Spark job for true backfills. Semantics are identical;
+    the parametrization pins both."""
 
     @pytest.fixture(params=["local-threads", "spark-distributed"])
     def bulk_svc(self, request, spark, tmp_path):
@@ -740,37 +740,149 @@ class TestDistributedBulkIngest:
         assert "free" in mem.columns and "usage" not in mem.columns
 
     def test_both_engines_write_identical_rowsets(self, spark, tmp_path):
-        """Same payload through both engines → identical rows, columns,
-        manifests, and snapshot-committed visibility."""
+        """Same payload through both bulk engines and the deferred
+        distributed drain → identical rows, column types, manifests, and
+        snapshot-committed visibility. A decimal_config column is
+        decimal128 on every route, so a tree holding buffered and bulk
+        files reads as one table (a bulk file with a double column used
+        to fail the catalog read with CANNOT_MERGE_SCHEMAS)."""
+        import glob
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from arc_spark.sources.writer import read_manifest
+
         lines = "\n".join(
-            f"cpu,host=h{i % 7} usage={i % 100},load={i % 7} "
+            f"cpu,host=h{i % 7} usage={i % 100},load={i % 7},px={i % 50}.25 "
             f"{1700000000000000000 + i * 10**9}"
             for i in range(3000)).encode()
+        decimals = {"cpu": {"px": (10, 2)}}
         roots = {}
-        for name, force_spark in (("local", False), ("spark", True)):
+        for name in ("local", "spark", "drain"):
             root = str(tmp_path / name)
             svc = IngestService(spark, root, max_buffer_rows=10**9,
                                 max_buffer_age_s=10**9,
-                                distributed_decode_min_bytes=1)
-            if force_spark:
+                                distributed_decode_min_bytes=1,
+                                defer_decode=name == "drain",
+                                decimal_config=decimals)
+            if name == "spark":
                 svc.local_fused_max_bytes = 0
+            if name == "drain":
+                svc.distributed_flush_min_bytes = 1 << 10
             assert svc.write_line_protocol("metrics", lines) == 3000
+            if name == "drain":
+                assert svc.flush() == 3000
             # the write path itself committed: no read has touched (and
             # so adopted) the tree yet
             assert os.listdir(f"{root}/metrics/cpu/_arc_snapshots")
+            files = glob.glob(f"{root}/metrics/cpu/**/*.parquet",
+                              recursive=True)
+            assert files
+            for f in files:
+                assert pq.read_schema(f).field("px").type \
+                    == pa.decimal128(10, 2), (name, f)
             roots[name] = root
         rows = {}
         for name, root in roots.items():
             df = MeasurementCatalog(spark, root).table("metrics", "cpu")
             rows[name] = sorted(
-                (r["time"], r["host"], r["usage"], r["load"])
+                (r["time"], r["host"], r["usage"], r["load"], r["px"])
                 for r in df.collect())
-        assert rows["local"] == rows["spark"]
-        from arc_spark.sources.writer import read_manifest
-
+        assert rows["local"] == rows["spark"] == rows["drain"]
         for root in roots.values():
-            assert read_manifest(root, "metrics", "cpu")["tag_columns"] \
-                == ["host"]
+            m = read_manifest(root, "metrics", "cpu")
+            assert m["tag_columns"] == ["host"]
+            assert m["decimals"] == {"px": [10, 2]}
+        # a buffered flush into the bulk-written tree: one readable table
+        for root in (roots["local"], roots["spark"]):
+            svc = IngestService(spark, root, max_buffer_rows=10**9,
+                                max_buffer_age_s=10**9,
+                                decimal_config=decimals)
+            svc.write_line_protocol(
+                "metrics",
+                b"cpu,host=h0 usage=1,load=1,px=3.5 1800000000000000000\n")
+            assert svc.flush() == 1
+            df = MeasurementCatalog(spark, root).table("metrics", "cpu")
+            assert dict(df.dtypes)["px"] == "decimal(10,2)"
+            assert df.count() == 3001
+
+    def test_invalid_measurement_name_rejects_whole_payload(
+            self, bulk_svc, spark, tmp_path):
+        """A bulk LP measurement name that fails validate_identifier
+        answers 400 on both engines (the Spark engine used to raise it
+        inside an executor: HTTP 500, counted against the breaker) and
+        commits nothing — not even the payload's valid measurement."""
+        import glob
+        import urllib.error
+        import urllib.request
+
+        from arc_spark.auth import AuthStore
+        from arc_spark.server import ArcServer
+
+        root = str(tmp_path)
+        payload = "\n".join(
+            [f"cpu,host=a usage={i} {1700000000000000000 + i * 10**9}"
+             for i in range(200)]
+            + [f".hidden,host=a usage={i} {1700000000000000000 + i}"
+               for i in range(5)]).encode()
+        svc = bulk_svc(distributed_decode_min_bytes=1)
+        with pytest.raises(SqlValidationError, match="invalid measurement"):
+            svc.write_line_protocol("metrics", payload)
+        auth = AuthStore(str(tmp_path / "auth.db"))
+        admin = auth.create_token("admin")
+        server = ArcServer(QueryService(spark, MeasurementCatalog(spark, root)),
+                           svc, auth).start()
+        try:
+            req = urllib.request.Request(
+                f"http://127.0.0.1:{server.port}/api/v1/import/lp?db=metrics",
+                data=payload, method="POST")
+            req.add_header("Authorization", f"Bearer {admin}")
+            with pytest.raises(urllib.error.HTTPError) as err:
+                urllib.request.urlopen(req, timeout=180)
+            assert err.value.code == 400
+        finally:
+            server.stop()
+        assert glob.glob(f"{root}/**/*.parquet", recursive=True) == []
+        assert glob.glob(f"{root}/**/_arc_snapshots", recursive=True) == []
+        assert svc.stats["flushed"] == 0
+
+
+def test_one_decode_write_kernel_in_api():
+    """Bulk LP (both engines) and the distributed drain share one
+    decode-and-write kernel: in arc_spark/api.py only ``_decode_write``
+    and the buffered flush (``_write_buffers``) convert batches to Arrow
+    or write Parquet, and no ingest knob reads the environment."""
+    import ast
+    import pathlib
+
+    src = (pathlib.Path(__file__).resolve().parent.parent
+           / "arc_spark" / "api.py").read_text()
+    callers: dict[str, set[str]] = {}
+    environ = []
+
+    def visit(node, owner):
+        # owner: the module-level function or method a node sits in
+        # (nested closures count as their enclosing method)
+        for child in ast.iter_child_nodes(node):
+            inner = (child.name if owner is None
+                     and isinstance(child, ast.FunctionDef) else owner)
+            if isinstance(child, ast.Call):
+                f = child.func
+                name = f.attr if isinstance(f, ast.Attribute) else getattr(
+                    f, "id", None)
+                if name in ("columnar_to_arrow", "write_measurement_arrow"):
+                    callers.setdefault(name, set()).add(inner)
+            if (isinstance(child, ast.Attribute) and child.attr == "environ"
+                    and getattr(child.value, "id", None) == "os"):
+                environ.append(child.lineno)
+            visit(child, inner)
+
+    visit(ast.parse(src), None)
+    assert callers == {"columnar_to_arrow": {"_decode_write", "_write_buffers"},
+                       "write_measurement_arrow": {"_decode_write",
+                                                   "_write_buffers"}}
+    assert environ == []
 
 
 class TestFlushFailureRetry:
@@ -811,13 +923,6 @@ class TestBulkLateMeasurement:
         lines += [f"mem,host=h{i % 4} free={i}i,pressure={i / 7} "
                   f"{1700000000000000000 + i * 10**9}" for i in range(50)]
         payload = "\n".join(lines).encode()
-        from arc_spark.sources.line_protocol import payload_to_dataframe
-
-        flat, info, n, cache = payload_to_dataframe(spark, payload,
-                                                    chunk_bytes=4096)
-        assert "mem" in info["fields"] and "free" in info["fields"]["mem"]
-        assert n == 450
-        cache.unpersist()
         assert svc.write_line_protocol("metrics", payload) == 450
         cat = MeasurementCatalog(spark, root)
         assert cat.table("metrics", "cpu").count() == 400
@@ -981,24 +1086,32 @@ class TestDistributedFlush:
         svc.close()
 
     def test_split_drain_disabled_matches(self, spark, tmp_path, monkeypatch):
-        """ARC_DEFER_DRAIN_JOBS=1 forces the single-job drain; committed
-        rows and manifest must be identical to the split default."""
+        """A backlog under 2× the drain threshold drains as ONE job;
+        committed rows and manifest must be identical to the split
+        drain."""
         from arc_spark.api import IngestService
         from arc_spark.sources.msgpack_codec import packb
         from arc_spark.sources.writer import read_manifest
 
-        monkeypatch.setenv("ARC_DEFER_DRAIN_JOBS", "1")
         svc = IngestService(spark, str(tmp_path), max_buffer_rows=10**9,
                             max_buffer_age_s=10**9, defer_decode=True)
-        svc.distributed_flush_min_bytes = 1 << 10
-        for j in range(4):
-            svc.write_msgpack("bench", packb({"m": "cpu", "columns": {
-                "time": [1700000000000000 + (j * 100 + i) * 1000
-                         for i in range(100)],
-                "host": [f"h{i % 8}" for i in range(100)],
-                "value": [float(i) for i in range(100)]},
-                "tags": ["host"]}))
+        payloads = [packb({"m": "cpu", "columns": {
+            "time": [1700000000000000 + (j * 100 + i) * 1000
+                     for i in range(100)],
+            "host": [f"h{i % 8}" for i in range(100)],
+            "value": [float(i) for i in range(100)]},
+            "tags": ["host"]}) for j in range(4)]
+        # backlog == threshold: distributed, and below the 2× split gate
+        svc.distributed_flush_min_bytes = sum(len(p) for p in payloads)
+        jobs = []
+        run_job = svc._decode_write_spark
+        monkeypatch.setattr(svc, "_decode_write_spark",
+                            lambda db, entries: jobs.append(len(entries))
+                            or run_job(db, entries))
+        for p in payloads:
+            svc.write_msgpack("bench", p)
         assert svc.flush() == 400
+        assert jobs == [4]
         assert read_manifest(str(tmp_path), "bench",
                              "cpu")["tag_columns"] == ["host"]
         assert spark.read.parquet(

@@ -236,6 +236,53 @@ class TestDailyTier:
         hours = {r["hour"] for r in df.select("hour").distinct().collect()}
         assert hours == set(range(12))
 
+    def test_late_commit_during_daily_compaction_survives(
+            self, spark, tmp_path, monkeypatch):
+        """A flush that commits into the day while the daily job runs:
+        the job deletes exactly its inputs, so the late file stays on
+        disk and in the hot snapshot, and its row stays readable (a
+        whole-day delete used to unlink it while the snapshot still
+        listed it)."""
+        import time as _time
+
+        import pyarrow as pa
+
+        from arc_spark import snapshots
+        from arc_spark.catalog import MeasurementCatalog
+        from arc_spark.operators.compaction import compact_measurement_daily
+        from arc_spark.sources.writer import write_measurement_arrow
+
+        root, daily = str(tmp_path / "hot"), str(tmp_path / "daily")
+        self._write_day_of_hours(spark, root)
+        real_commit = snapshots.commit
+        late = []
+
+        def commit(meas_path, *a, **k):
+            # the daily tree's add commit runs before the hot tree's
+            # remove: land the late flush right there
+            if not late and meas_path.startswith(daily) and k.get("add"):
+                late.append(1)
+                write_measurement_arrow(pa.table({
+                    "time": pa.array([dt.datetime(2024, 3, 1, 5, 30)],
+                                     pa.timestamp("us")),
+                    "host": ["late"], "value": [999.0]}),
+                    root, "metrics", "cpu", tag_columns=["host"])
+            return real_commit(meas_path, *a, **k)
+
+        monkeypatch.setattr(snapshots, "commit", commit)
+        results = compact_measurement_daily(
+            spark, root, "metrics", "cpu", daily_root=daily,
+            min_files=12, min_age_seconds=0, now=_time.time() + 90000,
+        )
+        monkeypatch.undo()
+        assert late and len(results) == 1 and results[0]["inputs"] == 12
+        hot_files = snapshots.data_files(os.path.join(root, "metrics", "cpu"))
+        assert len(hot_files) == 1 and os.path.exists(hot_files[0])
+        df = MeasurementCatalog(spark, root, daily_root=daily).table(
+            "metrics", "cpu")
+        assert df.count() == 37
+        assert df.filter("host = 'late'").count() == 1
+
     def test_young_or_small_days_not_touched(self, spark, tmp_path):
         import time as _time
 

@@ -51,6 +51,42 @@ class TestTiering:
         assert migrate_to_cold(hot, cold, "metrics", "cpu", **kw) == []
 
 
+    def test_migrates_only_committed_files(self, spark, tmp_path):
+        """The cold snapshot gains the copies of the hot snapshot's files
+        only: an uncommitted hot orphan (a crashed flush's file) must not
+        become visible on the cold tier (it used to: 2 files, 15 rows)."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from arc_spark import snapshots
+        from arc_spark.sources.writer import write_measurement_arrow
+
+        hot, cold = str(tmp_path / "hot"), str(tmp_path / "cold")
+
+        def table(n, minute):
+            return pa.table({
+                "time": pa.array(
+                    [dt.datetime(2024, 3, 1, 6, minute, i) for i in range(n)],
+                    pa.timestamp("us")),
+                "host": ["a"] * n, "value": [float(i) for i in range(n)]})
+
+        write_measurement_arrow(table(10, 0), hot, "metrics", "cpu",
+                                tag_columns=["host"])
+        write_measurement_arrow(table(5, 30), hot, "metrics", "cpu",
+                                tag_columns=["host"], manifest=False)
+        moved = migrate_to_cold(hot, cold, "metrics", "cpu",
+                                older_than_days=10,
+                                now=dt.datetime(2024, 3, 21))
+        assert moved == ["year=2024/month=3/day=1"]
+        cold_files = snapshots.data_files(os.path.join(cold, "metrics", "cpu"))
+        assert len(cold_files) == 1
+        assert sum(pq.ParquetFile(f).metadata.num_rows
+                   for f in cold_files) == 10
+        assert snapshots.data_files(os.path.join(hot, "metrics", "cpu")) == []
+        cat = MeasurementCatalog(spark, hot, cold_root=cold)
+        assert cat.table("metrics", "cpu").count() == 10
+
+
 class TestTieringPolicies:
     def test_store_crud_and_effective(self, tmp_path):
         from arc_spark.operators.tiering import TieringPolicyStore
