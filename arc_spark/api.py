@@ -311,6 +311,127 @@ def _plan_cond_timerange(cond: str):
     return _combine_time_atoms(atoms) if atoms else None
 
 
+# The native routes' parsed-plan grammar. A native query reads ONE
+# relation, optionally through a Filter whose condition is a pure time
+# range (:func:`_plan_cond_timerange`); the nodes above that source decide
+# the route (:meth:`QueryService._native_source`).
+_PLAN_RELATION_RE = re.compile(
+    r"^'UnresolvedRelation \[([^\]]+)\], \[\], false$")
+# one expression of a Project/Aggregate list: COUNT(1) (COUNT(*) parses
+# as COUNT(1)), SUM/AVG/MIN/MAX of a bare column, date_trunc('<unit>',
+# <column>) or a bare column. Literals print unquoted, so every token is
+# anchored and must cover the whole list: an injected literal breaks
+# the coverage and the query goes to Spark.
+_PLAN_EXPR_RE = re.compile(
+    r"'(?:(?P<fn>(?i:count|sum|avg|min|max))"
+    r"\((?:(?P<one>1)|'(?P<arg>[A-Za-z_]\w*))\)"
+    r"|(?i:date_trunc)\((?P<unit>\w+), '(?P<tcol>[A-Za-z_]\w*)\)"
+    r"|(?P<col>[A-Za-z_]\w*))")
+_PLAN_ALIAS_RE = re.compile(r" AS ([A-Za-z_]\w*)#\d+")
+_PLAN_AGGREGATE_RE = re.compile(r"^'Aggregate \[(.*?)\], \[(.*)\]$")
+#: Spark's date_trunc unit spellings → pyarrow floor_temporal units
+_TRUNC_UNITS = {
+    "year": "year", "yyyy": "year", "yy": "year", "quarter": "quarter",
+    "month": "month", "mon": "month", "mm": "month", "week": "week",
+    "day": "day", "dd": "day", "hour": "hour", "minute": "minute",
+    "second": "second"}
+
+
+# a quoted run (backquoted identifier or string literal), a comment
+# opener, or an unclosed quote
+_SQL_QUOTED_RE = re.compile(r"`[^`]*`|'[^']*'|\"[^\"]*\"|--|/\*|['\"`]")
+
+
+def _plain_literals(sql: str) -> bool:
+    """True when no string literal of ``sql`` holds a quote or a
+    backslash. The parsed plan prints a string literal bare, so a literal
+    whose value starts with a quote (``'\\'host'``, ``"'count(1)"``)
+    prints exactly like a column or an aggregate; every native detector
+    requires this first. Adjacent quoted runs (``'a''b'``), comments and
+    unclosed quotes fail closed."""
+    end = -1
+    for m in _SQL_QUOTED_RE.finditer(sql):
+        tok = m.group()
+        if tok in ("--", "/*") or len(tok) == 1:
+            return False
+        if tok[0] != "`" and (m.start() == end or "\\" in tok
+                              or ('"' if tok[0] == "'" else "'") in tok):
+            return False
+        end = m.end()
+    return True
+
+
+def _plan_expr(m: re.Match) -> tuple | None:
+    """A matched :data:`_PLAN_EXPR_RE` token → ``(kind, column)``
+    (``("count", None)`` for COUNT(1)) or ``("date_trunc", column,
+    unit)``; None outside the grammar (COUNT(col), SUM(1), an unknown
+    unit)."""
+    if m.group("col"):
+        return ("col", m.group("col"))
+    if m.group("tcol"):
+        if m.group("unit").lower() not in _TRUNC_UNITS:
+            return None
+        return ("date_trunc", m.group("tcol"), m.group("unit"))
+    fn = m.group("fn").lower()
+    if (fn == "count") != bool(m.group("one")):
+        return None
+    return (fn, m.group("arg"))
+
+
+def _plan_items(text: str, named: bool) -> list | None:
+    """A printed expression list → ``[(expr, alias | None), ...]``
+    (:func:`_plan_expr` shapes), or None when any item is outside the
+    grammar. ``named``: a select list, whose unnamed expressions print
+    as ``unresolvedalias(...)`` and named ones as ``... AS name#id``;
+    a GROUP BY list has neither."""
+    items: list = []
+    pos = 0
+    while pos < len(text):
+        if items:
+            if not text.startswith(", ", pos):
+                return None
+            pos += 2
+        wrapped = named and text.startswith("unresolvedalias(", pos)
+        if wrapped:
+            pos += len("unresolvedalias(")
+        m = _PLAN_EXPR_RE.match(text, pos)
+        expr = _plan_expr(m) if m else None
+        if expr is None:
+            return None
+        pos = m.end()
+        alias = None
+        if wrapped:
+            if not text.startswith(")", pos):
+                return None
+            pos += 1
+        elif named:
+            a = _PLAN_ALIAS_RE.match(text, pos)
+            if a:
+                alias, pos = a.group(1), a.end()
+        items.append((expr, alias))
+    return items
+
+
+def _plan_name(expr: tuple, alias: str | None) -> str:
+    """The output column name Spark gives a select item."""
+    if alias is not None:
+        return alias
+    if expr[0] == "col":
+        return expr[1]
+    if expr[0] == "date_trunc":
+        return f"date_trunc({expr[2]}, {expr[1]})"
+    return f"{expr[0]}({expr[1] or 1})"
+
+
+#: size gate of the native_agg route: above this many input rows (the
+#: pruned files' footer total) the query runs on Spark. The measured
+#: crossover of server CPU per query (Spark local[2], 8 000-row hour
+#: files, both dashboard shapes, median of 5): at 1.0M rows native 70-80
+#: ms vs Spark 140 ms, at 1.5M 80-130 vs 110-130 ms, at 2M per-host
+#: native 130 vs Spark 70 ms.
+NATIVE_AGG_MAX_ROWS = 1_500_000
+
+
 def _spark_collect(fmt: str):
     """The ``QueryRegistry.run`` collect for one wire format: ``rows``
     stay ``df.collect()``; every other format encodes the result's Arrow
@@ -581,7 +702,7 @@ class QueryService:
         self.registry.record_instant(
             f"{rbac_sql} LIMIT {eff}"
             + (f" VERSION AS OF {snapshot}" if snapshot is not None else ""),
-            token=token, rows=table.num_rows)
+            token=token, rows=table.num_rows, route="native_scan")
         return table
 
     # SHOW TABLES is an alias for SHOW MEASUREMENTS; the db in FROM may be
@@ -592,17 +713,6 @@ class QueryService:
     )
 
     _PROJECT_LINE_RE = re.compile(r"^'Project \[(.*)\]$")
-    _AGG_TOKEN_RE = re.compile(
-        r"unresolvedalias\('(?:COUNT|count)\(1\)\)"
-        r"|'(?:COUNT|count)\(1\) AS (\w+)#\d+"
-        r"|unresolvedalias\('(MIN|min|MAX|max)\('([A-Za-z_]\w*)\)\)"
-        r"|'(MIN|min|MAX|max)\('([A-Za-z_]\w*)\) AS (\w+)#\d+")
-    # shared by the native COUNT and time-range detectors (the '+- '
-    # tree prefix is optional: count matches raw lines, timerange
-    # pre-strips) — one regex so a treeString format change can't break
-    # one detector while the other keeps serving
-    _COUNT_RELATION_RE = re.compile(
-        r"^(?:\+- )?'UnresolvedRelation \[([^\]]+)\], \[\], false$")
 
     def _resolve_relation(self, rel_text: str,
                           db: str | None) -> tuple[str, str] | None:
@@ -629,6 +739,29 @@ class QueryService:
         except Exception:
             return None
 
+    def _native_source(self, sql: str, lines: list[str] | None):
+        """``(nodes above the source, relation text, TimeRange | None)``
+        for a parsed plan that is one chain of nodes over ONE relation,
+        optionally filtered by a pure time range — the one source
+        parser of the three native detectors. None for any other source
+        (a join, a subquery, a non-time predicate), or when a string
+        literal of ``sql`` could print as a plan token
+        (:func:`_plain_literals`)."""
+        if lines is None:
+            lines = self._plan_lines(sql)
+        if not lines or not _plain_literals(sql):
+            return None
+        nodes = [ln.strip().removeprefix("+- ") for ln in lines]
+        m_rel = _PLAN_RELATION_RE.match(nodes.pop())
+        if m_rel is None:
+            return None
+        tr = None
+        if nodes and nodes[-1].startswith("'Filter "):
+            tr = _plan_cond_timerange(nodes.pop()[len("'Filter "):])
+            if tr is None:
+                return None
+        return nodes, m_rel.group(1), tr
+
     def _native_count(self, sql: str, db: str | None,
                       lines: list[str] | None = None) -> list | None:
         """[(name, value, arrow_type), ...] when `sql` is EXACTLY a bare
@@ -642,40 +775,20 @@ class QueryService:
         columns whose every row group carries exact stats (float stats
         can be conservative bounds like -0.0, string stats can truncate
         — those shapes run on Spark). None → run on Spark."""
-        if lines is None:
-            lines = self._plan_lines(sql)
-        if lines is None or len(lines) != 2:
+        src = self._native_source(sql, lines)
+        if src is None:
             return None
-        m_proj = self._PROJECT_LINE_RE.match(lines[0])
-        m_rel = self._COUNT_RELATION_RE.match(lines[1])
-        if not m_proj or not m_rel:
+        nodes, rel, tr = src
+        m_proj = (self._PROJECT_LINE_RE.match(nodes[0])
+                  if len(nodes) == 1 and tr is None else None)
+        items = _plan_items(m_proj.group(1), named=True) if m_proj else None
+        if not items or any(e[0] not in ("count", "min", "max")
+                            for e, _ in items):
             return None
-        # tokenize the projection: every expression must be a supported
-        # aggregate and the tokens must cover the WHOLE list (an
-        # unsupported expression anywhere → Spark)
-        content = m_proj.group(1)
-        specs: list[tuple[str, str | None, str]] = []
-        pos = 0
-        while pos < len(content):
-            if specs:
-                if not content.startswith(", ", pos):
-                    return None
-                pos += 2
-            m = self._AGG_TOKEN_RE.match(content, pos)
-            if m is None or m.start() != pos:
-                return None
-            pos = m.end()
-            if m.group(2) or m.group(4):  # min/max
-                kind = (m.group(2) or m.group(4)).lower()
-                col = m.group(3) or m.group(5)
-                name = m.group(6) or f"{kind}({col})"
-            else:
-                kind, col = "count", None
-                name = m.group(1) or "count(1)"
-            specs.append((kind, col, name))
-        if not specs or len({n for _, _, n in specs}) != len(specs):
-            return None  # empty or duplicate output names
-        key = self._resolve_relation(m_rel.group(1), db)
+        specs = [(e[0], e[1], _plan_name(e, alias)) for e, alias in items]
+        if len({n for _, _, n in specs}) != len(specs):
+            return None  # duplicate output names
+        key = self._resolve_relation(rel, db)
         if key is None:
             return None
         import pyarrow as pa
@@ -714,7 +827,6 @@ class QueryService:
 
     _TR_GLOBAL_LIMIT_RE = re.compile(r"^'GlobalLimit (\d+)$")
     _TR_LOCAL_LIMIT_RE = re.compile(r"^'LocalLimit (\d+)$")
-    _TR_FILTER_RE = re.compile(r"^'Filter (.*)$")
 
     def _native_timerange(self, sql: str, db: str | None,
                           lines: list[str] | None = None):
@@ -723,35 +835,183 @@ class QueryService:
         LIMIT <n>`` — the reference's "Time Range (7d) LIMIT 10K" and
         "SELECT LIMIT 10K/100K/1M" serving categories (15 / 18-105 ms
         in BASELINE) — detected on the PARSED plan like the native
-        COUNT shape: GlobalLimit/LocalLimit/Project[*]/[Filter]/
-        relation, the Filter condition (when present) matched against
-        the paren-safe printed-condition grammar
-        (_plan_cond_timerange). Any other projection, an ORDER BY, a
+        COUNT shape: GlobalLimit/LocalLimit/Project[*] over
+        :meth:`_native_source`. Any other projection, an ORDER BY, a
         missing LIMIT, or any non-time predicate → None → full Spark
         execution."""
-        if lines is None:
-            lines = self._plan_lines(sql)
-        if lines is None or len(lines) not in (4, 5):
+        src = self._native_source(sql, lines)
+        if src is None or len(src[0]) != 3:
             return None
-        lines = [ln.strip().removeprefix("+- ").strip() for ln in lines]
-        m_gl = self._TR_GLOBAL_LIMIT_RE.match(lines[0])
-        m_ll = self._TR_LOCAL_LIMIT_RE.match(lines[1])
-        m_rel = self._COUNT_RELATION_RE.match(lines[-1])
-        if (not m_gl or not m_ll or lines[2] != "'Project [*]"
-                or not m_rel or m_gl.group(1) != m_ll.group(1)):
+        nodes, rel, tr = src
+        m_gl = self._TR_GLOBAL_LIMIT_RE.match(nodes[0])
+        m_ll = self._TR_LOCAL_LIMIT_RE.match(nodes[1])
+        if (not m_gl or not m_ll or nodes[2] != "'Project [*]"
+                or m_gl.group(1) != m_ll.group(1)):
             return None
-        tr = None
-        if len(lines) == 5:
-            m_f = self._TR_FILTER_RE.match(lines[3])
-            if not m_f:
-                return None
-            tr = _plan_cond_timerange(m_f.group(1))
-            if tr is None:
-                return None
-        key = self._resolve_relation(m_rel.group(1), db)
+        key = self._resolve_relation(rel, db)
         if key is None:
             return None
         return key, tr, int(m_gl.group(1))
+
+    def _native_agg(self, sql: str, db: str | None,
+                    lines: list[str] | None = None):
+        """(key, TimeRange | None, [(output name, expr), ...]) when `sql`
+        is EXACTLY ``SELECT <group keys>, <aggregates> FROM <one
+        measurement> [WHERE <pure time range>] GROUP BY <the same
+        keys>`` — the dashboard's time-bucket and per-host shapes
+        (reference "time-bucket 1h/7d 4.7 ms"). One Aggregate node over
+        :meth:`_native_source`; a key is a bare column or
+        ``date_trunc('<unit>', col)``, an aggregate COUNT(*) or
+        SUM/AVG/MIN/MAX of a bare column (column types are checked at
+        execution, :meth:`_native_agg_table`). HAVING, DISTINCT, ORDER
+        BY, LIMIT, ordinals, aliases in GROUP BY → None → Spark."""
+        src = self._native_source(sql, lines)
+        if src is None or len(src[0]) != 1:
+            return None
+        nodes, rel, tr = src
+        m = _PLAN_AGGREGATE_RE.match(nodes[0])
+        groups = _plan_items(m.group(1), named=False) if m else None
+        select = _plan_items(m.group(2), named=True) if m else None
+        if not groups or not select:
+            return None
+        keys = [e for e, _ in groups]
+        sel_keys = [e for e, _ in select if e[0] in ("col", "date_trunc")]
+        if (len(set(keys)) != len(keys)
+                or any(e[0] not in ("col", "date_trunc") for e in keys)
+                or sorted(sel_keys) != sorted(keys)):
+            return None
+        out = [(_plan_name(e, alias), e) for e, alias in select]
+        if len({n for n, _ in out}) != len(out):
+            return None  # duplicate output names
+        key = self._resolve_relation(rel, db)
+        if key is None:
+            return None
+        return key, tr, out
+
+    def _native_agg_table(self, key, tr, out, token: str = ""):
+        """The :meth:`_native_agg` result as one pyarrow
+        ``group_by().aggregate()`` over the committed files
+        (:meth:`MeasurementCatalog.scan_arrow`), schema-identical to the
+        Spark route (names, types, nullability), row-capped like it.
+        None → Spark: a session time zone other than UTC, more input
+        rows than :data:`NATIVE_AGG_MAX_ROWS` or an unreadable footer
+        (the size gate fails closed), a missing column, or a type outside
+        the grammar — keys string/bool/signed integer/date/timestamp
+        (float keys would split ±0.0), SUM/AVG double only (integer SUM
+        has Spark's overflow semantics), MIN/MAX timestamp/signed
+        integer/floating (with Spark's NaN-is-largest order)."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        def _nan_minmax(r, ref: str, kind: str, typ):
+            # MAX is NaN when the group holds one; MIN only when the
+            # group holds nothing but NaN and nulls
+            nan = pc.fill_null(r[ref + "n_max"], False)
+            if kind == "min":
+                nan = pc.and_(nan, pc.is_null(r[f"{ref}_min"]))
+            return pc.if_else(nan, pa.scalar(float("nan"), typ),
+                              r[f"{ref}_{kind}"])
+
+        if self.spark.conf.get("spark.sql.session.timeZone", None) != "UTC":
+            return None  # date_trunc and the time literals are UTC here
+        cols = sorted({e[1] for _, e in out if e[1] is not None})
+        try:
+            t = self.catalog.scan_arrow(*key, columns=cols, time_range=tr,
+                                        max_rows=NATIVE_AGG_MAX_ROWS)
+        except Exception:
+            return None  # size gate, footer, missing column: Spark owns it
+        types = {f.name: f.type for f in t.schema}
+        if any(c not in types for c in cols):
+            return None
+
+        def _ts(typ) -> bool:
+            return pa.types.is_timestamp(typ) and typ.tz in (None, "UTC")
+
+        def _key(typ) -> bool:
+            return (pa.types.is_string(typ) or pa.types.is_boolean(typ)
+                    or pa.types.is_signed_integer(typ) or _ts(typ)
+                    or pa.types.is_date32(typ))
+
+        def _minmax(typ) -> bool:
+            return (_ts(typ) or pa.types.is_signed_integer(typ)
+                    or typ in (pa.float32(), pa.float64()))
+
+        work: dict[str, object] = {}   # group-by input columns
+        aggs: list = []                # (input, function) pairs
+        fields, finish = [], []        # output field + result → array
+        for name, e in out:
+            kind, col = e[0], e[1]
+            typ = types.get(col)
+            if kind in ("col", "date_trunc"):
+                if kind == "date_trunc":
+                    if not _ts(typ):
+                        return None
+                    # on the tz-naive view: floor_temporal runs ~7x
+                    # slower through the time zone database, even UTC's
+                    arr = pc.floor_temporal(t[col].cast(pa.timestamp("us")),
+                                            unit=_TRUNC_UNITS[e[2].lower()])
+                elif _key(typ):
+                    arr = t[col]
+                else:
+                    return None
+                ref = f"k{len(work)}"
+                if arr.null_count:
+                    # pyarrow 16's multi-key grouper splits one null group
+                    # into several: a key with nulls groups as its value,
+                    # nulls filled, plus an is-null flag
+                    zero = "" if pa.types.is_string(arr.type) else (
+                        False if pa.types.is_boolean(arr.type) else 0)
+                    work[ref] = pc.fill_null(arr, pa.scalar(zero, arr.type))
+                    work[ref + "n"] = pc.is_null(arr)
+                    finish.append(lambda r, ref=ref: pc.if_else(
+                        r[ref + "n"], pa.scalar(None, r[ref].type), r[ref]))
+                else:
+                    work[ref] = arr
+                    finish.append(lambda r, ref=ref: r[ref])
+            elif kind == "count":
+                typ = pa.int64()
+                if ([], "count_all") not in aggs:
+                    aggs.append(([], "count_all"))
+                finish.append(lambda r: r["count_all"])
+            elif kind in ("sum", "avg"):
+                if typ != pa.float64():
+                    return None
+                ref = f"v{len(work)}"
+                fn = "sum" if kind == "sum" else "mean"
+                work[ref] = t[col]
+                aggs.append((ref, fn))
+                finish.append(lambda r, o=f"{ref}_{fn}": r[o])
+            elif not _minmax(typ):
+                return None
+            elif pa.types.is_floating(typ):
+                # pyarrow skips NaN; Spark orders NaN above every value
+                ref = f"v{len(work)}"
+                x = t[col]
+                nan = pc.is_nan(x)
+                work[ref] = pc.if_else(nan, pa.scalar(None, typ), x)
+                work[ref + "n"] = nan
+                # "max", not "any": pyarrow 16's hash_any misses a
+                # true in a later chunk of a group
+                aggs += [(ref, kind), (ref + "n", "max")]
+                finish.append(lambda r, ref=ref, kind=kind, typ=typ:
+                              _nan_minmax(r, ref, kind, typ))
+            else:
+                ref = f"v{len(work)}"
+                work[ref] = t[col]
+                aggs.append((ref, kind))
+                finish.append(lambda r, o=f"{ref}_{kind}": r[o])
+            if pa.types.is_timestamp(typ):
+                typ = pa.timestamp("us", tz="UTC")  # Spark's toArrow
+            fields.append(pa.field(name, typ, nullable=kind != "count"))
+        keys = [k for k in work if k.startswith("k")]
+        res = pa.table(work).group_by(keys).aggregate(aggs)
+        cap = self.governor.row_cap(token)
+        if cap is not None:
+            res = res.slice(0, cap)
+        schema = pa.schema(fields)
+        return pa.Table.from_arrays(
+            [f(res).cast(fld.type) for f, fld in zip(finish, schema)],
+            schema=schema)
 
     def _serve_native_table(self, table, fmt: str):
         """A native-scan pyarrow Table in each wire shape (the route
@@ -772,6 +1032,11 @@ class QueryService:
         defaults to it, and cross-database ``db.table`` references are
         rejected — detected on the PARSED plan's table refs, not by string
         scanning (no literal/comment-masking regexes to get wrong).
+
+        Routes, tried in order on the parsed plan after validation and
+        RBAC: ``native_count`` (footer COUNT/MIN/MAX), ``native_scan``
+        (SELECT * [time range] LIMIT), ``native_agg`` (GROUP BY over a
+        time range), else ``spark``. The history entry records which.
         """
         self.governor.admit(token)
         if db is not None and not self._IDENT_RE.match(db):
@@ -792,10 +1057,11 @@ class QueryService:
         # Validation + RBAC above already ran on this SQL; the shape
         # check is on the PARSED plan, so any filter/group/expression
         # falls through to the engine.
-        plan_lines = self._plan_lines(sql)  # one parse, both detectors
+        plan_lines = self._plan_lines(sql)  # one parse, every detector
         nc = self._native_count(sql, db, lines=plan_lines)
         if nc is not None:
-            self.registry.record_instant(sql, token=token, rows=1)
+            self.registry.record_instant(sql, token=token, rows=1,
+                                         route="native_count")
             return self._serve_native_count(nc, fmt=fmt)
         # native time-range serving on the SQL surface (reference "Time
         # Range (7d) LIMIT 10K" = 15 ms): SELECT * + pure time filter +
@@ -814,7 +1080,19 @@ class QueryService:
                 table = None  # → Spark path keeps full semantics
             if table is not None:
                 self.registry.record_instant(sql, token=token,
-                                             rows=table.num_rows)
+                                             rows=table.num_rows,
+                                             route="native_scan")
+                return self._serve_native_table(table, fmt=fmt)
+        # native GROUP BY (reference "time-bucket 1h/7d 4.7 ms"): keys
+        # and aggregates over one measurement's time range run as one
+        # pyarrow group_by over the committed files, under a size gate
+        na = self._native_agg(sql, db, lines=plan_lines)
+        if na is not None:
+            table = self._native_agg_table(*na, token=token)
+            if table is not None:
+                self.registry.record_instant(sql, token=token,
+                                             rows=table.num_rows,
+                                             route="native_agg")
                 return self._serve_native_table(table, fmt=fmt)
         df = self.governor.cap(token, self.plan(sql, db))
         return self.registry.run(df, sql=sql, token=token,
@@ -1094,10 +1372,14 @@ class IngestService:
         typed source is unaffected (the reference likewise rejects
         cross-batch type drift).
 
-        Malformed lines are skipped. A measurement name that fails
-        :func:`validate_identifier` rejects the payload with
-        ``SqlValidationError`` (400): the files already written are
-        deleted and nothing is committed. Returns the rows written."""
+        All-or-nothing, like the synchronous LP write: a measurement name
+        that fails :func:`validate_identifier` rejects the payload with
+        ``SqlValidationError`` (400), and fewer parsed rows than
+        :func:`count_lines` (a malformed line) with
+        ``LineProtocolError`` (400). Either way the files already written
+        are deleted and nothing is committed. Returns the rows written."""
+        from arc_spark.sources.line_protocol import (LineProtocolError,
+                                                     count_lines)
         from arc_spark.sources.writer import measurement_path
         from arc_spark.storage import backend_for
 
@@ -1136,13 +1418,18 @@ class IngestService:
         else:
             results = self._decode_write_spark(db, entries)
         bad = [meas for meas, _, _, files in results if files is None]
-        if bad:
+        parsed = sum(rows for _, rows, _, _ in results)
+        expected = count_lines(payload)
+        if bad or parsed < expected:
             bk = backend_for(self.root)
             for meas, _, _, files in results:
                 for f in files or ():
                     bk.remove_file_if_exists(
                         bk.join(measurement_path(self.root, db, meas), f))
-            validate_identifier(bad[0], "measurement")
+            for meas in bad:
+                validate_identifier(meas, "measurement")
+            raise LineProtocolError(
+                f"{expected - parsed} of {expected} lines failed to parse")
         n_rows = self._publish(db, results)
         with self._lock:
             self.stats["acked"] += n_rows

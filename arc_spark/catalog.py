@@ -329,7 +329,8 @@ def _read_small_files_cached(bk, root: str, files: "list[str]",
                              limit: int | None, time_range, columns):
     """Read a pruned list of SMALL local parquet files through the
     decoded-file cache, in list order, stopping once ``limit`` rows
-    survive the exact time predicate. Returns the concatenated table,
+    survive the exact time predicate (every row when ``time_range`` is
+    None). Returns the concatenated table,
     or None when this path must decline (non-local backend, a file over
     the cache gate, cache disabled, per-file schema surprises) — the
     caller then uses the pyarrow-dataset scan. Raises ValueError for
@@ -404,7 +405,10 @@ def _read_small_files_cached(bk, root: str, files: "list[str]",
                         "rows)", f, tab.num_rows - checked.num_rows)
                     tab = checked
             if columns is not None:
-                tab = tab.select(columns)
+                # a file without a requested column: the concat below
+                # fills it with nulls, as the dataset scan does
+                tab = tab.select([c for c in columns
+                                  if c in tab.schema.names])
         except (pa.ArrowInvalid, KeyError):
             return None  # heterogeneous schema: dataset path unifies
         if schema0 is None:
@@ -821,7 +825,8 @@ class MeasurementCatalog:
                    columns: list[str] | None = None,
                    limit: int | None = None,
                    snapshot: int | None = None,
-                   time_range: "TimeRange | None" = None):
+                   time_range: "TimeRange | None" = None,
+                   max_rows: int | None = None):
         """Native Arrow scan of a measurement's COMMITTED files — no Spark
         job, no driver-collect hop.
 
@@ -834,6 +839,8 @@ class MeasurementCatalog:
         file list is snapshot-resolved exactly like :meth:`table`, hive
         partition columns materialize as int32 columns, and ns timestamps
         normalize to µs so both serving paths return identical values.
+        Small local files read through the decoded-file cache
+        (:func:`_read_small_files_cached`), with or without a time range.
 
         ``time_range`` adds the reference's time-range serving shape
         (BASELINE "Time Range (7d) LIMIT 10K" = 15 ms; pruner behavior
@@ -845,7 +852,11 @@ class MeasurementCatalog:
         predicate, which pyarrow additionally uses for parquet
         row-group-statistics pruning, stopping at LIMIT. Anything beyond
         filter-on-time + limit (other predicates, ordering, joins) stays
-        on Spark."""
+        on Spark.
+
+        ``max_rows`` is a size gate that fails closed: ValueError, before
+        any data page is read, when the pruned files' footer row total
+        exceeds it or a footer cannot be read."""
         import pyarrow as pa
         import pyarrow.dataset as pads
 
@@ -856,9 +867,8 @@ class MeasurementCatalog:
             raise ValueError(
                 f"time travel needs a single-tier measurement; "
                 f"{db}.{measurement} has {len(paths)} tiers")
-        tables = []
+        tiers = []  # (tier path, backend, pruned committed files)
         schema_fallback: list = []  # real schemas when pruning emptied a tier
-        remaining = limit
         for p in paths:
             bk = backend_for(p)
             if snapshot is not None:
@@ -884,48 +894,38 @@ class MeasurementCatalog:
                         partitioning=pads.partitioning(flavor="hive"),
                         partition_base_dir=bk.fs_path(p),
                     ).schema)
-            if not files:
-                continue
-            if time_range is not None:
-                # tiny-file regime (hour-partitioned hot tier): the
-                # decoded-file LRU beats re-paying ~1.35 ms/file of
-                # footer+decode CPU per serve; declines (None) fall
-                # through to the dataset scan
-                t = _read_small_files_cached(
-                    bk, p, files, remaining, time_range, columns)
-                if t is not None:
-                    if remaining is not None:
-                        remaining -= t.num_rows
-                    tables.append(t)
-                    if remaining is not None and remaining <= 0:
-                        break
-                    continue
-            ds = pads.dataset(
-                [bk.fs_path(f) for f in files],
-                filesystem=bk.fs_read,
-                partitioning=pads.partitioning(flavor="hive"),
-                partition_base_dir=bk.fs_path(p),
-            )
-            flt = None
-            if time_range is not None:
-                # a scan that silently dropped the predicate would serve
-                # WRONG rows — any unsupported shape (no time column,
-                # non-timestamp type, lossy unit) must raise so the
-                # caller falls back to the Spark path
-                try:
-                    ftype = ds.schema.field("time").type
-                except KeyError:
-                    raise ValueError(
-                        f"{db}.{measurement} has no 'time' column")
-                flt = time_range.arrow_filter(ftype)
-            if remaining is not None:
-                t = ds.head(remaining, columns=columns, filter=flt)
-                remaining -= t.num_rows
-            else:
-                t = ds.to_table(columns=columns, filter=flt)
+            if files:
+                tiers.append((p, bk, files))
+        if max_rows is not None:
+            total = 0
+            for _, bk, files in tiers:
+                for f in files:
+                    try:
+                        total += self._footer(bk, f)[0]
+                    except Exception as e:
+                        raise ValueError(f"unreadable footer {f}: {e}") \
+                            from None
+            if total > max_rows:
+                raise ValueError(
+                    f"{db}.{measurement}: {total} rows over the native"
+                    f" scan gate of {max_rows}")
+        tables = []
+        remaining = limit
+        for p, bk, files in tiers:
+            # tiny-file regime (hour-partitioned hot tier): the
+            # decoded-file LRU beats re-paying ~1.35 ms/file of
+            # footer+decode CPU per serve; declines (None) fall through
+            # to the dataset scan
+            t = _read_small_files_cached(
+                bk, p, files, remaining, time_range, columns)
+            if t is None:
+                t = self._scan_dataset(db, measurement, p, bk, files,
+                                       remaining, time_range, columns)
             tables.append(t)
-            if remaining is not None and remaining <= 0:
-                break
+            if remaining is not None:
+                remaining -= t.num_rows
+                if remaining <= 0:
+                    break
         if not tables:
             if schema_fallback:
                 tables = [schema_fallback[0].empty_table()]
@@ -951,6 +951,37 @@ class MeasurementCatalog:
         if changed or out.schema.metadata:
             out = out.cast(pa.schema(fields))
         return out
+
+    @staticmethod
+    def _scan_dataset(db: str, measurement: str, p: str, bk,
+                      files: list[str], limit: int | None, time_range,
+                      columns: list[str] | None):
+        """One tier's files through :mod:`pyarrow.dataset` — the path for
+        files the decoded-file cache declines (big, remote, uncertain
+        partition typing)."""
+        import pyarrow.dataset as pads
+
+        ds = pads.dataset(
+            [bk.fs_path(f) for f in files],
+            filesystem=bk.fs_read,
+            partitioning=pads.partitioning(flavor="hive"),
+            partition_base_dir=bk.fs_path(p),
+        )
+        flt = None
+        if time_range is not None:
+            # a scan that silently dropped the predicate would serve
+            # WRONG rows — any unsupported shape (no time column,
+            # non-timestamp type, lossy unit) must raise so the caller
+            # falls back to the Spark path
+            try:
+                ftype = ds.schema.field("time").type
+            except KeyError:
+                raise ValueError(
+                    f"{db}.{measurement} has no 'time' column") from None
+            flt = time_range.arrow_filter(ftype)
+        if limit is not None:
+            return ds.head(limit, columns=columns, filter=flt)
+        return ds.to_table(columns=columns, filter=flt)
 
     def measurement_for_path(self, path: str) -> tuple[str, str] | None:
         """Reverse-resolve a scan root path to its (db, measurement).

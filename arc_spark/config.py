@@ -749,6 +749,9 @@ def build_engine(cfg: dict, spark=None) -> dict:
             return out
 
         scheduler.add_job("edge_sync", _edge_tick, es["spoke_interval_s"])
+    from arc_spark.session import serial_file_listing
+
+    serial_file_listing(spark, (root, st["cold_path"], st["daily_path"]))
     timeseries = None
     if cfg["metrics"]["timeseries_enabled"]:
         from arc_spark.metrics import TimeSeriesCollector

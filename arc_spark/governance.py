@@ -188,6 +188,12 @@ class Governor:
 # A38 — query registry / cancellation via job groups
 # ---------------------------------------------------------------------------
 
+#: how a query was answered: footer metadata, a native pyarrow scan, a
+#: native pyarrow GROUP BY, or a Spark job — the fixed label set of the
+#: per-route query counters
+ROUTES = ("native_count", "native_scan", "native_agg", "spark")
+
+
 @dataclass
 class QueryInfo:
     query_id: str
@@ -198,6 +204,7 @@ class QueryInfo:
     error: str | None = None
     finished_at: float | None = None
     rows: int | None = None
+    route: str = "spark"  # one of ROUTES
     _cancel: threading.Event = field(default_factory=threading.Event, repr=False)
 
 
@@ -230,6 +237,7 @@ class QueryRegistry:
         # monotonic totals over every entry that ever entered the ring
         # (/metrics counters must not drop when the ring evicts)
         self._status_totals: dict[str, int] = {}
+        self._route_totals = dict.fromkeys(ROUTES, 0)
         self._seconds_total = 0.0
 
     def _to_history(self, info: QueryInfo) -> None:
@@ -238,12 +246,18 @@ class QueryRegistry:
         self._history.append(info)
         self._status_totals[info.status] = (
             self._status_totals.get(info.status, 0) + 1)
+        self._route_totals[info.route] += 1
         self._seconds_total += info.finished_at - info.started_at
 
     def totals(self) -> tuple[dict[str, int], float]:
         """(finished queries per status, their summed seconds) since start."""
         with self._lock:
             return dict(self._status_totals), self._seconds_total
+
+    def route_totals(self) -> dict[str, int]:
+        """Finished queries per route (every label of :data:`ROUTES`)."""
+        with self._lock:
+            return dict(self._route_totals)
 
     def list(self) -> list[QueryInfo]:
         """Active queries followed by retained history (oldest first) —
@@ -294,15 +308,17 @@ class QueryRegistry:
         return True
 
     def record_instant(self, sql: str, token: str = "",
-                       rows: int | None = None) -> None:
+                       rows: int | None = None,
+                       route: str = "native_scan") -> None:
         """History entry for a query answered WITHOUT a Spark job (native
-        metadata COUNT/MIN/MAX, fast-scan serving): done-instantly, never
-        in the active map — so GetHistory shows every query the server
-        answered, matching the reference registry's completeness."""
+        metadata COUNT/MIN/MAX, fast-scan serving, native GROUP BY; the
+        ``route`` says which): done-instantly, never in the active map —
+        so GetHistory shows every query the server answered, matching
+        the reference registry's completeness."""
         now = time.time()
         info = QueryInfo(query_id=uuid.uuid4().hex[:16], sql=sql,
                          token=token, started_at=now, status="done",
-                         finished_at=now, rows=rows)
+                         finished_at=now, rows=rows, route=route)
         with self._lock:
             self._to_history(info)
 

@@ -364,6 +364,9 @@ def _prometheus(h):
     lines.append("# TYPE arc_queries_total counter")
     for status, n in sorted(by_status.items()):
         lines.append(f'arc_queries_total{{status="{status}"}} {n}')
+    lines.append("# TYPE arc_queries_by_route_total counter")
+    for route, n in arc.query.registry.route_totals().items():
+        lines.append(f'arc_queries_by_route_total{{route="{route}"}} {n}')
     lines += ["# TYPE arc_query_seconds_total counter",
               f"arc_query_seconds_total {total_secs:.6f}"]
     h.reply(200, ("\n".join(lines) + "\n").encode(),
@@ -707,7 +710,7 @@ def _estimate(h):
 def _query_row(i) -> dict:
     return {"query_id": i.query_id, "sql": i.sql, "status": i.status,
             "started_at": i.started_at, "finished_at": i.finished_at,
-            "rows": i.rows, "error": i.error}
+            "rows": i.rows, "error": i.error, "route": i.route}
 
 
 def _list_queries(h, which):

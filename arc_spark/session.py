@@ -93,6 +93,23 @@ def ensure_parquet_confs(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
 
 
+def serial_file_listing(spark: SparkSession, roots) -> None:
+    """Raise ``spark.sql.sources.parallelPartitionDiscovery.threshold``
+    when no storage root is an object store. A catalog view reads the
+    snapshot's explicit file list (``MeasurementCatalog.table``), and
+    above the threshold (Spark default 32 paths) Spark fetches those
+    files' statuses with a distributed listing job: on local disk that
+    job cost ~0.85 s at 64 files and ~1.5 s at 160 against ~0.1 s of
+    driver-side stats. On an object store the parallel job beats
+    thousands of serial HEADs, so the default stays there."""
+    from arc_spark.storage import _split_scheme
+
+    if all(_split_scheme(r)[0] in (None, "file") for r in roots if r):
+        spark.conf.set(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            str(2**31 - 1))
+
+
 def get_spark(
     app_name: str = "arc-spark",
     cpus: int | None = None,

@@ -848,6 +848,46 @@ class TestDistributedBulkIngest:
         assert svc.stats["flushed"] == 0
 
 
+    def test_malformed_line_rejects_whole_payload(self, bulk_svc, spark,
+                                                  tmp_path):
+        """Bulk LP is all-or-nothing like the synchronous LP write: one
+        malformed line answers 400 through POST /api/v1/import/lp and
+        through an LP write at or above distributed_decode_min_bytes, on
+        both engines, and leaves no parquet file and no snapshot."""
+        import glob
+        import urllib.error
+        import urllib.request
+
+        from arc_spark.auth import AuthStore
+        from arc_spark.server import ArcServer
+        from arc_spark.sources.line_protocol import LineProtocolError
+
+        root = str(tmp_path)
+        payload = (b"cpu,host=a v=1 1700000000000000000\n"
+                   b"cpu,host=a v= 1700000001000000000\n"
+                   b"cpu,host=a v=3 1700000002000000000\n")
+        svc = bulk_svc(distributed_decode_min_bytes=len(payload))
+        with pytest.raises(LineProtocolError, match="1 of 3 lines"):
+            svc.write_line_protocol("metrics", payload)
+        auth = AuthStore(str(tmp_path / "auth.db"))
+        admin = auth.create_token("admin")
+        server = ArcServer(QueryService(spark, MeasurementCatalog(spark, root)),
+                           svc, auth).start()
+        try:
+            req = urllib.request.Request(
+                f"http://127.0.0.1:{server.port}/api/v1/import/lp?db=metrics",
+                data=payload, method="POST")
+            req.add_header("Authorization", f"Bearer {admin}")
+            with pytest.raises(urllib.error.HTTPError) as err:
+                urllib.request.urlopen(req, timeout=180)
+            assert err.value.code == 400
+        finally:
+            server.stop()
+        assert glob.glob(f"{root}/**/*.parquet", recursive=True) == []
+        assert glob.glob(f"{root}/**/_arc_snapshots", recursive=True) == []
+        assert svc.stats["flushed"] == 0
+
+
 def test_one_decode_write_kernel_in_api():
     """Bulk LP (both engines) and the distributed drain share one
     decode-and-write kernel: in arc_spark/api.py only ``_decode_write``

@@ -168,3 +168,48 @@ def test_invalidate_rebuilds_no_view(spark, tmp_path, monkeypatch):
     monkeypatch.undo()
     # the next read rebuilds it
     assert svc.execute("SELECT COUNT(*) FROM stale_view WHERE 1=1")[0][0] == 3
+
+
+def test_register_rebuild_over_local_files_starts_no_job(spark, tmp_path,
+                                                         spark_jobs):
+    """With every storage root local, engine build raises Spark's
+    parallel-listing threshold, so a view rebuild over 48 committed files
+    lists them on the driver: no Spark job. At Spark's default threshold
+    (32 paths) the same rebuild lists them with a job."""
+    import pyarrow as pa
+
+    from arc_spark.session import serial_file_listing
+    from arc_spark.sources.writer import write_measurement_arrow
+
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    old = spark.conf.get(key)
+    root = str(tmp_path / "data")
+    t0 = 1_709_251_200_000_000  # 2024-03-01T00:00:00Z
+
+    def commit_hour(h):
+        write_measurement_arrow(pa.table({
+            "time": pa.array([t0 + h * 3_600_000_000], pa.int64()),
+            "host": ["a"], "value": [float(h)]}), root, "metrics", "cpu")
+
+    for h in range(47):
+        commit_hour(h)
+    cat = MeasurementCatalog(spark, root)
+    try:
+        serial_file_listing(spark, (root, None, ""))
+        assert int(spark.conf.get(key)) > 10**6
+        cat.register("metrics", "cpu")  # first build infers the schema
+        commit_hour(47)
+        with spark_jobs.started() as jobs:
+            cat.register("metrics", "cpu")
+        assert jobs == []
+        assert spark.table("metrics_cpu").count() == 48
+        spark.conf.set(key, "32")
+        commit_hour(48)
+        with spark_jobs.started() as jobs:
+            cat.register("metrics", "cpu")
+        assert jobs  # the probe sees the listing job it replaces
+        # an object-store root keeps Spark's parallel listing
+        serial_file_listing(spark, (root, "s3://bucket/cold"))
+        assert spark.conf.get(key) == "32"
+    finally:
+        spark.conf.set(key, old)

@@ -223,3 +223,34 @@ class TestHttpServing:
         for name, value in first.items():
             assert second.get(name, 0.0) >= value, name
         assert second['arc_queries_total{status="done"}'] == 105
+
+
+def test_every_query_records_its_route(live):
+    """One query of each route: the history endpoint returns each entry's
+    route, and /metrics counts queries per route over the fixed label
+    set."""
+    port, admin, svc, _ = live
+
+    def routes_metric() -> dict[str, float]:
+        _, body, _ = _req(port, "/metrics", token=admin)
+        return {line.split('"')[1]: float(line.rsplit(" ", 1)[1])
+                for line in body.decode().splitlines()
+                if line.startswith("arc_queries_by_route_total{")}
+
+    assert routes_metric() == {"native_count": 0, "native_scan": 0,
+                               "native_agg": 0, "spark": 0}
+    queries = {
+        "native_count": "SELECT COUNT(*) FROM cpu",
+        "native_scan": "SELECT * FROM cpu LIMIT 2",
+        "native_agg": "SELECT host, AVG(usage) FROM cpu GROUP BY host",
+        "spark": "SELECT host FROM cpu WHERE usage > 0.6",
+    }
+    for sql in queries.values():
+        status, _, _ = _req(port, "/api/v1/query", "POST", admin,
+                            json.dumps({"sql": sql}).encode())
+        assert status == 200
+    _, body, _ = _req(port, "/api/v1/queries/history", token=admin)
+    by_sql = {q["sql"]: q["route"] for q in json.loads(body)["queries"]}
+    assert {r: by_sql[sql] for r, sql in queries.items()} == {
+        r: r for r in queries}
+    assert routes_metric() == {r: 1.0 for r in queries}
