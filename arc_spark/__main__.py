@@ -134,8 +134,7 @@ def _maintain(args) -> int:
                 spark, root, db, meas,
                 min_files=comp["min_files"],
                 min_age_seconds=comp["min_age_hours"] * 3600,
-                max_files_per_batch=comp["max_files_per_batch"],
-                defer_input_deletion=comp["defer_input_deletion"]))
+                max_files_per_batch=comp["max_files_per_batch"]))
         out["jobs"]["compaction"] = {"partitions": len(done)}
     if "retention" in jobs:
         from arc_spark.operators.lifecycle import apply_retention

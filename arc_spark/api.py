@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 import threading
 
+from arc_spark import snapshots
 from arc_spark.catalog import MeasurementCatalog, validate_identifier
 from arc_spark.governance import (
     Governor,
@@ -578,6 +579,7 @@ class QueryService:
         return f"SELECT * FROM {measurement}" + (
             f" WHERE {where}" if where else "")
 
+    @snapshots.reading()
     def query_measurement(
         self,
         db: str,
@@ -651,6 +653,7 @@ class QueryService:
             collect=_spark_collect(fmt),
         )
 
+    @snapshots.reading()
     def scan_measurement_arrow(self, db: str, measurement: str,
                                limit: int = 1000, token: str = "",
                                snapshot: int | None = None,
@@ -1018,6 +1021,7 @@ class QueryService:
         marker for native scans; :func:`serving.encode` does the work)."""
         return encode(table, fmt)
 
+    @snapshots.reading()
     def execute(self, sql: str, token: str = "", fmt: str = "rows",
                 db: str | None = None):
         """Run one query request end-to-end.

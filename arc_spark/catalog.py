@@ -802,8 +802,9 @@ class MeasurementCatalog:
         Single-tier only: versions are per measurement-path, so a
         multi-tier union has no single coherent pin — refused loudly
         rather than guessed. Raises ValueError for pruned/unknown
-        versions; referenced files must still exist (compaction's
-        ``defer_input_deletion`` is the window that guarantees it)."""
+        versions. A replaced version reads only while a read that began
+        before its ``snapshots.retire`` is running; the caller holds
+        ``snapshots.reading()`` across the read to stay in that window."""
         from arc_spark import snapshots
 
         paths = self.paths(db, measurement)

@@ -144,10 +144,6 @@ DEFAULTS: dict[str, dict[str, Any]] = {
         "min_age_hours": 1.0,
         "min_files": 10,
         "max_files_per_batch": 30,
-        # lakehouse deletion discipline on snapshot-managed trees: replaced
-        # inputs stay as invisible orphans until the reconciler sweeps them
-        # (no missing-file race for in-flight queries)
-        "defer_input_deletion": False,
         "daily_enabled": False,
         "daily_interval_s": 3600,
         "daily_min_files": 12,
@@ -582,7 +578,6 @@ def build_engine(cfg: dict, spark=None) -> dict:
                             min_files=comp["min_files"],
                             min_age_seconds=comp["min_age_hours"] * 3600,
                             max_files_per_batch=comp["max_files_per_batch"],
-                            defer_input_deletion=comp["defer_input_deletion"],
                         ))
             return {"partitions": len(out)}
 

@@ -10,10 +10,12 @@ Reference (A20-A25, /root/reference/internal/compaction/):
 - crash safety via manifest: write-audit-publish (manifest.go)
 
 Spark translation: one job per partition-dir candidate — read files, heal,
-dedup with a window, sort, coalesce(1), write to a temp dir, fsync-rename
-into place, delete sources. The window shuffle is per-partition-dir (hour or
-day of one measurement), so memory is bounded by partition size regardless
-of total table size.
+dedup with a window, sort, coalesce(1), write to a temp dir, rename into
+place, commit the swap, then ``snapshots.retire`` the sources. No fsync
+runs before the rename or the delete; that durability barrier (ROADMAP
+item 2) belongs inside ``retire``. The window shuffle is per-partition-dir
+(hour or day of one measurement), so memory is bounded by partition size
+regardless of total table size.
 
 All file operations flow through :mod:`arc_spark.storage` backends
 (reference internal/storage/backend.go): the measurement root — and the
@@ -31,6 +33,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from arc_spark import snapshots
 from arc_spark.sources.writer import read_manifest
 from arc_spark.storage import backend_for
 
@@ -77,35 +80,32 @@ def dedup_window(df: DataFrame, tag_columns: list[str], dedup_time_only: bool = 
     return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
 
 
-def partition_dirs(meas_path: str) -> list[str]:
-    """All leaf hive partition dirs (hour level) under a measurement."""
-    return backend_for(meas_path).partition_dirs(
-        meas_path, ["year=", "month=", "day=", "hour="]
-    )
+def _due_dirs(meas_path: str, segments: list[str], min_files: int,
+              min_age_seconds: float, now: float | None) -> list[str]:
+    """Partition dirs at ``segments`` depth holding ≥ ``min_files``
+    COMMITTED files, the newest at least ``min_age_seconds`` old. Replaced
+    files still waiting for their retire must not keep a compacted
+    partition eligible."""
+    bk = backend_for(meas_path)
+    now = now if now is not None else time.time()
+    committed = set(snapshots.data_files(meas_path, bk=bk))
+    out = []
+    for d in bk.partition_dirs(meas_path, segments):
+        files = [f for f in bk.find_files(d, suffix=".parquet")
+                 if f in committed]
+        if files and len(files) >= min_files and \
+                now - max(bk.mtime(f) for f in files) >= min_age_seconds:
+            out.append(d)
+    return out
 
 
 def compaction_candidates(
     meas_path: str, min_files: int = 10, min_age_seconds: float = 3600,
     now: float | None = None,
 ) -> list[str]:
-    """Partition dirs eligible for compaction (reference tier policy).
-    Only COMMITTED files count — deferred-deletion orphans must not keep
-    a fully-compacted partition eligible."""
-    from arc_spark import snapshots
-
-    bk = backend_for(meas_path)
-    now = now if now is not None else time.time()
-    committed = set(snapshots.data_files(meas_path, bk=bk))
-    out = []
-    for d in partition_dirs(meas_path):
-        files = [f for f in bk.list_files(d, suffix=".parquet")
-                 if f in committed]
-        if len(files) < min_files:
-            continue
-        newest = max(bk.mtime(f) for f in files)
-        if now - newest >= min_age_seconds:
-            out.append(d)
-    return out
+    """Hour dirs eligible for compaction (reference tier policy)."""
+    return _due_dirs(meas_path, ["year=", "month=", "day=", "hour="],
+                     min_files, min_age_seconds, now)
 
 
 def compact_partition_dir(
@@ -116,17 +116,8 @@ def compact_partition_dir(
     part_dir: str,
     dedup: bool = True,
     max_files_per_batch: int = 30,
-    defer_input_deletion: bool = False,
 ) -> dict:
     """Compact one hive partition dir: N files → ⌈N/batch⌉, sorted + deduped.
-
-    ``defer_input_deletion``: skip the physical removal of replaced
-    inputs — the snapshot commit already made them invisible, so an
-    in-flight query that resolved the PREVIOUS snapshot can finish
-    reading them (no missing-file race). The orphans
-    are the reconciler's ``orphan_data`` class, swept once aged. This is
-    the lakehouse deletion discipline (Iceberg expire-snapshots); prompt
-    deletion (default) matches the reference's immediate swap.
 
     Crash safety (reference manifest.go): a manifest naming inputs+output is
     written BEFORE any replace; output goes to a `.compact-tmp` sibling and
@@ -158,8 +149,6 @@ def compact_partition_dir(
     # never had — orphans are the reconciler's to sweep. Resolving the
     # snapshot also adopts a never-committed tree BEFORE any job manifest
     # is written, so the recorded commit is recovery's only pivot.
-    from arc_spark import snapshots
-
     committed = set(snapshots.data_files(meas_path, bk=bk))
     inputs = [f for f in bk.list_files(part_dir, suffix=".parquet")
               if f in committed]
@@ -181,7 +170,6 @@ def compact_partition_dir(
                 spark, bk, part_dir, measurement, group,
                 tags, sort_keys, manifest.get("dedup_time", False), dedup,
                 meas_path=meas_path,
-                defer_input_deletion=defer_input_deletion,
             )
             rows += r
             nxt.extend(outs)
@@ -207,11 +195,10 @@ def _compact_file_batch(
     sort_keys: list,
     dedup_time_only: bool,
     dedup: bool,
-    meas_path: str | None = None,
-    defer_input_deletion: bool = False,
+    meas_path: str,
 ) -> tuple[int, list[str]]:
     """One crash-safe merge of ``inputs`` → one output file (manifest →
-    write tmp → audit → publish → snapshot commit → remove inputs).
+    write tmp → audit → publish → snapshot commit → retire inputs).
     Returns (rows, published file paths) so a follow-up pass can merge
     batch outputs.
 
@@ -221,8 +208,6 @@ def _compact_file_batch(
     pre-compaction or post-compaction file set, never both or neither.
     Crash before the commit → recover_incomplete rolls BACK (outputs were
     never visible); crash after → rolls FORWARD (inputs already invisible)."""
-    if len(inputs) <= 1:
-        return 0, []
     job_id = uuid.uuid4().hex[:8]
     tmp_dir = part_dir + f".compact-tmp-{job_id}"
     # per-batch manifest; the name keeps the .compact-manifest.json suffix
@@ -247,32 +232,23 @@ def _compact_file_batch(
     )
     out_rows = spark.read.parquet(bk.spark_url(tmp_dir)).count()  # audit before publish
 
-    # publish: move compacted file in, remove inputs, drop tmp + manifest.
-    # The planned destination names are recorded in the job manifest BEFORE
-    # any move so recover_incomplete() can roll a half-published job back
-    # (delete outputs while all inputs survive) or forward (finish removing
-    # inputs once any input deletion started) instead of leaving both copies.
+    # publish: the planned names and the swap commit are recorded BEFORE
+    # any move, so recover_incomplete() rolls a crashed job back (outputs
+    # not committed) or forward (committed: retire the inputs).
     compacted = bk.list_files(tmp_dir, suffix=".parquet")
     ts = int(time.time() * 1000)
     published = [
         bk.join(part_dir, f"{measurement}_compacted_{ts}_{job_id}_{i}.parquet")
         for i in range(len(compacted))
     ]
-    meas_path = meas_path or bk.dirname(
-        bk.dirname(bk.dirname(bk.dirname(part_dir))))
     commits = [{"tree": meas_path, "add": published, "remove": inputs}]
     bk.write_json(job_manifest,
                   {"inputs": inputs, "tmp_dir": tmp_dir, "partition": part_dir,
                    "published": published, "commits": commits})
     for src, dst in zip(compacted, published):
         bk.move_file(src, dst)
-    from arc_spark import snapshots
-
     snapshots.commit(meas_path, add=published, remove=inputs, bk=bk)
-    if not defer_input_deletion:
-        for f in inputs:
-            bk.remove_file(f)
-            bk.remove_crc_sidecar(f)
+    snapshots.retire(meas_path, inputs)
     bk.remove_tree(tmp_dir, ignore_errors=True)
     bk.remove_file(job_manifest)
     return out_rows, published
@@ -285,18 +261,15 @@ def recover_incomplete(meas_path: str) -> int:
     the recorded commit is the pivot. Outputs present in the destination
     tree's current snapshot → the swap became visible, ROLL FORWARD
     (apply the recorded commits — cross-tree jobs like the daily tier
-    record two — then finish removing inputs); otherwise (no outputs
+    record two — and retire what each removed); otherwise (no outputs
     published yet, or not in the snapshot) readers never saw them, ROLL
     BACK by deleting them. Every compaction adopts its trees before it
     writes a job manifest, so the snapshot is authoritative here. Tmp
     dirs and manifests are dropped either way."""
-    from arc_spark import snapshots
-
     bk = backend_for(meas_path)
     n = 0
     for m in bk.find_files(meas_path, suffix=".compact-manifest.json"):
         job = bk.read_json(m)
-        inputs = job.get("inputs", [])
         published = job.get("published", [])
         commits = job.get("commits") or []
         forward = bool(commits and published) and snapshots.contains(
@@ -304,13 +277,12 @@ def recover_incomplete(meas_path: str) -> int:
         if forward:
             # outputs are visible: finish the swap — re-apply commits
             # (idempotent set ops on the snapshot; inputs may live on
-            # another tree/backend for daily-tier jobs) then remove
-            # surviving inputs
+            # another tree/backend for daily-tier jobs) and retire what
+            # each one removed
             for c in commits:
                 snapshots.commit(c["tree"], add=c.get("add", []),
                                  remove=c.get("remove", []))
-            for f in inputs:
-                backend_for(f).remove_file_if_exists(f)
+                snapshots.retire(c["tree"], c.get("remove", []))
         else:
             # roll back: delete any outputs that were already moved in
             for f in published:
@@ -326,12 +298,6 @@ def recover_incomplete(meas_path: str) -> int:
     return n
 
 
-def day_dirs(meas_path: str) -> list[str]:
-    return backend_for(meas_path).partition_dirs(
-        meas_path, ["year=", "month=", "day="]
-    )
-
-
 def daily_candidates(
     meas_path: str, min_files: int = 12, min_age_seconds: float = 86400,
     now: float | None = None,
@@ -339,21 +305,8 @@ def daily_candidates(
     """Day dirs eligible for the daily tier (reference daily.go:14-52:
     days ≥24 h old holding ≥12 files — i.e. hourly compaction has already
     run and the day still has many per-hour files)."""
-    from arc_spark import snapshots
-
-    bk = backend_for(meas_path)
-    now = now if now is not None else time.time()
-    committed = set(snapshots.data_files(meas_path, bk=bk))
-    out = []
-    for d in day_dirs(meas_path):
-        files = [f for f in bk.find_files(d, suffix=".parquet")
-                 if f in committed]
-        if len(files) < min_files:
-            continue
-        newest = max(bk.mtime(f) for f in files)
-        if now - newest >= min_age_seconds:
-            out.append(d)
-    return out
+    return _due_dirs(meas_path, ["year=", "month=", "day="],
+                     min_files, min_age_seconds, now)
 
 
 def compact_day(
@@ -391,8 +344,6 @@ def compact_day(
     sort_keys = [c for c in manifest.get("sort_keys", []) if c != "time"] + ["time"]
 
     src_meas_path = src_bk.join(root, db, measurement)
-    from arc_spark import snapshots
-
     committed = set(snapshots.data_files(src_meas_path, bk=src_bk))
     inputs = [f for f in src_bk.find_files(day_dir, suffix=".parquet")
               if f in committed]
@@ -456,13 +407,12 @@ def compact_day(
     # snapshot swap: daily gains the merged file, hot drops the day —
     # committed in that order so the worst crash window shows the day
     # twice (union read, transient, healed by recovery) rather than not
-    # at all. Inputs removed only after both commits (recover rolls
-    # forward past here).
+    # at all. Inputs retired only after both commits (recover rolls
+    # forward past here); exactly the inputs, so a file a late flush
+    # committed into this day while the job ran stays.
     snapshots.commit(dst_meas, add=published, bk=dst_bk)
     snapshots.commit(src_meas, remove=inputs, bk=src_bk)
-    # exactly the inputs: a file a late flush committed into this day
-    # while the job ran stays on disk and in the hot snapshot
-    src_bk.remove_data_files(inputs, day_dir)
+    snapshots.retire(src_meas, inputs)
     dst_bk.remove_tree(tmp_dir, ignore_errors=True)
     dst_bk.remove_file(job_manifest)
     return {"day": day_dir, "output": published[0] if published else None,
@@ -504,7 +454,6 @@ def compact_measurement(
     min_age_seconds: float = 3600,
     now: float | None = None,
     max_files_per_batch: int = 30,
-    defer_input_deletion: bool = False,
 ) -> list[dict]:
     """Hourly-tier compaction pass over one measurement. Each swap
     commits a snapshot; catalog views pick it up on their next read
@@ -516,8 +465,7 @@ def compact_measurement(
     results = _run_jobs(
         [lambda d=d: compact_partition_dir(
             spark, root, db, measurement, d,
-            max_files_per_batch=max_files_per_batch,
-            defer_input_deletion=defer_input_deletion)
+            max_files_per_batch=max_files_per_batch)
          for d in cands]
     )
     if results:

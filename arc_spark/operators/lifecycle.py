@@ -3,16 +3,15 @@
 Reference:
 - retention (A27, /root/reference/internal/api/retention.go:407-900): cutoff
   = now − (retention_days + buffer); files whose max(time) < cutoff are
-  removed. With hive partitioning this becomes partition-prefix deletes —
+  removed. With hive partitioning whole expired days go by their path —
   no file content ever read.
 - predicate delete (A26, /root/reference/internal/api/delete.go:531-870):
   find files containing matches, rewrite each keeping NOT(pred), swap.
 
 All file operations flow through :mod:`arc_spark.storage` backends
 (reference internal/storage/backend.go) so retention and delete run
-unchanged against an object-store measurement root: partition-prefix
-deletes become prefix LIST+DELETE batches, footer probes are ranged GETs
-through ``pyarrow.fs``.
+unchanged against an object-store measurement root: listings are prefix
+LISTs, footer probes are ranged GETs through ``pyarrow.fs``.
 """
 
 from __future__ import annotations
@@ -23,6 +22,7 @@ import uuid
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from arc_spark import snapshots
 from arc_spark.storage import backend_for
 
 
@@ -71,59 +71,47 @@ def apply_retention(
     now: dt.datetime | None = None,
     per_file: bool = True,
 ) -> list[str]:
-    """Drop data older than the cutoff. Returns removed paths.
+    """Drop committed data older than the cutoff. Returns removed paths.
 
     Two passes, both O(metadata) — the 100 TB path, no data read:
-    1. whole day partitions entirely before the cutoff: directory unlink,
-       like dropping `day=` prefixes on object storage.
+    1. whole day partitions entirely before the cutoff.
     2. (``per_file``) inside the boundary day that straddles the cutoff:
        individual files whose footer max(time) < cutoff are removed
        (reference retention.go:791-900) — without this, a partly-expired
        day retains every file until the whole day ages out.
-    """
-    from arc_spark import snapshots
 
+    ONE snapshot commit, then ``snapshots.retire`` of exactly those
+    files: one a late flush commits into an expired day meanwhile stays.
+    """
     bk = backend_for(root)
     now = now or dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
     cutoff = now - dt.timedelta(days=retention_days + buffer_days)
     removed = []
-    doomed_files: list[str] = []
-    doomed_days: list[str] = []
-    boundary_cleanup: list[str] = []
+    doomed: list[str] = []
     meas = bk.join(root, db, measurement)
+    committed = set(snapshots.data_files(meas, bk=bk))
     for day_dir in bk.partition_dirs(meas, ["year=", "month=", "day="]):
         day = _partition_day(day_dir)
         # a whole day is droppable only if its last instant is before cutoff
-        if day + dt.timedelta(days=1) <= cutoff:
-            doomed_files.extend(bk.find_files(day_dir, suffix=".parquet"))
-            doomed_days.append(day_dir)
-            removed.append(day_dir)
-        elif per_file and day <= cutoff:
+        whole = day + dt.timedelta(days=1) <= cutoff
+        if not whole and not (per_file and day <= cutoff):
+            continue
+        files = [f for f in bk.find_files(day_dir, suffix=".parquet")
+                 if f in committed]
+        if whole:
+            if files:
+                doomed.extend(files)
+                removed.append(day_dir)
+        else:
             # boundary day: per-file footer max(time) check
-            for f in bk.find_files(day_dir, suffix=".parquet"):
+            for f in files:
                 mx = _file_max_time(bk, f)
                 if mx is not None and mx < cutoff:
-                    doomed_files.append(f)
+                    doomed.append(f)
                     removed.append(f)
-            boundary_cleanup.append(day_dir)
-    if not doomed_files and not doomed_days:
-        return removed
-    # ONE snapshot commit BEFORE any physical delete: the whole retention
-    # pass becomes invisible atomically; a crash mid-delete leaves
-    # invisible orphans (reconciler's orphan_data class), never a
-    # snapshot pointing at missing files
-    snapshots.commit(meas, remove=doomed_files, bk=bk)
-    for f in doomed_files:
-        if not any(f.startswith(d.rstrip("/") + "/") for d in doomed_days):
-            bk.remove_file_if_exists(f)
-            bk.remove_crc_sidecar(f)
-    for d in doomed_days:
-        bk.remove_tree(d, ignore_errors=True)
-    # clean now-empty hour dirs so listings stay tidy
-    for day_dir in boundary_cleanup:
-        for hour_dir in bk.partition_dirs(day_dir, ["hour="]):
-            if not bk.list_files(hour_dir, suffix=".parquet"):
-                bk.remove_tree(hour_dir, ignore_errors=True)
+    if doomed:
+        snapshots.commit(meas, remove=doomed, bk=bk)
+        snapshots.retire(meas, doomed)
     return removed
 
 
@@ -131,8 +119,6 @@ def _read_live(spark: SparkSession, bk, meas_path: str):
     """Scan the measurement's LIVE file set: the committed snapshot
     (orphans invisible, exactly what readers see). Returns None when
     there is nothing to read."""
-    from arc_spark import snapshots
-
     files = snapshots.data_files(meas_path, bk=bk)
     if not files:
         return None
@@ -211,16 +197,12 @@ def delete_where(
 
         with ThreadPoolExecutor(max_workers=min(len(affected), 8)) as ex:
             swaps = list(ex.map(_rewrite, affected))
-    from arc_spark import snapshots
-
     snapshots.commit(
         meas_path,
         add=[n for _, n in swaps if n],
         remove=[o for o, _ in swaps],
         bk=bk,
     )
-    for old, _ in swaps:
-        bk.remove_file_if_exists(old)
-        bk.remove_crc_sidecar(old)
+    snapshots.retire(meas_path, [o for o, _ in swaps])
     spark.catalog.refreshByPath(bk.spark_url(meas_path))
     return {"files": len(affected), "deleted_rows": matched, "dry_run": False}

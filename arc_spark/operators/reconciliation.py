@@ -26,10 +26,11 @@ is NOT canonical state:
   risky half and runs only after the safe sweep succeeds).
 - ``orphan_data``  — on a SNAPSHOT-MANAGED measurement
   (:mod:`arc_spark.snapshots`): in-layout parquet NOT in the current
-  snapshot. These are precisely the invisible leftovers of a crash
-  between "files written" and "commit" (or after a commit that removed
-  them but before their physical delete) — readers cannot see them, so
-  deleting aged ones is safe; still gated on ``delete_stray_data``.
+  snapshot: the leftovers of a crash between "files written" and
+  "commit", or between a commit that removed them and their
+  ``snapshots.retire`` — no reader can see them, so deleting aged ones
+  is safe; still gated on ``delete_stray_data``. Replaced files that
+  ``retire`` holds for a running read (``snapshots.held``) are skipped.
 - ``suspect_data`` — zero-byte or footer-unreadable parquet inside valid
   partitions (and in the snapshot, when managed). REPORT-ONLY: the
   reconciler never auto-deletes reader-visible data files (blast-radius
@@ -226,6 +227,7 @@ class Reconciler:
                 # current committed file set (a dry run adopts nothing)
                 snap_set = set(snapshots.current(
                     meas_path, bk=bk, publish=not run.dry_run)[1])
+                held = snapshots.held(bk, meas_path)
                 seen_rels: set[str] = set()
 
                 # 2) walk every file once, classify the rest
@@ -266,6 +268,8 @@ class Reconciler:
                                     and self._aged_out(bk, f, now, run)):
                                 self._delete(bk, f, run)
                             continue
+                        if "/".join(parts[2:]) in held:
+                            continue  # a running read's; retire deletes it
                         if "/".join(parts[2:]) not in snap_set:
                             # in-layout, NOT committed: the precise
                             # orphan class — invisible to readers, safe to

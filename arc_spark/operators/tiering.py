@@ -10,7 +10,7 @@ invisible to queries except for storage latency.
 The hot and cold roots may live on DIFFERENT storage backends
 (:mod:`arc_spark.storage`; reference internal/storage/backend.go) — the
 canonical deployment tiers local NVMe to an object store. Every move is
-copy → commit cold add → commit hot remove → delete hot, over exactly the
+copy → commit cold add → commit hot remove → retire hot, over exactly the
 files the hot snapshot lists for the day, so a hot file is only deleted
 after both commits (crash leaves a duplicate, never a loss — the
 catalog's union read tolerates the duplicate window).
@@ -22,6 +22,7 @@ import datetime as dt
 
 import pyarrow.fs as pafs
 
+from arc_spark import snapshots
 from arc_spark.storage import backend_for
 
 
@@ -49,12 +50,10 @@ def migrate_to_cold(
 
     Moves exactly the hot snapshot's files under each day: the cold
     commit adds their copies, the hot commit removes them, and only they
-    are deleted. Returns the list of migrated day-relative paths. Safe to
-    re-run; a partially-migrated day is completed, reusing the copies a
-    crashed run left.
+    are retired (``snapshots.retire``). Returns the list of migrated
+    day-relative paths. Safe to re-run; a partially-migrated day is
+    completed, reusing the copies a crashed run left.
     """
-    from arc_spark import snapshots
-
     hot_bk = backend_for(root)
     cold_bk = backend_for(cold_root)
     now = now or dt.datetime.now()
@@ -64,7 +63,7 @@ def migrate_to_cold(
     # copy even on one backend: a whole-dir rename would yank files out
     # from under the committed hot snapshot before any commit could
     # follow (readers error on missing files), whereas copy → commit cold
-    # add → commit hot remove → delete hot is re-runnable from every
+    # add → commit hot remove → retire hot is re-runnable from every
     # crash point (worst window: the day visible on both tiers, healed by
     # the next run)
     committed = set(snapshots.data_files(hot_meas, bk=hot_bk))
@@ -94,7 +93,7 @@ def migrate_to_cold(
             )
         snapshots.commit(cold_meas, add=copies, bk=cold_bk)
         snapshots.commit(hot_meas, remove=files, bk=hot_bk)
-        hot_bk.remove_data_files(files, day_dir)
+        snapshots.retire(hot_meas, files)
         moved.append(rel)
     return moved
 

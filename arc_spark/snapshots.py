@@ -17,11 +17,11 @@ This module is the Spark-native equivalent. Per measurement directory
   highest version present; publishing one is a single tmp→rename, which
   is atomic on local filesystems and either-old-or-new on object stores.
 - writers call :func:`commit` with ``add=written_files`` /
-  ``remove=replaced_files`` AFTER the data files are durably written and
-  BEFORE any replaced file is deleted. Crash before commit → readers
-  keep the old snapshot (stray new files are invisible); crash after
-  commit → readers see the new snapshot (stale old files are invisible).
-  The reconciler classifies aged unlisted files as ``orphan_data``.
+  ``remove=replaced_files`` AFTER the data files are written, then
+  :func:`retire` the replaced files: the one deletion rule. Crash before
+  commit → readers keep the old snapshot (stray new files are
+  invisible); crash after commit → readers see the new snapshot (stale
+  old files are invisible, aged ones the reconciler's ``orphan_data``).
 - readers (:meth:`arc_spark.catalog.MeasurementCatalog.table`) resolve
   the current snapshot into an explicit file list for
   ``spark.read.parquet(*files)`` with ``basePath`` — hive partition
@@ -67,6 +67,7 @@ micro-bench locks delta-commit cost flat vs file count.
 
 from __future__ import annotations
 
+import contextlib
 import threading
 import time
 import uuid
@@ -97,6 +98,65 @@ def _lock_for(meas_path: str) -> threading.RLock:
         if lk is None:
             lk = _locks[meas_path] = threading.RLock()
         return lk
+
+
+# in-flight reads by sequence number, and the retired files waiting for
+# them as (latest sequence at retire, tree, files)
+_read_guard = threading.Lock()
+_read_seq = 0
+_readers: set[int] = set()
+_queued: list[tuple[int, str, list[str]]] = []
+
+
+@contextlib.contextmanager
+def reading():
+    """Mark a read in flight: files :func:`retire` is handed before the
+    block exits stay on disk until it does. Never waits for a writer."""
+    global _read_seq
+    with _read_guard:
+        _read_seq += 1
+        me = _read_seq
+        _readers.add(me)
+    try:
+        yield
+    finally:
+        with _read_guard:
+            _readers.discard(me)
+            oldest = min(_readers, default=_read_seq + 1)
+            due = [q for q in _queued if q[0] < oldest]
+            _queued[:] = [q for q in _queued if q[0] >= oldest]
+        for _, tree, files in due:
+            # a failed delete must not fail the read: its files are orphans
+            with contextlib.suppress(OSError):
+                _unlink(tree, files)
+
+
+def retire(tree: str, files) -> None:
+    """Delete ``files``, data files under ``tree`` the commit just
+    removed, with their crc sidecars and the partition dirs they leave
+    empty (never ``tree`` itself). With no read in flight that happens
+    before this returns; otherwise the last read that began before this
+    call does it as it exits. Never waits. Files queued when the process
+    dies are the reconciler's aged ``orphan_data``."""
+    files = list(files)
+    if not files:
+        return
+    with _read_guard:
+        if _readers:
+            _queued.append((_read_seq, tree, files))
+            return
+    _unlink(tree, files)
+
+
+def _unlink(tree: str, files: list[str]) -> None:
+    backend_for(tree).remove_data_files(files, tree)
+
+
+def held(bk, meas_path: str) -> set[str]:
+    """Relative paths of the files :func:`retire` queued behind a
+    running read: replaced, not yet deleted, and not orphans."""
+    with _read_guard:
+        return {_rel(bk, meas_path, f) for _, _, fs in _queued for f in fs}
 
 
 def _snap_dir(bk, meas_path: str) -> str:
@@ -220,14 +280,13 @@ def adopt(meas_path: str, bk=None) -> int:
 
 
 def _retired(bk, meas_path: str) -> set[str]:
-    """Relative paths re-adoption must never commit: every file a
-    retained snapshot version names (a live file the current snapshot
-    leaves out was committed once and then replaced — e.g. compaction
-    inputs kept by ``defer_input_deletion``), and the outputs a leftover
-    compaction job manifest records (in flight, or crashed before its
-    commit: ``recover_incomplete`` decides those). History older than
-    the pruned versions is not consulted."""
-    out: set[str] = set()
+    """Relative paths re-adoption must never commit: files :func:`held`
+    for a running read or named by a retained snapshot version
+    (replaced, then a crash before their retire), and the outputs a
+    leftover compaction job manifest records (in flight, or crashed
+    before its commit: ``recover_incomplete`` decides those). Pruned
+    history is not consulted."""
+    out = held(bk, meas_path)
     for _, path in _versions(bk, meas_path):
         try:
             obj = bk.read_json(path)
@@ -289,9 +348,9 @@ def files_at(meas_path: str, version: int, bk=None) -> list[str]:
     Raises :class:`ValueError` when the version is unknown, pruned away
     (version files age out — same caveat as Delta time travel after
     VACUUM), or its chain is unreadable. The FILES it references must
-    also still exist: compaction with ``defer_input_deletion`` keeps
-    replaced inputs until the reconciler sweeps them, which is the
-    window where time travel across a compaction works."""
+    also still exist: a replaced version stays readable while a read
+    that began before its :func:`retire` is running (:func:`reading`),
+    and not after."""
     bk = bk or backend_for(meas_path)
     vers = dict(_versions(bk, meas_path))
     if version not in vers:
@@ -380,8 +439,8 @@ def commit(meas_path: str, add=(), remove=(), bk=None,
     (which already includes just-written adds), so the first commit
     adopts everything in place.
 
-    Contract for writers: call AFTER the added files are fully written
-    and BEFORE any removed file is physically deleted.
+    Contract for writers: call AFTER the added files are fully written;
+    then pass the removed files to :func:`retire`, never delete them.
 
     Multi-process safety (the A24 collapse's precondition — compaction /
     retention / delete may run as SEPARATE Spark jobs against a serving

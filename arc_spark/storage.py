@@ -310,32 +310,32 @@ class StorageBackend:
 
     def remove_file_if_exists(self, path: str) -> None:
         if self.isfile(path):
-            self.fs.delete_file(self.fs_path(path))
-
-    def remove_crc_sidecar(self, path: str) -> None:
-        """Drop Hadoop local-FS '.name.crc' sidecar if present — a stale crc
-        next to a rewritten file fails reads with ChecksumException. No-op
-        on object stores (Hadoop writes no sidecars there)."""
-        crc = self.join(self.dirname(path), "." + self.basename(path) + ".crc")
-        self.remove_file_if_exists(crc)
+            self.remove_file(path)
 
     def remove_data_files(self, files: list[str], top: str) -> None:
-        """Delete exactly ``files`` (and their crc sidecars), then every
-        directory between them and ``top`` (inclusive) that holds no file
-        any more. Unlike ``remove_tree(top)``, a file another writer put
-        under ``top`` meanwhile — a flush committing into a day being
-        moved — survives with its directories."""
+        """Delete exactly ``files`` and their Hadoop ``.name.crc``
+        sidecars (a stale crc next to a rewritten file fails reads with
+        ChecksumException), then every directory below ``top`` that the
+        deletes left holding no file; ``top`` itself stays. Unlike
+        ``remove_tree``, a file another writer put there meanwhile — a
+        flush committing into a day being moved — survives with its
+        directories. Only :func:`arc_spark.snapshots.retire` calls this."""
         top = top.rstrip("/")
-        dirs = {top}
+        dirs = set()
         for f in files:
             self.remove_file_if_exists(f)
-            self.remove_crc_sidecar(f)
             d = self.dirname(f)
-            while len(d) > len(top) and d.startswith(top + "/"):
+            self.remove_file_if_exists(
+                self.join(d, "." + self.basename(f) + ".crc"))
+            while d.startswith(top + "/"):
                 dirs.add(d)
                 d = self.dirname(d)
+        kept: list[str] = []
         for d in sorted(dirs, key=len, reverse=True):
-            if not self.find_files(d):
+            # a directory above one that still holds files is not empty
+            if any(k.startswith(d + "/") for k in kept) or self.find_files(d):
+                kept.append(d)
+            else:
                 self.remove_tree(d, ignore_errors=True)
 
     def remove_tree(self, path: str, ignore_errors: bool = False) -> None:

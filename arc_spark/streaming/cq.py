@@ -23,6 +23,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from arc_spark import snapshots
 from arc_spark.sources.writer import write_measurement
 
 
@@ -87,6 +88,7 @@ class ContinuousQuery:
             return None
         return start, end
 
+    @snapshots.reading()
     def run_once(self, spark: SparkSession, root: str,
                  now: dt.datetime | None = None, plan=None) -> dict:
         """Run the due window, if any. ``plan`` (``sql → DataFrame``,

@@ -321,6 +321,50 @@ class TestDailyTier:
         assert df.collect()[0]["n"] == 36
 
 
+def test_retention_keeps_a_file_a_late_flush_commits(spark, tmp_path,
+                                                      monkeypatch):
+    """A flush that commits into an expired day while retention runs:
+    retention deletes exactly the files it listed, so the late file stays
+    on disk and in the snapshot, and its rows stay readable (a whole-day
+    delete used to unlink it while the snapshot still listed it)."""
+    import pyarrow as pa
+
+    from arc_spark import snapshots
+    from arc_spark.catalog import MeasurementCatalog
+    from arc_spark.sources.writer import write_measurement_arrow
+
+    def rows(n, v0):
+        return pa.table({
+            "time": pa.array([dt.datetime(2024, 3, 1, 5, i)
+                              for i in range(n)], pa.timestamp("us")),
+            "host": ["a"] * n, "value": [v0 + i for i in range(n)]})
+
+    root = str(tmp_path)
+    write_measurement_arrow(rows(10, 0.0), root, "metrics", "cpu",
+                            tag_columns=["host"])
+    real_commit = snapshots.commit
+    late = []
+
+    def commit(meas_path, *a, **k):
+        # land the late flush right before retention's commit
+        if not late and k.get("remove"):
+            late.append(1)
+            write_measurement_arrow(rows(5, 100.0), root, "metrics", "cpu",
+                                    tag_columns=["host"])
+        return real_commit(meas_path, *a, **k)
+
+    monkeypatch.setattr(snapshots, "commit", commit)
+    removed = apply_retention(root, "metrics", "cpu", retention_days=1,
+                              buffer_days=0, now=dt.datetime(2024, 3, 5))
+    monkeypatch.undo()
+    assert late and len(removed) == 1
+    files = snapshots.data_files(os.path.join(root, "metrics", "cpu"))
+    assert len(files) == 1 and os.path.exists(files[0])
+    df = MeasurementCatalog(spark, root).table("metrics", "cpu")
+    assert sorted(r["value"] for r in df.collect()) == \
+        [100.0 + i for i in range(5)]
+
+
 class TestPerFileRetention:
     def test_boundary_day_files_dropped_individually(self, spark, tmp_path):
         """Reference retention.go:791-900: a partly-expired day drops its

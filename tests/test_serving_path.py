@@ -197,6 +197,39 @@ class TestHttpServing:
         assert calls == []  # the compaction commit is the only signal
         assert svc.execute("SELECT COUNT(*) FROM cpu WHERE 1=1")[0][0] == 4
 
+    def test_compaction_route_unlinks_its_inputs_before_replying(
+            self, live):
+        """With no query in flight, POST /api/v1/compaction answers with
+        its inputs already unlinked; a read held open across it keeps
+        them until the read ends."""
+        import os
+
+        from arc_spark import snapshots
+
+        port, admin, svc, ingest = live
+        tree = os.path.join(ingest.root, "metrics", "cpu")
+        body = json.dumps({"db": "metrics", "measurement": "cpu",
+                           "min_files": 2, "min_age_seconds": 0}).encode()
+
+        def flush_one_more(host):
+            ingest.write_line_protocol(
+                "metrics", f"cpu,host={host} usage=0.1 "
+                           "1700000180000000000\n".encode())
+            ingest.flush()
+            return snapshots.data_files(tree)
+
+        inputs = flush_one_more("d")
+        assert len(inputs) == 2
+        status, _, _ = _req(port, "/api/v1/compaction", "POST", admin, body)
+        assert status == 200
+        assert not any(os.path.exists(f) for f in inputs)
+        inputs = flush_one_more("e")
+        with snapshots.reading():
+            _req(port, "/api/v1/compaction", "POST", admin, body)
+            assert all(os.path.exists(f) for f in inputs)
+        assert not any(os.path.exists(f) for f in inputs)
+        assert svc.execute("SELECT COUNT(*) FROM cpu WHERE 1=1")[0][0] == 5
+
     def test_metrics_query_counters_never_decrease(self, live):
         """arc_queries_total / arc_query_seconds_total are Prometheus
         counters: evicting entries from the 100-entry history ring must

@@ -528,12 +528,13 @@ class TestCrashInjection:
         assert cat.table("m", "cpu").count() == 120
 
         # crash right after the snapshot commit, before physical deletes
+        # (retire unlinks each file through remove_file)
         from arc_spark.storage import StorageBackend
 
-        def boom(self, path, ignore_errors=False):
+        def boom(self, path):
             raise OSError("crash before physical delete")
 
-        monkeypatch.setattr(StorageBackend, "remove_tree", boom)
+        monkeypatch.setattr(StorageBackend, "remove_file", boom)
         with pytest.raises(OSError):
             apply_retention(root, "m", "cpu", retention_days=5,
                             buffer_days=0,
@@ -599,8 +600,9 @@ class TestCompactionQueryIsolation:
     def test_queries_stable_during_compaction(self, spark, tmp_path):
         """VERDICT item 10: a query workload running WHILE compaction
         rewrites the same measurement must never see wrong or partial
-        results. With defer_input_deletion the old snapshot's files
-        outlive the swap, so every resolve-then-read races safely."""
+        results. Each read runs inside snapshots.reading(), so the old
+        snapshot's files outlive the swap until every read that may have
+        resolved them is done, and every resolve-then-read races safely."""
         from arc_spark.operators.compaction import compact_measurement
 
         root = str(tmp_path)
@@ -621,7 +623,8 @@ class TestCompactionQueryIsolation:
         def reader():
             try:
                 while not stop.is_set():
-                    n = cat.table("m", "cpu").count()
+                    with snapshots.reading():
+                        n = cat.table("m", "cpu").count()
                     if n not in valid:
                         errors.append(f"torn read: {n}")
                         return
@@ -633,14 +636,16 @@ class TestCompactionQueryIsolation:
             t.start()
         try:
             compact_measurement(spark, root, "m", "cpu", min_files=2,
-                                min_age_seconds=0,
-                                defer_input_deletion=True)
+                                min_age_seconds=0)
         finally:
             stop.set()
             for t in threads:
                 t.join()
         assert errors == []
         assert cat.table("m", "cpu").count() == 30
+        # every replaced input is gone once the readers finished
+        assert len(glob.glob(f"{root}/m/cpu/**/*.parquet",
+                             recursive=True)) == 3
 
 
 class TestTimeTravel:
@@ -695,8 +700,10 @@ class TestTimeTravel:
 
     def test_time_travel_across_compaction_with_deferred_deletion(
             self, spark, tmp_path):
-        """With defer_input_deletion the replaced inputs still exist, so
-        a pre-compaction pin reads the OLD files byte-for-byte."""
+        """A ``table_at(v_pre)`` read held open across a compaction
+        (``snapshots.reading()``) returns the pre-compaction rows: the
+        replaced inputs are deleted only when the read is released, and
+        then they are gone."""
         from arc_spark.catalog import MeasurementCatalog
         from arc_spark.operators.compaction import compact_measurement
         from arc_spark.sources.writer import write_measurement_arrow
@@ -707,16 +714,23 @@ class TestTimeTravel:
                                     tag_columns=["host"])
         mp = f"{root}/m/cpu"
         v_pre, rels_pre = snapshots.current(mp)
-        compact_measurement(spark, root, "m", "cpu", min_files=2,
-                            min_age_seconds=0, defer_input_deletion=True)
         cat = MeasurementCatalog(spark, root)
-        pinned = cat.table_at("m", "cpu", v_pre)
-        assert sorted(
-            os.path.relpath(f, mp)
-            for f in snapshots.files_at(mp, v_pre)) == rels_pre
-        # LWW dedup collapsed replays in the compacted head; the pinned
-        # read sees the pre-compaction file set (3 identical writes)
-        assert pinned.count() == 15
+        with snapshots.reading():
+            pinned = cat.table_at("m", "cpu", v_pre)
+            compact_measurement(spark, root, "m", "cpu", min_files=2,
+                                min_age_seconds=0)
+            assert sorted(
+                os.path.relpath(f, mp)
+                for f in snapshots.files_at(mp, v_pre)) == rels_pre
+            # LWW dedup collapsed replays in the compacted head; the
+            # pinned read sees the pre-compaction file set (3 identical
+            # writes)
+            assert pinned.count() == 15
+            assert cat.table("m", "cpu").count() == 5
+        # released: v_pre's replaced files are gone, the head still reads
+        assert not any(os.path.exists(os.path.join(mp, r)) for r in rels_pre)
+        assert cat.table("m", "cpu").count() == 5
+
 
     def test_rest_snapshot_param(self, spark, tmp_path):
         """GET /api/v1/query/:m?snapshot=N pins the fast scan; bad
@@ -966,10 +980,10 @@ class TestAdoption:
     def test_invalidate_leaves_engine_files_uncommitted(
             self, spark, tmp_path, monkeypatch):
         """Re-adoption commits files dropped in by hand, never the
-        engine's own uncommitted files: compaction inputs kept by
-        ``defer_input_deletion`` and the output of a compaction that
-        crashed between its move and its commit stay invisible through
-        ``invalidate``."""
+        engine's own uncommitted files: compaction inputs whose retire
+        is queued behind a running read, and the output of a compaction
+        that crashed between its move and its commit, stay invisible
+        through ``invalidate``."""
         from arc_spark.operators.compaction import (
             compact_partition_dir,
             recover_incomplete,
@@ -989,12 +1003,14 @@ class TestAdoption:
         before = served()
         assert len(before) == 60
         hours = sorted(glob.glob(f"{meas}/year=*/month=*/day=*/hour=*"))
-        compact_partition_dir(spark, root, "m", "cpu", hours[0],
-                              defer_input_deletion=True)
-        assert len(glob.glob(f"{hours[0]}/*.parquet")) == 4  # 3 kept + 1
-        cat.invalidate("m", "cpu")
-        assert served() == before
-        assert cat.count_rows("m", "cpu") == 60
+        with snapshots.reading():
+            compact_partition_dir(spark, root, "m", "cpu", hours[0])
+            # 3 queued + 1
+            assert len(glob.glob(f"{hours[0]}/*.parquet")) == 4
+            cat.invalidate("m", "cpu")
+            assert served() == before
+            assert cat.count_rows("m", "cpu") == 60
+        assert len(glob.glob(f"{hours[0]}/*.parquet")) == 1
 
         def boom(*a, **k):
             raise OSError("crash before snapshot commit")
@@ -1144,3 +1160,81 @@ def test_no_tree_kind_checks_outside_snapshots():
         if globs and not (rel == "sources/writer.py" and globs == 2):
             offenders.append(f"{rel}: live_glob x{globs}")
     assert offenders == []
+
+
+def _calls_by_function(src: str):
+    """(innermost enclosing function name, ast.Call) for every call."""
+    import ast
+
+    out = []
+
+    def visit(node, fn):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(child, child.name)
+                continue
+            if isinstance(child, ast.Call):
+                out.append((fn, child))
+            visit(child, fn)
+
+    visit(ast.parse(src), "<module>")
+    return out
+
+
+# direct single-file deletes in arc_spark/operators/ — none of them takes
+# a committed data file: (module, function, argument) → what it deletes
+_DIRECT_DELETES = {
+    ("compaction.py", "_compact_file_batch", "job_manifest"): "job manifest",
+    ("compaction.py", "compact_day", "job_manifest"): "job manifest",
+    ("compaction.py", "recover_incomplete", "f"):
+        "roll-back of never-committed outputs",
+    ("compaction.py", "recover_incomplete", "m"): "job manifest",
+    ("export.py", "_write_commit", "tmp"): "export log tmp file",
+    ("export.py", "_write_checkpoint", "tmp"): "export checkpoint tmp file",
+    ("export.py", "export_tree", "dbk.join(dest, rel)"):
+        "export copy outside the engine's trees",
+    ("iceberg_export.py", "_export_iceberg_attempt", "tmp"):
+        "metadata tmp file",
+    ("iceberg_export.py", "_export_iceberg_attempt", "manifest_path"):
+        "losing exporter's manifest",
+    ("iceberg_export.py", "_export_iceberg_attempt", "mlist_path"):
+        "losing exporter's manifest list",
+    ("iceberg_export.py", "_sweep_orphan_avros", "f"): "orphan metadata",
+    ("iceberg_export.py", "_expire_cleanup",
+     "bk.join(md_dir, f'{commit_uuid}-m0.avro')"): "expired metadata",
+    ("iceberg_export.py", "_expire_cleanup", "bk.join(md_dir, base)"):
+        "expired metadata",
+    ("iceberg_export.py", "_expire_cleanup", "f"): "expired metadata",
+    ("reconciliation.py", "_delete", "path"): "the reconciler",
+}
+
+
+def test_one_delete_site_for_committed_data():
+    """Committed data files are deleted in one place: snapshots.retire
+    (through its ``_unlink``) is the only caller of
+    ``StorageBackend.remove_data_files``, every other single-file delete
+    in arc_spark/operators/ is a named non-data exception, and the
+    removed ``defer_input_deletion`` knob is gone from the code and the
+    docs."""
+    import ast
+    import pathlib
+
+    repo = pathlib.Path(__file__).resolve().parent.parent
+    pkg = repo / "arc_spark"
+    callers, direct = [], set()
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        for fn, call in _calls_by_function(path.read_text()):
+            name = getattr(call.func, "attr", None)
+            if name == "remove_data_files":
+                callers.append(f"{rel}:{fn}")
+            elif name in ("remove_file", "remove_file_if_exists") and \
+                    rel.startswith("operators/"):
+                direct.add((rel[len("operators/"):], fn,
+                            ast.unparse(call.args[0])))
+    assert callers == ["snapshots.py:_unlink"]
+    assert direct == set(_DIRECT_DELETES)
+    knob = "defer_input_" + "deletion"
+    for path in [*pkg.rglob("*.py"), repo / "arc.toml.example",
+                 repo / "README.md"]:
+        assert knob not in path.read_text(), path
