@@ -19,20 +19,21 @@ import os
 import re
 import time
 
+from pyspark.errors import AnalysisException, ParseException
 from pyspark.sql import DataFrame, SparkSession
 
 import threading
 
 from arc_spark import snapshots
 from arc_spark.catalog import MeasurementCatalog, validate_identifier
-from arc_spark.governance import (
-    Governor,
-    QueryRegistry,
-    RateLimitExceeded,
-    collect_rows,
-)
+from arc_spark.governance import Governor, QueryRegistry, collect_rows
 from arc_spark.plans.time_pruning import prune_sql
-from arc_spark.plans.validator import SqlValidationError, extract_tables, validate_read_only
+from arc_spark.plans.validator import (
+    SqlValidationError,
+    extract_tables,
+    plan_tree_string,
+    validate_read_only,
+)
 from arc_spark.serving import encode
 
 
@@ -134,38 +135,7 @@ def _decode_write(root: str, db: str, entries, decimal_config: dict,
     return out
 
 
-class NativeScanUnsupported(Exception):
-    """The native (pyarrow, no-Spark-job) serving path can't express this
-    request shape — callers fall back to the full Spark path. NEVER
-    surfaced to a client: it signals routing, not an error."""
-
-
-# pure-time-range `where` grammar: `time <op> ts` atoms joined by AND,
-# each optionally parenthesized, or a single `time BETWEEN ts AND ts`.
-# ts is an ISO-8601 single-quoted literal (optionally TIMESTAMP-prefixed).
-# Anything else — other columns, OR, functions, bare numbers — returns
-# None and the Spark path keeps full SQL semantics (same stance as the
-# native-COUNT shape check: exact-or-fall-through, never approximately).
-_TR_TS = r"(?:TIMESTAMP\s+)?'([^']*)'"
-_TR_ATOM_RE = re.compile(rf"(?is)^time\s*(>=|<=|>|<)\s*{_TR_TS}$")
-_TR_BETWEEN_RE = re.compile(
-    rf"(?is)^time\s+BETWEEN\s+{_TR_TS}\s+AND\s+{_TR_TS}$")
-_TR_AND_SPLIT = re.compile(r"(?i)\s+AND\s+")
-
-
-def _strip_outer_parens(s: str) -> str:
-    s = s.strip()
-    while s.startswith("(") and s.endswith(")"):
-        depth = 0
-        for i, ch in enumerate(s):
-            depth += (ch == "(") - (ch == ")")
-            if depth == 0 and i < len(s) - 1:
-                return s  # outer parens don't match each other
-        s = s[1:-1].strip()
-    return s
-
-
-# literal shapes BOTH this parser and Spark's string→timestamp cast
+# literal shapes BOTH the plan grammar below and Spark's string→timestamp cast
 # accept: dashed date, optional time, optional offset. Python 3.11's
 # fromisoformat alone is WIDER than Spark (compact '20240115', week
 # dates '2024-W03-1') — serving those natively while Spark casts them
@@ -222,35 +192,6 @@ def _combine_time_atoms(atoms: list[tuple[str, int]]):
     return TimeRange(
         lo_us=lo[0] if lo else None, lo_incl=lo[1] if lo else True,
         hi_us=hi[0] if hi else None, hi_incl=hi[1] if hi else True)
-
-
-def parse_time_range(where: str):
-    """:class:`arc_spark.catalog.TimeRange` when `where` is a pure
-    time-range predicate, else None."""
-    from arc_spark.catalog import TimeRange
-
-    s = _strip_outer_parens(where)
-    m = _TR_BETWEEN_RE.match(s)
-    if m:
-        lo, hi = _parse_ts_literal(m.group(1)), _parse_ts_literal(m.group(2))
-        if lo is None or hi is None:
-            return None
-        return TimeRange(lo_us=lo, lo_incl=True, hi_us=hi, hi_incl=True)
-    if re.search(r"(?i)\bBETWEEN\b", s):
-        return None  # BETWEEN inside a conjunction would mis-split on AND
-    parts = _TR_AND_SPLIT.split(s)
-    if not parts:
-        return None
-    atoms: list[tuple[str, int]] = []
-    for part in parts:
-        m = _TR_ATOM_RE.match(_strip_outer_parens(part))
-        if not m:
-            return None
-        us = _parse_ts_literal(m.group(2))
-        if us is None:
-            return None
-        atoms.append((m.group(1), us))
-    return _combine_time_atoms(atoms)
 
 
 # parsed-plan Filter-condition grammar (the SQL serving fast path):
@@ -521,16 +462,20 @@ class QueryService:
 
         Scoped to ``db`` (x-arc-database): a one-part name that is a
         measurement of ``db`` resolves to it straight from storage — no
-        view needed; any other one-part name reads the catalog view of
-        that name, if any; multi-part refs resolve to None (the Spark
+        view needed; any other one-part name resolves only to a catalog
+        view of that name that reads a measurement of ``db``, never to
+        another database's; multi-part refs resolve to None (the Spark
         route rejects them). Unscoped: a one-part name resolves only
         through the catalog view of that name, and ``x.y`` to
         measurement ``y`` of database ``x`` (or to the view ``y`` when
         it reads a measurement of ``x``)."""
         if len(ref) == 1:
-            if db is not None and ref[0] in self.catalog.measurements(db):
+            if db is None:
+                return self.catalog.view_binding(ref[0])
+            if ref[0] in self.catalog.measurements(db):
                 return (db, ref[0])
-            return self.catalog.view_binding(ref[0])
+            key = self.catalog.view_binding(ref[0])
+            return key if key is not None and key[0] == db else None
         if len(ref) == 2 and db is None:
             if ref[1] in self.catalog.measurements(ref[0]):
                 return (ref[0], ref[1])
@@ -544,9 +489,11 @@ class QueryService:
         ``db``, or a catalog view name — at its measurement's latest
         committed snapshot (``catalog.register`` rebuilds the view only
         when that changed). A request scoped to ``db`` (reference
-        x-arc-database) may not name ``db.table``. Caller holds
-        ``_plan_lock``, so no concurrent request observes a binding, and
-        none lands inside ``prune_sql``'s view override window."""
+        x-arc-database) may not name ``db.table``, nor a one-part name
+        that does not resolve inside ``db`` — a live view of that name
+        may read another database. Caller holds ``_plan_lock``, so no
+        concurrent request observes a binding, and none lands inside
+        ``prune_sql``'s view override window."""
         for ref in extract_tables(self.spark, sql):
             if len(ref) >= 2:
                 if db is not None:
@@ -557,6 +504,10 @@ class QueryService:
             key = self._resolve_ref(ref, db)
             if key is not None:
                 self.catalog.register(*key, view=ref[0])
+            elif db is not None:
+                raise SqlValidationError(
+                    f"[TABLE_OR_VIEW_NOT_FOUND] The table or view "
+                    f"`{ref[0]}` cannot be found in database {db!r}.")
 
     def plan(self, sql: str, db: str | None = None) -> DataFrame:
         """The Spark DataFrame for ``sql`` over fresh views: bind
@@ -564,22 +515,25 @@ class QueryService:
         A2: WHERE time ranges become year/month/day/hour partition
         predicates on each measurement scan), both under ``_plan_lock``
         — the pruner's temporary view overrides must not be observable
-        by a concurrent request."""
+        by a concurrent request.
+
+        SQL Spark's analyzer rejects (an unknown column or table, a
+        negative LIMIT, a missing GROUP BY, a view name it cannot bind)
+        raises :class:`SqlValidationError` with Spark's
+        ``[ERROR_CLASS]`` message: a client error, which the circuit
+        breaker does not count. ``PATH_NOT_FOUND`` (committed files
+        gone) stays an engine fault."""
         with self._plan_lock:
-            self._bind(sql, db)
-            return prune_sql(self.spark, sql, self.catalog)
+            try:
+                self._bind(sql, db)
+                return prune_sql(self.spark, sql, self.catalog)
+            except AnalysisException as e:
+                if e.getCondition() == "PATH_NOT_FOUND":
+                    raise
+                raise SqlValidationError(str(e)) from None
 
     _IDENT_RE = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
 
-    @staticmethod
-    def _measurement_sql(measurement: str, where: str | None) -> str:
-        """The single-measurement routes' read as SQL scoped to their db:
-        RBAC resolves its one-part ref to the pair the route serves,
-        exactly as for the same query under x-arc-database."""
-        return f"SELECT * FROM {measurement}" + (
-            f" WHERE {where}" if where else "")
-
-    @snapshots.reading()
     def query_measurement(
         self,
         db: str,
@@ -588,125 +542,79 @@ class QueryService:
         order_by: str | None = None,
         limit: int = 1000,
         token: str = "",
-        _admitted: bool = False,
         fmt: str = "rows",
+        snapshot: int | None = None,
     ):
-        """GET /api/v1/query/:measurement shape (reference A13,
-        query.go:3923-4130): a validated filter+order+limit over one
-        measurement. `where` is validated through the read-only plan check
-        (spliced into a SELECT and parsed — a second statement or DML fails
-        validation) but *executed* as a parsed boolean expression on the
-        DataFrame, with ORDER BY / LIMIT applied as plan operations — so a
-        `where` ending in a comment token (`--`) cannot comment out the
-        endpoint row limit. `order_by` columns must be bare identifiers,
-        optionally suffixed ASC/DESC.
+        """GET /api/v1/query/:measurement (reference A13,
+        query.go:3923-4130): ``SELECT * FROM `<measurement>` [WHERE
+        <where>] [ORDER BY <cols>] LIMIT <limit>`` run through
+        :meth:`execute`'s body scoped to ``db`` — admission, validation,
+        RBAC, route, row cap, history and encoding are the POST route's.
 
-        ``_admitted``: the server's native-scan fallback already charged
-        this request's rate-limit slot inside scan_measurement_arrow —
-        one HTTP request must consume exactly one slot.
+        ``where`` may fill only the Filter node of that statement: its
+        parsed plan's main chain must be exactly GlobalLimit/LocalLimit
+        ``<limit>``, the Sort when ``order_by`` is given, Project ``[*]``,
+        Filter and the relation, so a ``where`` that ends the clause
+        (``1=1 UNION ...``, ``1=1 ORDER BY x``) answers 400. A newline
+        follows it, which ends a trailing ``--`` comment; a comment that
+        runs on past it (a backslash before the newline continues a
+        ``--`` comment in Spark's lexer) swallows the LIMIT and fails the
+        check. The check reads the parse tree ``execute`` caches, so a
+        repeated request makes no JVM call for it. ``order_by`` columns are
+        bare identifiers, each optionally suffixed ASC/DESC. ``snapshot``
+        pins the read to a committed version (:meth:`execute`).
 
-        ``fmt``: the wire shape, as for :meth:`execute`."""
-        from pyspark.sql import functions as F
-
-        if not _admitted:
-            self.governor.admit(token)
-        # register + parse + prune under the SAME lock as execute()'s
-        # pruning: createOrReplaceTempView here must not interleave with a
-        # concurrent prune override/restore of the same view name
-        try:
-            with self._plan_lock:
-                view = self.catalog.register(db, measurement)
-                val_sql = (f"SELECT * FROM {view}"
-                           + (f" WHERE {where}" if where else ""))
-                validate_read_only(self.spark, val_sql)
-                self._check_rbac(token, self._measurement_sql(
-                    measurement, where), db=db)
-                # the filter goes through prune_sql, so a WHERE time range
-                # on this endpoint gets the derived partition predicate —
-                # the reference's flagship pruned read path (BASELINE's
-                # 4.7 ms time-bucket is this shape)
-                df = prune_sql(self.spark, val_sql, self.catalog)
-        except (SqlValidationError, AccessDeniedError, RateLimitExceeded):
-            raise
-        except Exception as e:
-            raise SqlValidationError(f"invalid where clause: {e}") from None
+        ``db`` is any single path segment ingest accepts
+        (:func:`validate_identifier`; an Influx v2 bucket such as
+        ``my-bucket``): unlike the POST scope it is never read from SQL
+        text, so the route skips :meth:`execute`'s identifier check."""
+        self.governor.admit(token)
+        validate_identifier(db, "database")
+        validate_identifier(measurement, "measurement")
+        if "`" in measurement:
+            raise SqlValidationError(f"invalid measurement {measurement!r}")
+        sql = f"SELECT * FROM `{measurement}`"
+        if where:
+            sql += f" WHERE {where}\n"
         if order_by:
-            sort_cols = []
+            cols = []
             for part in order_by.split(","):
                 tokens = part.strip().split()
                 col = tokens[0] if tokens else ""
                 direction = tokens[1].upper() if len(tokens) > 1 else "ASC"
-                if (
-                    len(tokens) > 2
-                    or direction not in ("ASC", "DESC")
-                    or not self._IDENT_RE.match(col)
-                ):
-                    raise SqlValidationError(f"invalid order_by part {part.strip()!r}")
-                sort_cols.append(F.col(col).desc() if direction == "DESC" else F.col(col).asc())
-            df = df.orderBy(*sort_cols)
-        df = self.governor.cap(token, df.limit(int(limit)))
-        return self.registry.run(
-            df,
-            sql=val_sql + f" LIMIT {int(limit)}",
-            token=token,
-            timeout_s=self.governor.timeout_s(token),
-            collect=_spark_collect(fmt),
-        )
+                if (len(tokens) > 2 or direction not in ("ASC", "DESC")
+                        or not self._IDENT_RE.match(col)):
+                    raise SqlValidationError(
+                        f"invalid order_by part {part.strip()!r}")
+                cols.append(f"`{col}` {direction}")
+            sql += " ORDER BY " + ", ".join(cols)
+        sql += f" LIMIT {int(limit)}"
+        if where:
+            want = [f"'GlobalLimit {int(limit)}", f"'LocalLimit {int(limit)}",
+                    *(["'Sort "] if order_by else []), "'Project [*]",
+                    "'Filter ", "'UnresolvedRelation "]
+            spine = self._plan_spine(sql)
+            # a node ending in a space is matched by its prefix
+            if len(spine) != len(want) or not all(
+                    s == w or (w.endswith(" ") and s.startswith(w))
+                    for s, w in zip(spine, want)):
+                raise SqlValidationError(f"invalid where clause {where!r}")
+        return self._execute(sql, token, fmt, db, snapshot)
 
-    @snapshots.reading()
-    def scan_measurement_arrow(self, db: str, measurement: str,
-                               limit: int = 1000, token: str = "",
-                               snapshot: int | None = None,
-                               where: str | None = None):
-        """Native fast path for the TRIVIAL and TIME-RANGE A13 shapes —
-        no order_by; `where`, when present, must be a pure time-range
-        predicate (``time >=/>/<=/</BETWEEN`` literals joined by AND):
-        the committed file list reads through pyarrow.dataset
-        (multi-threaded C++ scan, no Spark job, no JVM→Python collect)
-        into the same Arrow memory the wire encoders consume (~10× the
-        DataFrame path at serving sizes). A time-range where prunes the
-        file list by hive prefix driver-side, then scans with the exact
-        row predicate (reference "Time Range (7d) LIMIT 10K" = 15 ms;
-        pruner parity with internal/pruning/partition_pruner.go:448-676).
-        Governance (rate admit + row cap) and RBAC apply exactly as on
-        the Spark path; any unsupported shape raises
-        :class:`NativeScanUnsupported` so the caller falls back to
-        :meth:`query_measurement` with full SQL semantics."""
-        tr = None
-        if where is not None:
-            # parse BEFORE admitting: an unsupported shape must not
-            # consume a rate-limit slot, or the server's Spark fallback
-            # double-charges the token (429s at half its configured QPS
-            # on the fallback shape — r8 review finding)
-            tr = parse_time_range(where)
-            if tr is None:
-                raise NativeScanUnsupported(
-                    f"not a pure time-range predicate: {where!r}")
-        self.governor.admit(token)
-        validate_identifier(db, "database")
-        validate_identifier(measurement, "measurement")
-        rbac_sql = self._measurement_sql(measurement, where)
-        self._check_rbac(token, rbac_sql, db=db)
-        cap = self.governor.row_cap(token)
-        eff = int(limit) if cap is None else min(int(limit), cap)
+    def _plan_spine(self, sql: str) -> list[str]:
+        """The nodes of ``sql``'s parsed plan on the chain from the root
+        through each node's last child, top down: an earlier child and a
+        subquery plan print with a ``:`` in their tree prefix."""
         try:
-            table = self.catalog.scan_arrow(db, measurement, limit=eff,
-                                            snapshot=snapshot,
-                                            time_range=tr)
-        except ValueError as e:
-            if tr is not None:
-                # no time column / non-timestamp type / lossy unit —
-                # the Spark path owns these shapes (and surfaces the
-                # proper analysis error when the column is missing)
-                raise NativeScanUnsupported(str(e)) from None
-            # unknown/pruned snapshot version, multi-tier pin → client
-            # error, not an engine fault (the breaker must not trip)
-            raise SqlValidationError(str(e)) from None
-        self.registry.record_instant(
-            f"{rbac_sql} LIMIT {eff}"
-            + (f" VERSION AS OF {snapshot}" if snapshot is not None else ""),
-            token=token, rows=table.num_rows, route="native_scan")
-        return table
+            tree = plan_tree_string(self.spark, sql)
+        except ParseException as e:
+            raise SqlValidationError(f"invalid where clause: {e}") from None
+        spine = []
+        for line in tree.splitlines():
+            node = line.lstrip(" :+-")
+            if node and ":" not in line[:len(line) - len(node)]:
+                spine.append(node)
+        return spine
 
     # SHOW TABLES is an alias for SHOW MEASUREMENTS; the db in FROM may be
     # quoted (reference query.go:50-58 showTablesPattern)
@@ -720,22 +628,15 @@ class QueryService:
     def _resolve_relation(self, rel_text: str,
                           db: str | None) -> tuple[str, str] | None:
         """A plan relation token list → (db, measurement) through
-        :meth:`_resolve_ref`; None when unresolvable, or when a scoped
-        request's ref reads another database (a qualified ref — the
-        Spark path must surface the SAME _bind error — or a view
-        of another database, which only the Spark route serves)."""
-        key = self._resolve_ref([p.strip() for p in rel_text.split(",")],
-                                db)
-        if key is None or (db is not None and key[0] != db):
-            return None
-        return key
+        :meth:`_resolve_ref`; None when unresolvable (the Spark route
+        then surfaces :meth:`_bind`'s error)."""
+        return self._resolve_ref([p.strip() for p in rel_text.split(",")],
+                                 db)
 
     def _plan_lines(self, sql: str) -> list[str] | None:
         """Parsed-plan treeString lines (through the process-wide parse
         LRU — validation/RBAC/shape-detect share one parse per distinct
         SQL), or None on a parse failure."""
-        from arc_spark.plans.validator import plan_tree_string
-
         try:
             return [ln for ln in plan_tree_string(self.spark, sql)
                     .splitlines() if ln.strip()]
@@ -1021,9 +922,8 @@ class QueryService:
         marker for native scans; :func:`serving.encode` does the work)."""
         return encode(table, fmt)
 
-    @snapshots.reading()
     def execute(self, sql: str, token: str = "", fmt: str = "rows",
-                db: str | None = None):
+                db: str | None = None, snapshot: int | None = None):
         """Run one query request end-to-end.
 
         fmt: 'rows' (list of Row), 'json' (list of typed-JSON chunks),
@@ -1041,10 +941,23 @@ class QueryService:
         RBAC: ``native_count`` (footer COUNT/MIN/MAX), ``native_scan``
         (SELECT * [time range] LIMIT), ``native_agg`` (GROUP BY over a
         time range), else ``spark``. The history entry records which.
+
+        ``snapshot`` pins the read to that committed snapshot version
+        (time travel): only the ``native_scan`` shape with no time range
+        serves a pinned read; any other shape, or a version that is not
+        retained, raises :class:`SqlValidationError`.
         """
         self.governor.admit(token)
         if db is not None and not self._IDENT_RE.match(db):
             raise SqlValidationError(f"invalid database name {db!r}")
+        return self._execute(sql, token, fmt, db, snapshot)
+
+    @snapshots.reading()
+    def _execute(self, sql: str, token: str, fmt: str, db: str | None,
+                 snapshot: int | None):
+        """:meth:`execute` after admission and the ``db`` check: the one
+        body both query routes run, holding ``reading()`` from bind
+        through encode."""
         # SHOW intercept — storage listing, no SQL engine (reference A12)
         stripped = sql.strip().rstrip(";").upper()
         if stripped == "SHOW DATABASES":
@@ -1062,7 +975,8 @@ class QueryService:
         # check is on the PARSED plan, so any filter/group/expression
         # falls through to the engine.
         plan_lines = self._plan_lines(sql)  # one parse, every detector
-        nc = self._native_count(sql, db, lines=plan_lines)
+        nc = (self._native_count(sql, db, lines=plan_lines)
+              if snapshot is None else None)
         if nc is not None:
             self.registry.record_instant(sql, token=token, rows=1,
                                          route="native_count")
@@ -1073,19 +987,28 @@ class QueryService:
         # pyarrow scan — no Spark job. Unsupported measurement shapes
         # (no time column, lossy type) fall through to the engine.
         nt = self._native_timerange(sql, db, lines=plan_lines)
+        if snapshot is not None and (nt is None or nt[1] is not None):
+            raise SqlValidationError(
+                "a snapshot read serves SELECT * ... LIMIT n only: no "
+                "where or order_by")
         if nt is not None:
             key, tr, n = nt
             cap = self.governor.row_cap(token)
             eff = n if cap is None else min(n, cap)
             try:
                 table = self.catalog.scan_arrow(*key, limit=eff,
-                                                time_range=tr)
-            except ValueError:
+                                                time_range=tr,
+                                                snapshot=snapshot)
+            except ValueError as e:
+                if snapshot is not None:
+                    # unknown/pruned version, multi-tier pin
+                    raise SqlValidationError(str(e)) from None
                 table = None  # → Spark path keeps full semantics
             if table is not None:
-                self.registry.record_instant(sql, token=token,
-                                             rows=table.num_rows,
-                                             route="native_scan")
+                self.registry.record_instant(
+                    sql if snapshot is None
+                    else f"{sql} VERSION AS OF {snapshot}",
+                    token=token, rows=table.num_rows, route="native_scan")
                 return self._serve_native_table(table, fmt=fmt)
         # native GROUP BY (reference "time-bucket 1h/7d 4.7 ms"): keys
         # and aggregates over one measurement's time range run as one

@@ -21,8 +21,9 @@ Two surfaces:
   query's OPTIMIZED plan for per-scan time bounds (pushdown has already
   placed each filter at its scan, so OR/NOT/join attribution is
   structural), temporarily re-register affected measurement views with the
-  derived predicate, re-parse, restore. Used by ``QueryService.execute``
-  and ``query_measurement``.
+  derived predicate, re-parse, restore. Used by ``QueryService.plan``,
+  the Spark route of ``QueryService.execute`` (which every SQL surface,
+  the GET measurement route included, runs through).
 """
 
 from __future__ import annotations

@@ -46,7 +46,6 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Callable, NamedTuple
 from urllib.parse import parse_qs, urlparse
 
-from arc_spark import api
 from arc_spark.api import IngestService, AccessDeniedError, QueryService
 from arc_spark.audit import AuditLogger
 from arc_spark.auth import AuthStore
@@ -635,8 +634,10 @@ def _post_query(h, fmt=None):
 
 def _get_measurement(h, measurement):
     """GET /api/v1/query/<measurement>?db=&where=&order_by=&limit=&format=
-    &snapshot= (reference query.go:3923, A13); ``snapshot=N`` pins the
-    trivial read to a committed snapshot version (time travel)."""
+    &snapshot= (reference query.go:3923, A13): one SELECT through
+    ``QueryService.execute`` (:meth:`QueryService.query_measurement`);
+    ``snapshot=N`` pins the read to a committed snapshot version (time
+    travel)."""
     q = h.args
     fmt = q.get("format", "json")
     if fmt not in _FMT_CONTENT_TYPES:
@@ -644,46 +645,13 @@ def _get_measurement(h, measurement):
     snap = q.get("snapshot")
     if snap is not None and not snap.lstrip("-").isdigit():
         raise HttpError(400, "snapshot must be an integer version")
-    where, order_by = q.get("where"), q.get("order_by")
-    if snap is not None and (where or order_by):
-        # pinned reads support the trivial shape only
-        raise HttpError(400, "snapshot reads do not support where/order_by")
-    db, limit = q.get("db", "default"), _int_arg(q, "limit", 1000)
-    # native-eligible shapes: trivial (no where), or a pure time-range
-    # where — both with no order_by. The time-range route is the
-    # reference's "Time Range (7d) LIMIT 10K" serving shape: snapshot file
-    # list pruned by hive prefix + exact pyarrow row filter, no Spark job.
-    # Any shape the native path can't express falls through (in-band, not
-    # via exception-to-HTTP) to the Spark path below.
-    native_eligible = not order_by and (
-        not where or (not snap and api.parse_time_range(where) is not None))
-    table = None
-    fell_back = False
-    if native_eligible:
-        def _fast():
-            try:
-                return h.arc.query.scan_measurement_arrow(
-                    db, measurement, limit=limit, token=h.token,
-                    snapshot=int(snap) if snap else None, where=where)
-            except api.NativeScanUnsupported:
-                return None  # → Spark path keeps semantics
-
-        table = h.run(_fast)
-        # a post-admit fallback (no time column / lossy type) already
-        # consumed the rate-limit slot — the Spark path must not charge
-        # it again
-        fell_back = table is None
-    # this route's JSON is {"rows": [row dicts]}, built from the same Row
-    # shape on both paths
+    limit = _int_arg(q, "limit", 1000)
+    # this route's JSON is {"rows": [row dicts]}, built from Rows
     wire = "rows" if fmt == "json" else fmt
-    if table is not None:
-        from arc_spark.serving import encode
-
-        out = encode(table, wire)
-    else:
-        out = h.run(lambda: h.arc.query.query_measurement(
-            db, measurement, where=where, order_by=order_by, limit=limit,
-            token=h.token, _admitted=fell_back, fmt=wire))
+    out = h.run(lambda: h.arc.query.query_measurement(
+        q.get("db", "default"), measurement, where=q.get("where"),
+        order_by=q.get("order_by"), limit=limit, token=h.token, fmt=wire,
+        snapshot=None if snap is None else int(snap)))
     if fmt == "json":
         return h.json(200, {"rows": [r.asDict() for r in out]})
     h.reply(200, out, _FMT_CONTENT_TYPES[fmt])

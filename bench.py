@@ -314,10 +314,10 @@ def main() -> None:
     tr_svc = QueryService(spark, ev_hive_cat)
     TR_WHERE = ("time >= '2024-01-10 00:00:00' AND "
                 "time < '2024-01-17 00:00:00'")
-    tr_svc.scan_measurement_arrow("bench", "events", where=TR_WHERE,
-                                  limit=10_000)  # warm file index
-    count_svc.scan_measurement_arrow("bench", "events", where=TR_WHERE,
-                                     limit=10_000)
+    TR_SQL = f"SELECT * FROM events WHERE {TR_WHERE} LIMIT 10000"
+    tr_svc.execute(TR_SQL, fmt="arrow", db="bench")  # warm file index
+    count_svc.query_measurement("bench", "events", where=TR_WHERE,
+                                limit=10_000, fmt="arrow")
     rows_by: dict[str, int] = {}
     from arc_spark import cacheutil
 
@@ -413,11 +413,11 @@ def main() -> None:
                  "time >= '2024-01-10 00:00:00' AND "
                  "time < '2024-01-17 00:00:00' LIMIT 10000", fmt="arrow"))),
             ("serve_timerange",
-             lambda: len(to_arrow_ipc(tr_svc.scan_measurement_arrow(
-                 "bench", "events", where=TR_WHERE, limit=10_000)))),
-            ("serve_timerange_compact",
-             lambda: len(to_arrow_ipc(count_svc.scan_measurement_arrow(
-                 "bench", "events", where=TR_WHERE, limit=10_000)))),
+             lambda: len(tr_svc.execute(TR_SQL, fmt="arrow", db="bench"))),
+            ("serve_timerange_compact",  # the GET measurement route
+             lambda: len(count_svc.query_measurement(
+                 "bench", "events", where=TR_WHERE, limit=10_000,
+                 fmt="arrow"))),
             ("q80_dedup_stored_index", _q80_stored_thunk()),
         ]
     )

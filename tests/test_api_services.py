@@ -1245,7 +1245,7 @@ class TestRegistryInstantRecords:
         svc = QueryService(spark, cat)
         svc.register_measurement("metrics", "cpu", view="cpu")
         svc.execute("SELECT COUNT(*) FROM cpu", token="t1")
-        svc.scan_measurement_arrow("metrics", "cpu", limit=5, token="t1")
+        svc.query_measurement("metrics", "cpu", limit=5, token="t1")
         hist = svc.registry.history()
         sqls = [h.sql for h in hist]
         assert any("COUNT(*)" in s for s in sqls)

@@ -511,7 +511,8 @@ class TestHttpAuditBreaker:
         assert status == 200
         assert json.loads(body)["stats"].get("query.executed", 0) >= 1
 
-    def test_breaker_opens_on_engine_errors_not_user_errors(self, live_audited):
+    def test_breaker_opens_on_engine_errors_not_user_errors(
+            self, live_audited, tmp_path):
         port, admin, _ = live_audited
         # user error (validation, 400) twice: breaker must stay closed
         for _ in range(2):
@@ -521,11 +522,23 @@ class TestHttpAuditBreaker:
             assert e.value.code == 400
         status, body, _ = _req(port, "/api/v1/breaker", token=admin)
         assert json.loads(body)["state"] == "closed"
-        # engine errors (nonexistent table resolves past validation) trip it
+        # so is a table Spark's analyzer cannot find (400)
+        with pytest.raises(urllib.error.HTTPError) as e:
+            _req(port, "/api/v1/query", "POST", admin,
+                 json.dumps({"sql": "SELECT * FROM nope_missing"}).encode())
+        assert e.value.code == 400
+        status, body, _ = _req(port, "/api/v1/breaker", token=admin)
+        assert json.loads(body)["state"] == "closed"
+        # engine errors trip it: committed files deleted out of band fail
+        # the read
+        for f in (tmp_path / "data" / "metrics" / "cpu").rglob("*.parquet"):
+            f.unlink()
         for _ in range(2):
-            with pytest.raises(urllib.error.HTTPError):
+            with pytest.raises(urllib.error.HTTPError) as e:
                 _req(port, "/api/v1/query", "POST", admin,
-                     json.dumps({"sql": "SELECT * FROM nope_missing"}).encode())
+                     json.dumps({"sql": "SELECT * FROM cpu WHERE usage > 0"})
+                     .encode())
+            assert e.value.code == 500
         status, body, _ = _req(port, "/api/v1/breaker", token=admin)
         assert json.loads(body)["state"] == "open"
         with pytest.raises(urllib.error.HTTPError) as e:

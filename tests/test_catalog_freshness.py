@@ -146,8 +146,8 @@ def test_native_measurement_route_builds_no_view(spark, tmp_path,
     cat = MeasurementCatalog(spark, root)
     svc = QueryService(spark, cat)
     with spark_jobs.started() as jobs:
-        table = svc.scan_measurement_arrow("routedb", "cpu", limit=10)
-    assert table.num_rows == 3
+        rows = svc.query_measurement("routedb", "cpu", limit=10)
+    assert len(rows) == 3
     assert jobs == []
     assert cat._views == {}
     assert not spark.catalog.tableExists("routedb_cpu")

@@ -34,6 +34,34 @@ def meas(spark, tmp_path):
     return root
 
 
+def _served(svc, **kw) -> pa.Table:
+    """GET /api/v1/query/:m's answer in Arrow, as a table."""
+    kw.setdefault("db", "metrics")
+    kw.setdefault("measurement", "cpu")
+    return pa.ipc.open_stream(
+        svc.query_measurement(fmt="arrow", **kw)).read_all()
+
+
+def _route(svc, fn):
+    """(fn(), the route the one query ``fn`` ran took)."""
+    before = svc.registry.route_totals()
+    out = fn()
+    moved = [r for r, n in svc.registry.route_totals().items()
+             if n != before[r]]
+    assert len(moved) == 1, moved
+    return out, moved[0]
+
+
+def _forced_spark(svc, monkeypatch, **kw) -> pa.Table:
+    """The same GET with the native_scan route switched off."""
+    with monkeypatch.context() as m:
+        m.setattr(QueryService, "_native_timerange",
+                  lambda *a, **k: None)
+        table, route = _route(svc, lambda: _served(svc, **kw))
+    assert route == "spark"
+    return table
+
+
 def _rowset(rows):
     # tz-normalized: Spark collect yields naive session-local (UTC)
     # datetimes, the Arrow path tz-aware UTC — same instants
@@ -156,53 +184,95 @@ class TestServingFastPath:
         cat = MeasurementCatalog(spark, meas)
         gov = Governor(default_policy=TokenPolicy(max_rows=25))
         svc = QueryService(spark, cat, governor=gov)
-        t = svc.scan_measurement_arrow("metrics", "cpu", limit=1000)
+        t = _served(svc, limit=1000)
         assert t.num_rows == 25  # policy cap wins over requested limit
 
 
+def _time_range(svc, where: str):
+    """The TimeRange the native_scan route reads for ``where`` on the GET
+    route's SQL, or None when that route does not take it."""
+    nt = svc._native_timerange(
+        f"SELECT * FROM `cpu` WHERE {where}\n LIMIT 10", "metrics")
+    return None if nt is None else nt[1]
+
+
 class TestTimeRangeWhereParser:
-    """parse_time_range: exact-or-fall-through — anything not a pure
-    time-range conjunction returns None and keeps full Spark semantics."""
+    """The GET route's `where` through the plan grammar
+    (``_plan_cond_timerange``): exact-or-fall-through — a pure time-range
+    conjunction takes native_scan with the rows the Spark route returns,
+    anything else keeps full Spark semantics."""
 
-    def test_accepted_shapes(self):
-        from arc_spark.api import parse_time_range
+    ACCEPTED = [
+        "time >= '2024-01-15 01:00:00' AND time < '2024-01-15 03:00:00'",
+        "time BETWEEN '2024-01-15' AND '2024-01-16'",
+        # TIMESTAMP prefix, parens, mixed case, one-sided, tz offset
+        "(TIME > timestamp '2024-01-15T01:30:00')",
+        "time <= '2024-01-15'",
+        "time >= '2024-01-15 02:00:00+02:00'",
+        "time >= '2024-01-10' AND time >= '2024-01-15' "
+        "AND time < '2024-01-20' AND time <= '2024-01-18'",
+        # the plan prints BETWEEN as one node, so it may sit in a
+        # conjunction (the string grammar could not split it)
+        "time >= '2024-01-15' AND time BETWEEN '2024-01-01' AND "
+        "'2024-02-01'",
+    ]
+    REJECTED = [
+        "host = 'h1'",
+        "time >= '2024-01-15' AND host='h1'",
+        "time >= '2024-01-15' OR time < '2020-01-01'",
+        "time >= '2024-1-5'",                      # non-ISO padding
+        "time = '2024-01-15'",                     # equality ≠ range
+        "lower(time) >= '2024-01-15'",
+    ]
+    # a 400 before any route: not one expression, or a comparison
+    # Spark's analyzer refuses
+    REFUSED = [
+        "(time >= '2024-01-15'",                   # unbalanced paren
+        "time >= 1700000000",                      # bare numeric
+    ]
 
-        tr = parse_time_range(
-            "time >= '2024-01-15 01:00:00' AND time < '2024-01-15 03:00:00'")
+    def test_accepted_shapes(self, spark, meas):
+        svc = QueryService(spark, MeasurementCatalog(spark, meas))
+        tr = _time_range(svc, self.ACCEPTED[0])
         assert (tr.lo_us, tr.lo_incl) == (1705280400000000, True)
         assert (tr.hi_us, tr.hi_incl) == (1705287600000000, False)
-        tr = parse_time_range("time BETWEEN '2024-01-15' AND '2024-01-16'")
+        tr = _time_range(svc, self.ACCEPTED[1])
         assert tr.lo_incl and tr.hi_incl
         assert tr.hi_us - tr.lo_us == 86_400_000_000
-        # TIMESTAMP prefix, parens, mixed case, one-sided, tz offset
-        assert parse_time_range(
-            "(TIME > timestamp '2024-01-15T01:30:00')").lo_incl is False
-        assert parse_time_range("time <= '2024-01-15'").lo_us is None
-        tz = parse_time_range("time >= '2024-01-15 02:00:00+02:00'")
+        assert _time_range(svc, self.ACCEPTED[2]).lo_incl is False
+        assert _time_range(svc, self.ACCEPTED[3]).lo_us is None
+        tz = _time_range(svc, self.ACCEPTED[4])
         assert tz.lo_us == 1705276800000000  # converts to UTC midnight
         # stricter bound wins in a conjunction
-        tr = parse_time_range(
-            "time >= '2024-01-10' AND time >= '2024-01-15' "
-            "AND time < '2024-01-20' AND time <= '2024-01-18'")
+        tr = _time_range(svc, self.ACCEPTED[5])
         assert tr.lo_us == 1705276800000000
         assert tr.hi_us == 1705536000000000 and tr.hi_incl
 
-    def test_rejected_shapes(self):
-        from arc_spark.api import parse_time_range
+    def test_accepted_shapes_serve_natively_as_spark_does(
+            self, spark, meas, monkeypatch):
+        svc = QueryService(spark, MeasurementCatalog(spark, meas))
+        for w in self.ACCEPTED:
+            native, route = _route(
+                svc, lambda: _served(svc, where=w, limit=10**6))
+            assert route == "native_scan", w
+            forced = _forced_spark(svc, monkeypatch, where=w, limit=10**6)
+            assert native.schema == forced.schema, w
+            assert native.num_rows, w
+            assert sorted(tuple(r.values()) for r in native.to_pylist()) \
+                == sorted(tuple(r.values()) for r in forced.to_pylist()), w
 
-        for w in [
-            "host = 'h1'",
-            "time >= '2024-01-15' AND host='h1'",
-            "time >= '2024-01-15' OR time < '2020-01-01'",
-            "time >= 1700000000",                      # bare numeric
-            "time >= '2024-1-5'",                      # non-ISO padding
-            "time >= '2024-01-15' AND time BETWEEN '2024-01-01' AND "
-            "'2024-02-01'",                            # BETWEEN in conj
-            "time = '2024-01-15'",                     # equality ≠ range
-            "(time >= '2024-01-15'",                   # unbalanced paren
-            "lower(time) >= '2024-01-15'",
-        ]:
-            assert parse_time_range(w) is None, w
+    def test_rejected_shapes(self, spark, meas):
+        from arc_spark.plans.validator import SqlValidationError
+
+        svc = QueryService(spark, MeasurementCatalog(spark, meas))
+        for w in self.REJECTED:
+            assert _time_range(svc, w) is None, w
+            _, route = _route(svc, lambda: svc.query_measurement(
+                "metrics", "cpu", where=w, limit=10))
+            assert route == "spark", w
+        for w in self.REFUSED:
+            with pytest.raises(SqlValidationError):
+                svc.query_measurement("metrics", "cpu", where=w, limit=10)
 
 
 class TestTimeRangeNativeScan:
@@ -218,28 +288,30 @@ class TestTimeRangeNativeScan:
         "time <= '2024-01-15 00:00:00.000123'",  # sub-second boundary
     ]
 
-    def test_matches_spark_path_exactly(self, spark, meas):
+    def test_matches_spark_path_exactly(self, spark, meas, monkeypatch):
         cat = MeasurementCatalog(spark, meas)
         svc = QueryService(spark, cat)
         for where in self.WHERES:
-            t = svc.scan_measurement_arrow("metrics", "cpu",
-                                           where=where, limit=10**6)
+            t = _served(svc, where=where, limit=10**6)
             native = {(r["host"], r["value"],
                        r["time"].replace(tzinfo=None))
                       for r in t.to_pylist()}
-            sparked = {(r["host"], r["value"], r["time"]) for r in
-                       svc.query_measurement("metrics", "cpu",
-                                             where=where, limit=10**6)}
+            with monkeypatch.context() as m:
+                m.setattr(QueryService, "_native_timerange",
+                          lambda *a, **k: None)
+                rows = svc.query_measurement("metrics", "cpu",
+                                             where=where, limit=10**6)
+            sparked = {(r["host"], r["value"], r["time"]) for r in rows}
             assert native == sparked and native, where
 
     def test_prunes_files_by_hive_prefix(self, spark, meas):
         from arc_spark import snapshots
-        from arc_spark.api import parse_time_range
         from arc_spark.catalog import _path_time_window
 
         files = snapshots.data_files(f"{meas}/metrics/cpu")
         assert len(files) == 5  # one per hour bucket
-        tr = parse_time_range(
+        tr = _time_range(
+            QueryService(spark, MeasurementCatalog(spark, meas)),
             "time >= '2024-01-15 01:00:00' AND time < '2024-01-15 03:00:00'")
         kept = [f for f in files if tr.may_contain(_path_time_window(f))]
         # hours 1, 2 + the conservative hi-boundary file (hour 3); the
@@ -257,16 +329,17 @@ class TestTimeRangeNativeScan:
         assert _path_time_window(
             "/x/year=99999999999/month=1/f.parquet") is None
 
-    def test_literal_forms_match_spark_cast_exactly(self):
+    def test_literal_forms_match_spark_cast_exactly(self, spark, meas):
         """r8 review: Python's fromisoformat is WIDER than Spark's
         string→timestamp cast — compact dates and ISO week dates must be
         REJECTED (Spark casts them to NULL → zero rows; serving rows
         natively for the same query would diverge). And epoch math must
         be integer — float64 seconds lose the last µs past 2^31 s."""
-        from arc_spark.api import _parse_ts_literal, parse_time_range
+        from arc_spark.api import _parse_ts_literal
 
+        svc = QueryService(spark, MeasurementCatalog(spark, meas))
         for lit in ("20240115", "2024-W03-1", "2024015", "2024-01-15X"):
-            assert parse_time_range(f"time >= '{lit}'") is None, lit
+            assert _time_range(svc, f"time >= '{lit}'") is None, lit
         # µs-exact past 2038 (float64 epoch-seconds would truncate)
         assert _parse_ts_literal("2038-02-27T21:18:46.981929") \
             == 2150918326981929
@@ -287,9 +360,7 @@ class TestTimeRangeNativeScan:
         write_measurement(df, root, "metrics", "cpu")
         cat = MeasurementCatalog(spark, root)
         svc = QueryService(spark, cat)
-        t = svc.scan_measurement_arrow(
-            "metrics", "cpu",
-            where="time >= '2024-01-15 00:00:00'", limit=1000)
+        t = _served(svc, where="time >= '2024-01-15 00:00:00'", limit=1000)
         assert t.num_rows == 100  # a poisoned [1999,2000) window drops all
 
     def test_all_pruned_empty_result_keeps_real_schema(self, spark, meas):
@@ -298,8 +369,7 @@ class TestTimeRangeNativeScan:
         wire clients concat pages; a stub time-only schema breaks them."""
         cat = MeasurementCatalog(spark, meas)
         svc = QueryService(spark, cat)
-        t = svc.scan_measurement_arrow(
-            "metrics", "cpu", where="time >= '2030-01-01'", limit=1000)
+        t = _served(svc, where="time >= '2030-01-01'", limit=1000)
         assert t.num_rows == 0
         assert {"time", "host", "value"} <= set(t.schema.names)
 
@@ -354,15 +424,6 @@ class TestTimeRangeNativeScan:
             assert codes == [200, 200, 200, 429]
         finally:
             server.stop()
-
-    def test_unsupported_shapes_raise_for_fallback(self, spark, meas):
-        from arc_spark.api import NativeScanUnsupported
-
-        cat = MeasurementCatalog(spark, meas)
-        svc = QueryService(spark, cat)
-        with pytest.raises(NativeScanUnsupported):
-            svc.scan_measurement_arrow("metrics", "cpu",
-                                       where="host = 'h1'", limit=10)
 
     def test_http_route_serves_timerange_natively_and_falls_back(
             self, spark, meas):
@@ -428,8 +489,7 @@ class TestDecodedFileCache:
     def _scan(self, spark, meas, **kw):
         cat = MeasurementCatalog(spark, meas)
         svc = QueryService(spark, cat)
-        return cat, svc.scan_measurement_arrow(
-            "metrics", "cpu", where=self.WHERE, limit=10**6, **kw)
+        return cat, _served(svc, where=self.WHERE, limit=10**6, **kw)
 
     def test_cached_path_matches_dataset_path(self, spark, meas,
                                               monkeypatch):
@@ -441,7 +501,8 @@ class TestDecodedFileCache:
         monkeypatch.setattr(
             C, "_scan_cache", C._DecodedFileCache(max_bytes=0))
         _, cold = self._scan(spark, meas)
-        key = lambda t: sorted(map(tuple, t.to_pylist()))  # noqa: E731
+        key = lambda t: sorted(  # noqa: E731
+            tuple(r.values()) for r in t.to_pylist())
         assert warm1.schema == cold.schema == warm2.schema
         assert key(warm1) == key(cold) == key(warm2)
 
@@ -506,16 +567,15 @@ class TestDecodedFileCache:
         cat = MeasurementCatalog(spark, meas)
         svc = QueryService(spark, cat)
         cat.register("metrics", "cpu", view="cpu_conc")
-        want = sorted(map(tuple, svc.scan_measurement_arrow(
-            "metrics", "cpu", where=self.WHERE, limit=10**6).to_pylist()))
+        want = sorted(tuple(r.values()) for r in _served(
+            svc, where=self.WHERE, limit=10**6).to_pylist())
         errs: list = []
 
         def _serve():
             try:
                 for _ in range(20):
-                    got = sorted(map(tuple, svc.scan_measurement_arrow(
-                        "metrics", "cpu", where=self.WHERE,
-                        limit=10**6).to_pylist()))
+                    got = sorted(tuple(r.values()) for r in _served(
+                        svc, where=self.WHERE, limit=10**6).to_pylist())
                     assert got == want
             except Exception as e:  # surfaced below
                 errs.append(e)
@@ -586,12 +646,10 @@ class TestCoversFilterSkip:
             "time > '2024-01-15 01:00:00' AND time < '2024-01-15 02:00:00'",
         ]
         for where in wheres:
-            fast = svc.scan_measurement_arrow(
-                "metrics", "cpu", where=where, limit=10**6)
+            fast = _served(svc, where=where, limit=10**6)
             with monkeypatch.context() as m:
                 m.setattr(C.TimeRange, "covers", lambda self, w: False)
-                forced = svc.scan_measurement_arrow(
-                    "metrics", "cpu", where=where, limit=10**6)
+                forced = _served(svc, where=where, limit=10**6)
             assert fast.sort_by("time").equals(
                 forced.sort_by("time")), where
 
@@ -632,8 +690,7 @@ class TestCoversFilterSkip:
                  "AND time < '2024-01-15 02:00:00'")  # hour=1 interior
 
         def n_rows():
-            return svc.scan_measurement_arrow(
-                "metrics", "cpu", where=where, limit=10**6).num_rows
+            return _served(svc, where=where, limit=10**6).num_rows
 
         # default fast path: the stray row rides the covers() skip
         monkeypatch.setattr(C, "_VERIFY_INTERIOR", False)

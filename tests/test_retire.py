@@ -212,8 +212,8 @@ def test_native_scan_outlives_a_compaction_mid_read(spark, tmp_path,
         return real_read(*a, **kw)
 
     monkeypatch.setattr(C, "_read_small_files_cached", swap_then_read)
-    table = svc.scan_measurement_arrow("m", "cpu", limit=1000)
-    assert swapped and table.num_rows == 40
+    rows = svc.query_measurement("m", "cpu", limit=1000)
+    assert swapped and len(rows) == 40
     gone = set(before) - set(snapshots.data_files(tree))
     assert len(gone) == 3 and not any(_on_disk(gone))
 

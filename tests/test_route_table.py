@@ -54,7 +54,7 @@ def _engine(*a, **kw):
 def _stub_query(root):
     return types.SimpleNamespace(
         registry=_Registry(), catalog=_Catalog(root), spark=None,
-        scan_measurement_arrow=_engine, query_measurement=_engine)
+        query_measurement=_engine)
 
 
 def _call(port, method, path, token=None, body=None):

@@ -282,8 +282,25 @@ def test_every_query_records_its_route(live):
         status, _, _ = _req(port, "/api/v1/query", "POST", admin,
                             json.dumps({"sql": sql}).encode())
         assert status == 200
+    # GET /api/v1/query/:m runs the same routes: no where and a pure
+    # time range natively, any other where or an order_by on Spark
+    gets = {
+        "": "native_scan",
+        "&where=time%20%3E%3D%20%272023-11-14%2022%3A14%3A00%27":
+            "native_scan",
+        "&where=usage%20%3E%200.6": "spark",
+        "&where=usage%20%3E%200.6&order_by=usage%20DESC": "spark",
+    }
+    get_routes = []
+    for args in gets:
+        status, _, _ = _req(port, "/api/v1/query/cpu?db=metrics" + args,
+                            token=admin)
+        assert status == 200
+        get_routes.append(svc.registry.history()[0].route)
+    assert get_routes == list(gets.values())
     _, body, _ = _req(port, "/api/v1/queries/history", token=admin)
     by_sql = {q["sql"]: q["route"] for q in json.loads(body)["queries"]}
     assert {r: by_sql[sql] for r, sql in queries.items()} == {
         r: r for r in queries}
-    assert routes_metric() == {r: 1.0 for r in queries}
+    assert routes_metric() == {"native_count": 1.0, "native_scan": 3.0,
+                               "native_agg": 1.0, "spark": 3.0}
